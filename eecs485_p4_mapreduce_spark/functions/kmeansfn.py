@@ -6,13 +6,19 @@ the IVF training/search queries in operators/linalg.py and the SemDeDup
 pruner in operators/semdedup.py — can be imported first without a
 decoration-time circular import (the lshfn.py convention).  See
 operators/linalg.py for the determinism rationale (decimal-exact
-component means, argmin ties on k) and the scale notes.
+component means, argmin ties on k) and the scale notes.  The trained
+centroids live in the derived-state store (functions/modelstore.py);
+there is no in-memory copy.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from eecs485_p4_mapreduce_spark.functions.modelstore import load_or_train
 
 D = 64          # embedding dim
 KM_K = 8        # clusters (the IVF nlist)
@@ -40,114 +46,55 @@ def km_assign(e: DataFrame, cdf: DataFrame) -> DataFrame:
     )
 
 
-# In-memory front of the trained-quantizer store: (applicationId,
-# cache_key, corpus mtime) -> centroid list.  Three queries (IVF
-# training, trained-IVF search, SemDeDup) train the IDENTICAL quantizer
-# over the same embeddings; the centroids are a K x D python list
-# (tiny, driver-side).  Behind it sits the PERSISTED model store
-# (functions/modelstore.py): the trained centroids are published as a
-# tiny parquet model under the warehouse, content-addressed by corpus
-# mtime, so a fresh application reads the model instead of re-running
-# the training jobs.  Deterministic training + exact double parquet
-# round-trip means cached vs stored vs fresh are bit-identical — every
-# consumer's oracle replays the same training.  Bounded LRU + mtime
-# keys replace the round-5 unbounded dict (memo.py rationale).
-from eecs485_p4_mapreduce_spark.functions.memo import LRU, mtime_token
-
-_CENTROID_CACHE = LRU()
-
-
-def clear_centroid_cache() -> None:
-    """Evict every cached trained quantizer (in-memory only; the
-    persisted model store is content-addressed and never stale)."""
-    _CENTROID_CACHE.clear()
-
-
-def loader_tag(prefix: str, cache_key: object) -> str:
-    """Model-store kind tag: the real loader maps to a stable name so
-    the store is shared across applications; a monkeypatched loader
-    (different qualname) gets its own location instead of polluting —
-    or reading — the real corpus's model."""
-    import hashlib
-
-    names = "|".join(
-        f"{getattr(p, '__module__', '')}.{getattr(p, '__qualname__', '')}"
-        for p in (cache_key if isinstance(cache_key, tuple) else (cache_key,))
-        if callable(p)
-    )
-    return f"{prefix}_{hashlib.md5(names.encode()).hexdigest()[:6]}"
-
-
 def lloyds_assignments(
-    spark: SparkSession,
-    e: DataFrame,
-    cache_key: object = None,
-    sf_dir: str | None = None,
+    spark: SparkSession, e: DataFrame, sf_dir: str, loader: Callable
 ):
     """Run the fixed Lloyd's rounds; return (final centroid DF, final
     assignment DF).  Shared by the training query, the trained-IVF
     search query, and the SemDeDup pruner so all provably use the same
-    quantizer.  Pass ``cache_key`` — callers use (sf_dir, loader), so
-    a monkeypatched load_table gets its own entry rather than stale
-    centroids (the _SIG_CACHE discipline) — to reuse this session's
-    trained centroids instead of re-running the training jobs; pass
-    ``sf_dir`` to also read/publish the persisted model store, which
-    lets even a FRESH application skip training."""
-    from eecs485_p4_mapreduce_spark.functions.modelstore import load_or_train
+    quantizer.  The trained centroids go through the model store
+    (functions/modelstore.py), so every consumer after the first — in
+    this application or a fresh one — reads the published K x D model
+    instead of re-running the training jobs.  ``loader`` is the table
+    loader that read ``e`` (callers pass their module's load_table, so
+    a monkeypatched loader gets its own store location).
+    Deterministic training + exact double parquet round-trip means
+    stored vs fresh centroids are bit-identical — every consumer's
+    oracle replays the same training."""
 
-    key = (
-        (
-            spark.sparkContext.applicationId,
-            cache_key,
-            mtime_token(sf_dir, "embeddings") if sf_dir else None,
+    def train() -> list[tuple]:
+        init = e.filter(F.col("vec_id") < KM_K).select(
+            F.col("vec_id").alias("k"), F.col("v").alias("cv")
         )
-        if cache_key is not None
-        else None
-    )
-    centroids = _CENTROID_CACHE.get(key) if key else None
-    if centroids is None:
-
-        def train() -> list[tuple]:
-            init = e.filter(F.col("vec_id") < KM_K).select(
-                F.col("vec_id").alias("k"), F.col("v").alias("cv")
-            )
-            cents = [(int(r["k"]), list(r["cv"])) for r in init.collect()]
-            for _ in range(KM_ROUNDS):
-                cdf = spark.createDataFrame(cents, "k bigint, cv array<double>")
-                assigned = km_assign(e, cdf)
-                means = (
-                    assigned.select("k", F.posexplode("v").alias("d0", "x"))
-                    .groupBy("k", (F.col("d0") + 1).alias("d"))
-                    .agg(
-                        (
-                            F.sum(F.col("x").cast("decimal(30,15)")).cast("double")
-                            / F.count(F.lit(1))
-                        ).alias("c")
-                    )
-                    .collect()
+        cents = [(int(r["k"]), list(r["cv"])) for r in init.collect()]
+        for _ in range(KM_ROUNDS):
+            cdf = spark.createDataFrame(cents, "k bigint, cv array<double>")
+            assigned = km_assign(e, cdf)
+            means = (
+                assigned.select("k", F.posexplode("v").alias("d0", "x"))
+                .groupBy("k", (F.col("d0") + 1).alias("d"))
+                .agg(
+                    (
+                        F.sum(F.col("x").cast("decimal(30,15)")).cast("double")
+                        / F.count(F.lit(1))
+                    ).alias("c")
                 )
-                by_k: dict[int, list] = {}
-                for r in means:
-                    by_k.setdefault(int(r["k"]), []).append((r["d"], r["c"]))
-                cents = [
-                    (k, [c for _, c in sorted(vals)])
-                    for k, vals in sorted(by_k.items())
-                ]
-            return cents
-
-        if sf_dir is not None:
-            centroids = load_or_train(
-                spark,
-                loader_tag("kmeans", cache_key),
-                sf_dir,
-                "k bigint, cv array<double>",
-                train,
+                .collect()
             )
-        else:
-            centroids = train()
-        if key:
-            _CENTROID_CACHE.put(key, centroids)
-    cdf = spark.createDataFrame(centroids, "k bigint, cv array<double>")
+            by_k: dict[int, list] = {}
+            for r in means:
+                by_k.setdefault(int(r["k"]), []).append((r["d"], r["c"]))
+            cents = [
+                (k, [c for _, c in sorted(vals)])
+                for k, vals in sorted(by_k.items())
+            ]
+        return cents
+
+    schema = "k bigint, cv array<double>"
+    centroids = load_or_train(
+        spark, "kmeans", sf_dir, schema, train, loader=loader
+    )
+    cdf = spark.createDataFrame(centroids, schema)
     return cdf, km_assign(e, cdf)
 
 

@@ -1,107 +1,38 @@
-"""Bounded per-application memo caches for expensive trained/derived state.
+"""Freshness token for stored derived state, and the one session map.
 
-The engine memoizes three kinds of once-per-corpus state: the MinHash
-signature frame (dedup family), the trained k-means quantizer
-(IVF/SemDeDup), and the streaming band index.  Through round 5 these
-were plain dicts keyed by (applicationId, sf_dir) and never evicted —
-fine for the driver's single-corpus sessions, but a long-lived session
-cycling many corpora would pin checkpointed RDDs forever, and a corpus
-rewritten in place mid-application would be served stale.
+Every stored model and derived frame lives in the content-addressed
+parquet store (functions/modelstore.py), keyed by :func:`mtime_token`:
+rewriting the parquet under an ``sf_dir`` changes the token, so the
+store resolves a NEW location and never serves the old corpus's state.
+There are no in-memory caches in front of the store — a hit is a
+parquet read (a scan in the requesting session for frames, a pyarrow
+read for driver-sized models), which is what the reference's
+stage-boundary files are too.
 
-This module fixes both:
-
-- :class:`LRU` — a small ordered cache (default 4 slots,
-  ``SPARK_GRAFT_MEMO_SLOTS`` overrides) with a per-entry eviction
-  callback so the owner can drop the global temp view / unpersist when
-  an entry ages out.  Dropping the last reference makes the JVM Dataset
-  collectible and Spark's ContextCleaner reclaims the checkpointed
-  blocks.
-- :func:`mtime_token` — a filesystem freshness token folded into cache
-  keys, so rewriting the parquet under a cached sf_dir changes the key
-  and the stale entry simply stops being hit (and ages out of the LRU).
+The one map the session still keeps is :data:`BAND_INDEX_TABLES`, the
+names of the streaming band-index tables this application has written
+(streaming/__init__.py); :func:`clear_all_caches` forgets it.
 """
 
 from __future__ import annotations
 
 import os
-from collections import OrderedDict
-from typing import Any, Callable
 
-
-def memo_slots(default: int = 4) -> int:
-    """Cache capacity: entries are per-corpus, so this is 'how many
-    corpora may stay warm at once'."""
-    try:
-        return max(int(os.environ.get("SPARK_GRAFT_MEMO_SLOTS", default)), 1)
-    except ValueError:
-        return default
-
-
-# Every LRU instance registers here so sweep tools can release ALL
-# memoized derived state between queries (tools/oracle_check.py's
-# per-query block release) — eviction callbacks drop the global temp
-# views / unpersist, making the checkpointed blocks collectible.
-_ALL_CACHES: "list[LRU]" = []
+# (applicationId, sf_dir, documents mtime token) -> warehouse table name
+BAND_INDEX_TABLES: dict[tuple, str] = {}
 
 
 def clear_all_caches() -> None:
-    """Evict every entry of every registered LRU (running eviction
-    callbacks).  Safe at any point between queries: the next access
-    misses and rebuilds — for the band-graph stack that is a parquet
-    re-read of the published derived frame, not a recompute."""
-    for c in _ALL_CACHES:
-        c.clear()
-
-
-class LRU:
-    """Insertion/access-ordered bounded cache with eviction callbacks."""
-
-    def __init__(self, maxsize: int | None = None) -> None:
-        self.maxsize = maxsize if maxsize is not None else memo_slots()
-        self._d: "OrderedDict[Any, tuple[Any, Callable | None]]" = OrderedDict()
-        _ALL_CACHES.append(self)
-
-    def get(self, key: Any) -> Any:
-        hit = self._d.get(key)
-        if hit is None:
-            return None
-        self._d.move_to_end(key)
-        return hit[0]
-
-    def put(
-        self, key: Any, value: Any, on_evict: Callable[[Any], None] | None = None
-    ) -> None:
-        self._d[key] = (value, on_evict)
-        self._d.move_to_end(key)
-        while len(self._d) > self.maxsize:
-            _, (old, cb) = self._d.popitem(last=False)
-            self._run(cb, old)
-
-    def clear(self) -> None:
-        """Evict everything, running each entry's callback."""
-        while self._d:
-            _, (old, cb) = self._d.popitem(last=False)
-            self._run(cb, old)
-
-    @staticmethod
-    def _run(cb: Callable | None, value: Any) -> None:
-        if cb is not None:
-            try:
-                cb(value)
-            except Exception:
-                pass  # eviction is best-effort cleanup, never a query error
-
-    def __len__(self) -> int:
-        return len(self._d)
-
-    def __contains__(self, key: Any) -> bool:
-        return key in self._d
+    """Forget the streaming band-index names, so the next streaming
+    MinHash probe rewrites its index.  Safe at any point between
+    queries; stored models and frames are on disk and need no release."""
+    BAND_INDEX_TABLES.clear()
 
 
 def mtime_token(sf_dir: str, table: str) -> int | None:
     """Microsecond mtime of ``{sf_dir}/{table}.parquet`` (newest part
     file when it is a directory); ``None`` when unreadable.  Folded into
-    memo keys so a rewritten corpus misses instead of serving stale
+    store keys so a rewritten corpus misses instead of serving stale
     derived state."""
     path = os.path.join(sf_dir, f"{table}.parquet")
     try:

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from eecs485_p4_mapreduce_spark.functions.hashfn import hex_int_sql
+from eecs485_p4_mapreduce_spark.sources import widen_scan
 
 K = 16          # minhash signature length
 BANDS = 8       # LSH bands (r = K // BANDS = 2 rows per band)
@@ -108,19 +109,15 @@ MINHASH_SIG_FOLD = (
 )
 
 
-def minhash_banded(
-    docs: DataFrame, checkpoint: bool = True
-) -> tuple[DataFrame, DataFrame]:
+def minhash_banded(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(signatures, per-band rows) for MinHash LSH over ``docs``.
 
-    Returns ``sig_df`` (doc_id, sig) localCheckpointed -- every consumer
-    references it repeatedly and projection collapse would otherwise
-    recompute the signature per reference -- and ``sig`` exploded to one
-    row per (doc_id, band, band_hash).  ``checkpoint=False`` skips the
-    materialization for the one caller that immediately persists the
-    frame to the signature store (a parquet write IS the
-    materialization; checkpointing first would compute everything
-    twice).
+    Returns ``sig_df`` (doc_id, sig), unmaterialized, and ``sig``
+    exploded to one row per (doc_id, band, band_hash).  Every consumer
+    references the signatures repeatedly, so the engine reads them
+    through ``dedup.minhash_signatures``, which stores the frame (a
+    parquet write IS the materialization) or, for an unkeyable corpus,
+    pins it once.
 
     Construction choice, measured at sf0.1: the cost is ~one md5 per
     character of text, which is inherent (md5 is the only digest Spark
@@ -147,11 +144,9 @@ def minhash_banded(
     # arrive as a single partition and serialize the md5-per-shingle work
     # onto one core (measured 11.4 s -> ~1.5 s at sf0.1).  Right-size only
     # when the source under-delivers: at real scale the scan has far more
-    # splits than cores and this branch never fires, so no full-text
-    # shuffle is ever added to the 100 TB plan.
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    if lt.rdd.getNumPartitions() < target:
-        lt = lt.repartition(target, "doc_id")
+    # splits than cores and this never fires, so no full-text shuffle is
+    # ever added to the 100 TB plan.
+    lt = widen_scan(lt, "doc_id")
     hx = lt.select("doc_id", F.explode(F.expr(sh_from_lt)).alias("h"))
     hint = hx.select(
         "doc_id",
@@ -166,10 +161,6 @@ def minhash_banded(
             ]
         ).alias("sig")
     )
-    # Materialize signatures once; at cluster scale this is a
-    # checkpoint/cached table between stages.
-    if checkpoint:
-        sig_df = sig_df.localCheckpoint()
     return sig_df, banded_from_sig(sig_df)
 
 

@@ -1,27 +1,38 @@
-"""Persisted trained-model store: the stored-model table for quantizers.
+"""The derived-state store: every stored model and derived frame.
 
-The engine trains small models over a corpus — the Lloyd's k-means
-quantizer (IVF / SemDeDup centroids) and the PQ per-subspace codebooks.
-Training is deterministic but costs a few Spark jobs (~2.5 s at sf0.1);
-the model itself is tiny (K x D doubles, driver-side).  The streaming
-band index already showed the production shape: derive once, STORE,
-read thereafter.  This module gives the quantizers the same treatment:
+The engine derives state from a corpus once and reuses it across
+queries and applications — trained models (the Lloyd's k-means
+quantizer, the PQ codebooks, the BPE merge tables) and executor-scale
+derived frames (MinHash signatures, the LSH candidate and oriented edge
+sets, n-gram postings, calibration samples, the HITS edge set).  This
+is the engine's stage boundary: state between stages is files in a
+shared directory, never process memory.  :func:`load_or_train` (driver-
+sized rows) and :func:`load_or_build_frame` (Spark frames) are the only
+entry points; each owns the whole mechanism:
 
-- Models live as parquet directories under the Spark SQL warehouse
-  (``spark.sql.warehouse.dir``), named content-addressed by corpus path
-  + file mtime: a rewritten corpus gets a NEW location, so a live
-  reader of the old model is never clobbered (the band-index advice);
-  stale versions are only junk on disk, bounded by corpus rewrites
-  (production corpora are immutable snapshot dirs, so normally zero).
+- Location: a parquet directory under the Spark SQL warehouse
+  (``spark.sql.warehouse.dir``) named ``sg_model_<kind>_<digest>_<token>``
+  — ``kind`` carries the loader tag (:func:`loader_tag`), ``digest``
+  hashes the corpus path and ``token`` is the corpus file mtime
+  (functions/memo.py:mtime_token, folded with any ``extra_tables``).  A
+  rewritten corpus gets a NEW location, so a live reader of the old
+  state is never clobbered; stale versions are only junk on disk,
+  bounded by corpus rewrites (production corpora are immutable snapshot
+  dirs, so normally zero).
 - Publish is atomic on a POSIX filesystem: write to a unique temp dir,
   ``os.rename`` into place.  A lost race (rename target exists) falls
-  back to reading the winner — training is deterministic, so both
-  writers' content is bit-identical anyway.  (Object stores lack atomic
+  back to reading the winner — derivation is deterministic, so both
+  writers' content is identical anyway.  (Object stores lack atomic
   rename; a cluster deployment fronts this with its catalog/ingest
-  instead, which is where stored models belong at 100 TB.)
-- Reads cross APPLICATIONS: the in-memory quantizer caches are keyed by
-  applicationId and die with the context, but a fresh application finds
-  the published model on disk and skips training entirely.
+  instead, which is where stored state belongs at 100 TB.)
+- Reads cross APPLICATIONS: a fresh application finds the published
+  state on disk and skips the derivation entirely.  A frame hit is a
+  parquet scan in the session that asked for it, so a conf-scoped child
+  session still gets its own confs.
+- Unkeyable corpus (mtime unreadable — injected test frames): nothing
+  is published; a model is trained per call, and a frame is built and
+  pinned once with ``localCheckpoint()`` so its consumers do not replay
+  the derivation per reference.
 """
 
 from __future__ import annotations
@@ -53,6 +64,47 @@ def model_location(
     return os.path.join(
         warehouse_path(spark), f"sg_model_{kind}_{digest}_{token or 0}"
     )
+
+
+def loader_tag(kind: str, loader: Callable | None) -> str:
+    """Store kind for data read through ``loader``: the real loader maps
+    to a stable name so the store is shared across applications; a
+    monkeypatched loader (different qualname) gets its own location
+    instead of polluting — or reading — the real corpus's state.
+    ``None`` keeps ``kind`` as is."""
+    if loader is None:
+        return kind
+    name = (
+        f"{getattr(loader, '__module__', '')}."
+        f"{getattr(loader, '__qualname__', '')}"
+    )
+    return f"{kind}_{hashlib.md5(name.encode()).hexdigest()[:6]}"
+
+
+def _location(
+    spark: SparkSession,
+    kind: str,
+    sf_dir: str,
+    table: str,
+    extra_tables: tuple,
+    loader: Callable | None,
+) -> str | None:
+    """Store location of ``kind`` for the corpus at ``sf_dir``, or None
+    when a keyed table's mtime is unreadable.  ``extra_tables`` fold
+    their tokens into the key (md5 of the ordered token list, 60-bit)
+    so regenerating ANY input misses; a single-table key is the raw
+    token."""
+    token = mtime_token(sf_dir, table)
+    for extra in extra_tables:
+        et = mtime_token(sf_dir, extra)
+        if token is None or et is None:
+            return None
+        token = int(
+            hashlib.md5(f"{token}:{et}".encode()).hexdigest()[:15], 16
+        )
+    if token is None:
+        return None
+    return model_location(spark, loader_tag(kind, loader), sf_dir, token)
 
 
 def _pa_schema(schema: str):
@@ -112,37 +164,6 @@ def _publish_rows(loc: str, schema: str, rows: list[tuple]) -> None:
         # content is identical (deterministic training) so ours is junk
 
 
-def load_model(
-    spark: SparkSession, kind: str, sf_dir: str, table: str = "embeddings"
-) -> list[tuple] | None:
-    """Published rows of model ``kind`` for the corpus at ``sf_dir``
-    (freshness-keyed by ``table``'s mtime), or None when absent /
-    unkeyable.  The split read half of :func:`load_or_train`, for
-    consumers whose training and application happen in ONE pass (the
-    BPE merge loop) and so can't hand a standalone ``train`` thunk."""
-    token = mtime_token(sf_dir, table)
-    if token is None:
-        return None
-    return _read_rows(model_location(spark, kind, sf_dir, token))
-
-
-def store_model(
-    spark: SparkSession,
-    kind: str,
-    sf_dir: str,
-    schema: str,
-    rows: list[tuple],
-    table: str = "embeddings",
-) -> None:
-    """Publish ``rows`` as model ``kind`` (the split write half of
-    :func:`load_or_train`); no-op when the corpus mtime is unreadable
-    (nothing to key freshness on)."""
-    token = mtime_token(sf_dir, table)
-    if token is None:
-        return
-    _publish_rows(model_location(spark, kind, sf_dir, token), schema, rows)
-
-
 def load_or_build_frame(
     spark: SparkSession,
     kind: str,
@@ -151,40 +172,29 @@ def load_or_build_frame(
     schema: str,
     build: Callable[[], "object"],
     extra_tables: tuple = (),
+    loader: Callable | None = None,
 ):
-    """Stored DERIVED TABLE: like :func:`load_or_train` but for
-    executor-scale frames (the LSH candidate-edge set) that a driver-
+    """Stored DERIVED FRAME: like :func:`load_or_train` but for
+    executor-scale frames (signatures, candidate edges) that a driver-
     side pyarrow write could not hold.  The frame is written by Spark
     as parquet into a unique temp dir under the warehouse and atomically
     renamed into the content-addressed location; hits (any application,
     same corpus mtime) return a plain parquet scan of the published
-    table — no re-derivation, and no checkpoint needed since the scan
-    is stable and re-readable.  ``schema`` is applied on read so an
-    empty published table (empty corpus) still has its columns.
+    table in ``spark`` — no re-derivation, and no checkpoint needed
+    since the scan is stable and re-readable.  ``schema`` is applied on
+    read so an empty published table (empty corpus) still has its
+    columns.
 
-    Returns the DataFrame, or ``build()``'s result unpublished when the
-    corpus mtime is unreadable (caller keeps its own checkpoint there).
+    ``table`` (plus ``extra_tables``) name the source tables whose mtime
+    keys freshness; ``loader`` is the table loader the derivation reads
+    through (see :func:`loader_tag`).  An unkeyable corpus gets
+    ``build()`` pinned with ``localCheckpoint()``, unpublished.
     Derivation is deterministic as a SET; a rename race loser reads the
     winner's copy (row order may differ between builders, but every
-    consumer is order-insensitive — aggregates and joins only).
-
-    ``extra_tables``: additional source tables the derivation reads —
-    their mtime tokens are folded into the key (md5 of the ordered
-    token list, 60-bit) so regenerating ANY input misses instead of
-    serving a stale frame.  Single-table callers keep the raw token
-    (published locations stay valid)."""
-    token = mtime_token(sf_dir, table)
-    for extra in extra_tables:
-        et = mtime_token(sf_dir, extra)
-        if token is None or et is None:
-            token = None
-            break
-        token = int(
-            hashlib.md5(f"{token}:{et}".encode()).hexdigest()[:15], 16
-        )
-    if token is None:
-        return build()
-    loc = model_location(spark, kind, sf_dir, token)
+    consumer is order-insensitive — aggregates and joins only)."""
+    loc = _location(spark, kind, sf_dir, table, extra_tables, loader)
+    if loc is None:
+        return build().localCheckpoint()
     if not os.path.exists(os.path.join(loc, "_SUCCESS")):
         tmp = loc + ".tmp-" + uuid.uuid4().hex[:8]
         build().write.parquet(tmp)
@@ -219,13 +229,16 @@ def load_or_train(
     schema: str,
     train: Callable[[], list[tuple]],
     table: str = "embeddings",
+    loader: Callable | None = None,
 ) -> list[tuple]:
     """Rows of the trained model for (``kind``, corpus at ``sf_dir``):
     read the published copy when one exists, else train, publish, and
-    return.  Rows are returned sorted so cached vs fresh is
+    return.  Rows are returned sorted so stored vs fresh is
     deterministic for every consumer.  ``table`` names the corpus table
     whose mtime keys freshness (embeddings for the quantizers,
-    documents for the text models).
+    documents for the text models); ``loader`` as in
+    :func:`load_or_build_frame`.  An unkeyable corpus trains every call
+    and publishes nothing.
 
     The model is driver-sized (KB), so publish/read go through pyarrow
     directly — no Spark job.  (A Spark write of a Python-local 8-row
@@ -233,14 +246,12 @@ def load_or_train(
     partition's Python-runner round-trip through one task.  The dir is
     still plain parquet + _SUCCESS, readable by ``spark.read.parquet``
     on a cluster.)"""
-    token = mtime_token(sf_dir, table)
-    loc = model_location(spark, kind, sf_dir, token)
-    if token is not None:
+    loc = _location(spark, kind, sf_dir, table, (), loader)
+    if loc is not None:
         rows = _read_rows(loc)
         if rows is not None:
             return rows
     rows = sorted(train())
-    if token is None:
-        return rows  # unreadable corpus mtime: don't publish what we can't key
-    _publish_rows(loc, schema, rows)
+    if loc is not None:
+        _publish_rows(loc, schema, rows)
     return rows

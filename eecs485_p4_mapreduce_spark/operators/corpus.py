@@ -37,7 +37,7 @@ from eecs485_p4_mapreduce_spark.functions.numeric import (
 )
 from eecs485_p4_mapreduce_spark.functions.textfn import DUCK_TOKENS, tokens
 from eecs485_p4_mapreduce_spark.plans.registry import query
-from eecs485_p4_mapreduce_spark.sources import load_table
+from eecs485_p4_mapreduce_spark.sources import load_table, widen_scan
 
 _CHUNK = 32  # sliding-window chunk size (tokens)
 _STRIDE = 16  # chunk start step -> 16-token overlap
@@ -323,8 +323,6 @@ def dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # see the next SPAN-1 tokens that already sit in the same array.
     # Conditional keyed repartition (widen_scan) keeps the
     # md5-per-position work off the compact scan's single core.
-    from eecs485_p4_mapreduce_spark.sources import widen_scan
-
     t0 = widen_scan(docs.select("doc_id", tokens("text").alias("tk")), "doc_id")
     toks = t0.select("doc_id", F.posexplode("tk").alias("pos", "tok"))
     sp = (
@@ -643,8 +641,6 @@ def quality_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts back onto the gram stream, so flagging costs no second
     corpus shuffle on text.  At 100 TB the only wide exchange carries
     short gram keys, never document bodies."""
-    from eecs485_p4_mapreduce_spark.sources import widen_scan
-
     # the 5-gram stream is replayed by BOTH consumers (df mining and
     # the flagging join) — spread the compact scan so neither replay
     # regenerates every gram on one core

@@ -11,6 +11,11 @@ Design for 100 TB:
 - The all-pairs verification joins here (n-gram Jaccard, embedding cosine)
   are the *verify* stage one runs on LSH candidates; at test scale we run
   them globally so the DuckDB oracle can check them exactly.
+- Corpus-derived frames (MinHash signatures, the LSH candidate and
+  degree-oriented edge sets, the 8-token posting table, the calibration
+  samples) live in the derived-state store (functions/modelstore.py):
+  derived once per corpus mtime, then read back as parquet scans by
+  every consumer in any application.  No in-memory cache fronts them.
 
 Cross-engine determinism: every hash is md5 (identical in Spark and
 DuckDB); min/fraction reductions over unordered sets are order-insensitive,
@@ -21,14 +26,12 @@ the same expressions (1-based element_at/list_extract in both).
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eecs485_p4_mapreduce_spark.functions.hashfn import hex_int_sql
 from eecs485_p4_mapreduce_spark.functions.numeric import hu_ratio
-from eecs485_p4_mapreduce_spark.functions.memo import LRU, mtime_token
+from eecs485_p4_mapreduce_spark.functions.modelstore import load_or_build_frame
 from eecs485_p4_mapreduce_spark.functions.textfn import DUCK_TOKENS
 from eecs485_p4_mapreduce_spark.plans.registry import query
 from eecs485_p4_mapreduce_spark.sources import load_table, widen_scan
@@ -85,127 +88,78 @@ _banded_from_sig = _mh.banded_from_sig
 _hex_int_sql = hex_int_sql
 
 
-# Session-scoped signature store: (applicationId, sf_dir, mtime, loader)
-# -> global-temp-view NAME over the materialized (doc_id, sig) frame.
-# Eight queries (the minhash dedup family, the band-graph family,
-# contamination audits) each need the identical signature table;
-# recomputing it per query was the suite's entire ~5 s-per-query tail.
-# This is the in-process stand-in for what production does with a
-# stored, bucketed signature TABLE that ingest keeps fresh -- the
-# docstrings' "stored signature" caveat, made real.  Keyed by
-# applicationId so a new SparkContext (whose checkpointed RDDs died
-# with the old one) naturally misses and rebuilds; by the corpus file
-# mtime so a parquet rewritten in place misses instead of serving the
-# old corpus's signatures; and by the loader function so tests that
-# monkeypatch load_table get their own entries instead of a stale
-# corpus.
-#
-# Bounded: an LRU (SPARK_GRAFT_MEMO_SLOTS corpora, default 4).  Each
-# live entry pins one localCheckpointed RDD (~corpus rows x 16 ints) —
-# the point: it IS the stored signature table — but eviction drops the
-# global temp view, after which ContextCleaner reclaims the blocks, so
-# a long-lived session cycling many corpora stays bounded.
-_SIG_CACHE = LRU()
+# The signature table and the two edge tables derived from it are
+# corpus-derived frames in the derived-state store
+# (functions/modelstore.py): built once per corpus mtime, published as
+# parquet, and read back as a scan by every later call in any
+# application — the stored, bucketed signature/edge TABLES that ingest
+# keeps fresh in production.  Eight queries (the minhash dedup family,
+# the band-graph family, contamination audits) share the signatures;
+# the whole band-graph family shares the edges.
 
 
-def _mtime_token(sf_dir: str) -> int | None:
-    return mtime_token(sf_dir, "documents")
-
-
-def _drop_sig_view(spark: SparkSession):
-    """Eviction callback: unregister the aged-out signature view so the
-    checkpointed frame becomes collectible."""
-
-    def drop(name: str) -> None:
-        spark.catalog.dropGlobalTempView(name)
-
-    return drop
-
-
-def clear_signature_cache() -> None:
-    """Evict every cached signature frame (see _SIG_CACHE notes)."""
-    _SIG_CACHE.clear()
-    _EDGE_CACHE.clear()
-    _ORIENTED_CACHE.clear()
-
-
-# Session-scoped candidate-EDGE store, one layer above _SIG_CACHE: the
-# DISTINCT low-high band-collision pair set (da < db) that the whole
-# band-graph family (triangle count, k-core, link prediction,
-# assortativity, clustering coefficient, LPA via re-orientation) derives
-# identically from the signature table.  Rebuilding it was ~1.8 s per
-# graph query at sf0.1; like the signatures, production would keep this
-# as a stored edge table refreshed by ingest.  Same key discipline and
-# LRU bounds as _SIG_CACHE.
-_EDGE_CACHE = LRU()
+def minhash_signatures(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Stored ``(sig_df, banded)`` for the full documents corpus at
+    ``sf_dir`` — bit-identical to ``_minhash_banded(load_table(...))``
+    (it IS that, stored), so every consumer's oracle is unchanged.  The
+    md5-per-shingle floor (~the whole dedup-family tail) is paid once
+    per corpus; a hit is a parquet scan in the REQUESTING session, so a
+    consumer on a conf-scoped child session (e.g.
+    ``dedup_minhash_calibration``) gets a frame under its own confs."""
+    sig_df = load_or_build_frame(
+        spark,
+        "minhash_sigs",
+        sf_dir,
+        "documents",
+        "doc_id bigint, sig array<bigint>",
+        lambda: _minhash_banded(load_table(spark, sf_dir, "documents"))[0],
+        loader=load_table,
+    )
+    return sig_df, _banded_from_sig(sig_df)
 
 
 def lsh_candidate_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached DISTINCT ``(da, db)`` (da < db) LSH band-collision
-    edge set over the documents corpus — bit-identical as a SET to the
-    inline self-join every band-graph query used to build, memoized
-    behind a global temp view (the ``minhash_signatures`` pattern, one
-    derivation layer up) AND persisted cross-application through the
-    model store (functions/modelstore.py): production keeps this as a
-    stored edge table refreshed by ingest, so a fresh application reads
-    the published parquet and skips the signature + band self-join
-    stages entirely.  An unkeyable corpus (unreadable mtime) falls back
-    to the in-session localCheckpoint."""
-    from eecs485_p4_mapreduce_spark.functions.kmeansfn import loader_tag
-    from eecs485_p4_mapreduce_spark.functions.modelstore import (
-        load_or_build_frame,
+    """Stored DISTINCT ``(da, db)`` (da < db) LSH band-collision edge set
+    over the documents corpus — bit-identical as a SET to the inline
+    self-join every band-graph query used to build.  Rebuilding it was
+    ~1.8 s per graph query at sf0.1; a hit skips the signature and band
+    self-join stages entirely."""
+
+    def build() -> DataFrame:
+        _, banded = minhash_signatures(spark, sf_dir)
+        left = banded.select("doc_id", "b", "band_hash")
+        return (
+            left.alias("x")
+            .join(left.alias("y"), ["b", "band_hash"])
+            .filter(F.col("x.doc_id") < F.col("y.doc_id"))
+            .select(F.col("x.doc_id").alias("da"), F.col("y.doc_id").alias("db"))
+            .distinct()
+        )
+
+    return load_or_build_frame(
+        spark,
+        "lsh_edges",
+        sf_dir,
+        "documents",
+        "da bigint, db bigint",
+        build,
+        loader=load_table,
     )
 
-    loader = load_table  # module global: respects monkeypatched loaders
-    token = _mtime_token(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, token, loader)
-    name = _EDGE_CACHE.get(key)
-    if name is None:
 
-        def build() -> DataFrame:
-            _, banded = minhash_signatures(spark, sf_dir)
-            left = banded.select("doc_id", "b", "band_hash")
-            return (
-                left.alias("x")
-                .join(left.alias("y"), ["b", "band_hash"])
-                .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-                .select(
-                    F.col("x.doc_id").alias("da"), F.col("y.doc_id").alias("db")
-                )
-                .distinct()
-            )
-
-        if token is not None:
-            edges = load_or_build_frame(
-                spark,
-                loader_tag("lsh_edges", (sf_dir, loader)),
-                sf_dir,
-                "documents",
-                "da bigint, db bigint",
-                build,
-            )
-        else:
-            edges = build().localCheckpoint()
-        name = f"sg_edges_{uuid.uuid4().hex[:12]}"
-        edges.createOrReplaceGlobalTempView(name)
-        _EDGE_CACHE.put(key, name, on_evict=_drop_sig_view(spark))
-    return spark.table(f"global_temp.{name}")
-
-
-# Degree-ORIENTED edge store, one layer above _EDGE_CACHE: the wedge-
-# closure family (triangle count, clustering coefficient, link
-# prediction, 2-hop centrality) re-orients every candidate edge from its
-# lower-(degree, doc_id) endpoint to the higher one before closing
-# wedges — the classic orientation that (a) lets triangle listing
-# enumerate only out-out wedges at each triangle's key-minimum vertex
-# (sum over nodes of out-degree^2, O(m^1.5) total, instead of
-# degree^2 at every vertex) and (b) splits full wedge enumeration into
-# three disjoint classes whose join volume is i^2 + i*o + o^2 per
-# middle instead of (i+o)^2.  Orientation is a pure relabeling: the
-# wedge/triangle MULTISETS are provably unchanged, so every consumer's
-# oracle stays bit-identical.  Same key discipline and LRU bounds as
-# the caches below it.
-_ORIENTED_CACHE = LRU()
+# Degree-ORIENTED edges: the wedge-closure family (triangle count,
+# clustering coefficient, link prediction, 2-hop centrality) re-orients
+# every candidate edge from its lower-(degree, doc_id) endpoint to the
+# higher one before closing wedges — the classic orientation that (a)
+# lets triangle listing enumerate only out-out wedges at each
+# triangle's key-minimum vertex (sum over nodes of out-degree^2,
+# O(m^1.5) total, instead of degree^2 at every vertex) and (b) splits
+# full wedge enumeration into three disjoint classes whose join volume
+# is i^2 + i*o + o^2 per middle instead of (i+o)^2.  Orientation is a
+# pure relabeling: the wedge/triangle MULTISETS are provably unchanged,
+# so every consumer's oracle stays bit-identical.
 
 
 def orient_edges(edges: DataFrame) -> DataFrame:
@@ -239,97 +193,20 @@ def orient_edges(edges: DataFrame) -> DataFrame:
 
 
 def lsh_oriented_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached degree-oriented view of :func:`lsh_candidate_edges`
-    (see :func:`orient_edges` for the relabeling contract), persisted
-    CROSS-APPLICATION like the candidate edges themselves: the oriented
-    table is a corpus-derived frame, so it publishes through the model
-    store (content-addressed parquet, atomic rename, mtime-keyed) and a
-    fresh application reads the published parquet — skipping the degree
-    aggregate AND the two orientation joins, which at 100 TB are a real
-    shuffle over the full edge table.  On a store hit the candidate-edge
-    derivation underneath is never invoked either.  An unkeyable corpus
-    falls back to the in-session localCheckpoint."""
-    from eecs485_p4_mapreduce_spark.functions.kmeansfn import loader_tag
-    from eecs485_p4_mapreduce_spark.functions.modelstore import (
-        load_or_build_frame,
+    """Stored degree-oriented view of :func:`lsh_candidate_edges` (see
+    :func:`orient_edges` for the relabeling contract): a hit skips the
+    degree aggregate AND the two orientation joins, which at 100 TB are
+    a real shuffle over the full edge table — and the candidate-edge
+    derivation underneath is never invoked either."""
+    return load_or_build_frame(
+        spark,
+        "lsh_oedges",
+        sf_dir,
+        "documents",
+        "lo bigint, hi bigint, dlo bigint, dhi bigint",
+        lambda: orient_edges(lsh_candidate_edges(spark, sf_dir)),
+        loader=load_table,
     )
-
-    loader = load_table  # module global: respects monkeypatched loaders
-    token = _mtime_token(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, token, loader)
-    name = _ORIENTED_CACHE.get(key)
-    if name is None:
-
-        def build() -> DataFrame:
-            return orient_edges(lsh_candidate_edges(spark, sf_dir))
-
-        if token is not None:
-            oriented = load_or_build_frame(
-                spark,
-                loader_tag("lsh_oedges", (sf_dir, loader)),
-                sf_dir,
-                "documents",
-                "lo bigint, hi bigint, dlo bigint, dhi bigint",
-                build,
-            )
-        else:
-            oriented = build().localCheckpoint()
-        name = f"sg_oedges_{uuid.uuid4().hex[:12]}"
-        oriented.createOrReplaceGlobalTempView(name)
-        _ORIENTED_CACHE.put(key, name, on_evict=_drop_sig_view(spark))
-    return spark.table(f"global_temp.{name}")
-
-
-def minhash_signatures(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Session-cached ``(sig_df, banded)`` for the full documents corpus
-    at ``sf_dir`` — bit-identical to ``_minhash_banded(load_table(...))``
-    (it IS that, memoized), so every consumer's oracle is unchanged.
-
-    The materialized frame is published as a GLOBAL temp view and read
-    back through the REQUESTING session's catalog: global temp views are
-    Spark's public cross-session sharing surface, so a consumer running
-    on a conf-scoped child session (e.g. ``dedup_minhash_calibration``)
-    gets a frame bound to ITS session — its conf overrides apply — while
-    still reusing the one materialized signature table.
-
-    Like the candidate edges one layer up, the signature table itself is
-    PERSISTED cross-application through the model store: the
-    md5-per-shingle floor (~the whole dedup-family tail) is paid once
-    per corpus ever, and a fresh application reads the published parquet
-    — the 'stored, bucketed signature TABLE that ingest keeps fresh'
-    the cache notes always described, made real on disk.  An unkeyable
-    corpus (unreadable mtime) falls back to the in-session
-    localCheckpoint."""
-    from eecs485_p4_mapreduce_spark.functions.kmeansfn import loader_tag
-    from eecs485_p4_mapreduce_spark.functions.modelstore import (
-        load_or_build_frame,
-    )
-
-    loader = load_table  # module global: respects monkeypatched loaders
-    token = _mtime_token(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, token, loader)
-    name = _SIG_CACHE.get(key)
-    if name is None:
-        if token is not None:
-            sig_df = load_or_build_frame(
-                spark,
-                loader_tag("minhash_sigs", (sf_dir, loader)),
-                sf_dir,
-                "documents",
-                "doc_id bigint, sig array<bigint>",
-                lambda: _mh.minhash_banded(
-                    loader(spark, sf_dir, "documents"), checkpoint=False
-                )[0],
-            )
-        else:
-            sig_df, _ = _minhash_banded(loader(spark, sf_dir, "documents"))
-        name = f"sg_sig_{uuid.uuid4().hex[:12]}"
-        sig_df.createOrReplaceGlobalTempView(name)
-        _SIG_CACHE.put(key, name, on_evict=_drop_sig_view(spark))
-    sig_df = spark.table(f"global_temp.{name}")
-    return sig_df, _banded_from_sig(sig_df)
 
 
 @query(
@@ -1011,9 +888,6 @@ def _token_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     would approximate), stored once and probed by every consumer."""
     from pyspark.sql import Window
 
-    from eecs485_p4_mapreduce_spark.functions.modelstore import (
-        load_or_build_frame,
-    )
     from eecs485_p4_mapreduce_spark.functions.textfn import tokens
 
     def build() -> DataFrame:
@@ -1029,8 +903,6 @@ def _token_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "source", F.md5(gram).alias("h")
         ).filter(F.col("h").isNotNull())
 
-    if mtime_token(sf_dir, "documents") is None:
-        return build()  # injected/monkeypatched corpora: never cache
     return load_or_build_frame(
         spark,
         "token_windows8",
@@ -1038,6 +910,7 @@ def _token_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "documents",
         "doc_id bigint, source string, h string",
         build,
+        loader=load_table,
     )
 
 
@@ -1531,31 +1404,22 @@ def _calibration_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    from eecs485_p4_mapreduce_spark.functions.kmeansfn import loader_tag
-    from eecs485_p4_mapreduce_spark.functions.modelstore import (
-        load_or_build_frame,
-    )
-
     # The sampled estimate table and the sampled-shingle table are both
     # corpus-derived frames (stored edges x stored signatures under a
     # deterministic sample rule), so they persist cross-application
-    # through the model store like the layers below them: a warm
+    # through the derived-state store like the layers below them: a warm
     # application's calibration is two parquet scans + two joins + one
     # 7-row aggregate — no signature re-attach, no shingle rebuild, no
     # in-session checkpoint replay.
-    if _mtime_token(sf_dir) is not None:
-        est = load_or_build_frame(
-            spark,
-            loader_tag("calib_est", (sf_dir, load_table)),
-            sf_dir,
-            "documents",
-            "doc_a bigint, doc_b bigint, est_sixteenths bigint",
-            build_est,
-        )
-    else:
-        # referenced three times below (candidate-id set + both joins);
-        # materialize so the band join does not replay per reference
-        est = build_est().localCheckpoint()
+    est = load_or_build_frame(
+        spark,
+        "calib_est",
+        sf_dir,
+        "documents",
+        "doc_a bigint, doc_b bigint, est_sixteenths bigint",
+        build_est,
+        loader=load_table,
+    )
     # Shingle ONLY the documents that appear in a sampled pair: the
     # semi-join filters (doc_id, text) rows BEFORE the shingle arrays are
     # built, so verify cost follows the candidate set, not the corpus —
@@ -1584,17 +1448,15 @@ def _calibration_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             sh_base = sh_base.repartition(target, "doc_id")
         return sh_base.select("doc_id", shingles("text", _SHINGLE).alias("sh"))
 
-    if _mtime_token(sf_dir) is not None:
-        sh = load_or_build_frame(
-            spark,
-            loader_tag("calib_shingles", (sf_dir, load_table)),
-            sf_dir,
-            "documents",
-            "doc_id bigint, sh array<string>",
-            build_sh,
-        )
-    else:
-        sh = build_sh()
+    sh = load_or_build_frame(
+        spark,
+        "calib_shingles",
+        sf_dir,
+        "documents",
+        "doc_id bigint, sh array<string>",
+        build_sh,
+        loader=load_table,
+    )
     ex = (
         est.join(sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sa")), "doc_a")
         .join(sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sb")), "doc_b")

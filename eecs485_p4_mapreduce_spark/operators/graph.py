@@ -14,13 +14,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from eecs485_p4_mapreduce_spark.functions.modelstore import load_or_build_frame
 from eecs485_p4_mapreduce_spark.functions.numeric import (
     hu_ratio,
     hu_ratio_signed,
     hu_ratio_signed_sql,
 )
 from eecs485_p4_mapreduce_spark.plans.registry import query
-from eecs485_p4_mapreduce_spark.sources import load_table
+from eecs485_p4_mapreduce_spark.sources import load_table, widen_scan
 
 _ITERS = 10
 _DAMP = 0.85
@@ -168,40 +169,34 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   100 TB move for this family (BENCHNOTES).
 
 
-def _wide_oe(oe: DataFrame) -> DataFrame:
-    """Conditional keyed repartition of the oriented-edge frame before a
-    wedge/triangle self-join (the minhash_banded pattern, at the JOIN
-    level): the published edge parquet is one compact split, and the
-    self-joins broadcast one side — so the stream side's task count IS
-    the edge scan's split count, and the whole wedge fan-out (6.6M rows
-    from 107k edges at sf0.1) plus its map-side partial aggregation was
-    produced on as many cores as there were plan branches (measured: a
-    3-task union stage doing 4.8s of enumeration).  Spreading the 107k
-    edge rows first is ~3MB of shuffle for a >10x wider produce stage;
-    a wide production scan never pays it.
-
-    Pay it ONLY where the consumer AGGREGATES the wedge stream (the
-    linkpred groupBys: map-side partial aggregation from 32 producer
-    partitions beats 3 — measured adamic_adar 4.2 -> 2.0 s warm,
-    common_neighbors 2.7 -> 1.6 s in one session).  Where the consumer
-    re-shuffles raw wedge rows anyway (the centrality DISTINCT's own
-    128-way repartition, the triangle closing-edge probe) the extra
-    exchange only adds shuffle machinery — measured centrality 3.1 ->
-    4.2 s WITH the spread — so those paths pass widen=False."""
-    target = oe.sparkSession.sparkContext.defaultParallelism
-    if oe.rdd.getNumPartitions() < target:
-        oe = oe.repartition(target, "lo", "hi")
-    return oe
-
-
 def _oriented_wedges(oe: DataFrame, widen: bool = True) -> DataFrame:
     """Every wedge {x, y}-through-some-middle exactly once, as id-
     canonical pairs ``(u, w)`` with ``u < w`` — the same multiset the
     both-directions ``adj JOIN adj ON a1.v = a2.u WHERE a1.u < a2.v``
     enumeration produces, at i^2+io+o^2 join volume per middle.
-    ``widen`` per the :func:`_wide_oe` decision rule."""
+    ``widen`` per the decision rule below."""
     if widen:
-        oe = _wide_oe(oe)
+        # Conditional keyed spread of the oriented-edge frame before the
+        # wedge self-join (the minhash_banded pattern, at the JOIN
+        # level): the published edge parquet is one compact split, and
+        # the self-joins broadcast one side — so the stream side's task
+        # count IS the edge scan's split count, and the whole wedge
+        # fan-out (6.6M rows from 107k edges at sf0.1) plus its map-side
+        # partial aggregation was produced on as many cores as there
+        # were plan branches (measured: a 3-task union stage doing 4.8s
+        # of enumeration).  Spreading the 107k edge rows first is ~3MB
+        # of shuffle for a >10x wider produce stage; a wide production
+        # scan never pays it.  Pay it ONLY where the consumer AGGREGATES
+        # the wedge stream (the linkpred groupBys: map-side partial
+        # aggregation from 32 producer partitions beats 3 — measured
+        # adamic_adar 4.2 -> 2.0 s warm, common_neighbors 2.7 -> 1.6 s
+        # in one session).  Where the consumer re-shuffles raw wedge
+        # rows anyway (the centrality DISTINCT's own 128-way
+        # repartition, the triangle closing-edge probe) the extra
+        # exchange only adds shuffle machinery — measured centrality
+        # 3.1 -> 4.2 s WITH the spread — so those paths pass
+        # widen=False.
+        oe = widen_scan(oe, "lo", "hi")
     a, b = oe.alias("a"), oe.alias("b")
     ka_hi = F.struct(F.col("a.dhi"), F.col("a.hi"))
     kb_hi = F.struct(F.col("b.dhi"), F.col("b.hi"))
@@ -275,7 +270,7 @@ def _triangles_from_oriented(oe: DataFrame) -> DataFrame:
     closure lists): out-out wedges at the key-minimum vertex, closed by
     one oriented-edge probe — sum(out-degree^2) total wedge work.
     Split from the corpus wrapper so the property test can drive it
-    over arbitrary generated edge sets.  No _wide_oe here: the closing
+    over arbitrary generated edge sets.  No widen_scan here: the closing
     probe re-joins raw rows rather than aggregating them, and the A/B
     measured the spread slightly NEGATIVE (1.13 -> 1.24 s warm)."""
     ab, ac, bc = oe.alias("ab"), oe.alias("ac"), oe.alias("bc")
@@ -336,7 +331,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes never own every wedge.  The triangle multiset is provably the
     id-oriented closure's (orientation is a relabeling), so the oracle
     keeps the plain e JOIN e JOIN e spelling.  All shuffles key on doc
-    ids over the session-cached checkpointed edge set."""
+    ids over the stored edge set."""
     from eecs485_p4_mapreduce_spark.operators.dedup import lsh_candidate_edges
 
     edges = lsh_candidate_edges(spark, sf_dir)
@@ -524,7 +519,7 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from eecs485_p4_mapreduce_spark.operators.dedup import lsh_candidate_edges
 
     # the directed (u != v) adjacency is both orientations of the
-    # session-cached low-high edge set (identical to the old inline
+    # stored low-high edge set (identical to the old inline
     # banded self-join with a != guard)
     e = lsh_candidate_edges(spark, sf_dir)
     eu = e.select(F.col("da").alias("u"), F.col("db").alias("v")).unionAll(
@@ -586,7 +581,7 @@ def graph_linkpred_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFra
     an exact-similarity verify that no single band caught); on a social
     graph it is the classic friend-of-friend recommender.
 
-    Plan: the shared session-cached DEGREE-ORIENTED edge set feeds the
+    Plan: the shared stored DEGREE-ORIENTED edge set feeds the
     three-class wedge enumeration (`_oriented_wedges`: out-out / in-out
     / in-in by the middle's rank — i^2+io+o^2 join volume per middle
     instead of the both-directions (i+o)^2, each wedge exactly once);
@@ -880,7 +875,7 @@ def graph_centrality_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     without the unbounded BFS full closeness needs.  Reported as
     harmonic_x2 = 2·n1 + n2 so every value is an exact integer.
 
-    Scale shape: the session-cached DEGREE-ORIENTED edge set feeds the
+    Scale shape: the stored DEGREE-ORIENTED edge set feeds the
     three-class wedge enumeration (`_oriented_wedges` — i^2+io+o^2 join
     volume per middle instead of the both-directions (i+o)^2, each
     unordered 2-path pair derived from exactly the same wedge multiset)
@@ -1128,11 +1123,6 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     either one misses instead of serving a stale edge set), so a warm
     application's 6 edge scans read published parquet instead of
     re-deriving the 600k-row distinct."""
-    from eecs485_p4_mapreduce_spark.functions.memo import mtime_token
-    from eecs485_p4_mapreduce_spark.functions.modelstore import (
-        load_or_build_frame,
-    )
-
     def _build_edges() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey"
@@ -1148,21 +1138,16 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    if (
-        mtime_token(sf_dir, "lineitem") is not None
-        and mtime_token(sf_dir, "orders") is not None
-    ):
-        e = load_or_build_frame(
-            spark,
-            "hits_cp_edges",
-            sf_dir,
-            "lineitem",
-            "c bigint, p bigint",
-            _build_edges,
-            extra_tables=("orders",),
-        )
-    else:
-        e = _build_edges().localCheckpoint()
+    e = load_or_build_frame(
+        spark,
+        "hits_cp_edges",
+        sf_dir,
+        "lineitem",
+        "c bigint, p bigint",
+        _build_edges,
+        extra_tables=("orders",),
+        loader=load_table,
+    )
     h = e.select("c").distinct().withColumn(
         "h", F.lit(_HITS_SCALE).cast("bigint")
     )
@@ -1372,7 +1357,7 @@ def graph_linkpred_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared neighbor that touches everything is weak evidence; a rare
     shared neighbor is strong).
 
-    Plan: the same session-cached DEGREE-ORIENTED edge set, but the
+    Plan: the same stored DEGREE-ORIENTED edge set, but the
     3-class wedge enumeration KEEPS the middle — whose degree already
     rides the oriented rows (dlo/dhi), so no degree join is needed at
     all on the Spark side (the orientation precomputed it).  Each
@@ -1393,7 +1378,8 @@ def graph_linkpred_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     edges = lsh_candidate_edges(spark, sf_dir)
-    oe = _wide_oe(lsh_oriented_edges(spark, sf_dir))
+    # aggregating consumer: widen per the _oriented_wedges rule
+    oe = widen_scan(lsh_oriented_edges(spark, sf_dir), "lo", "hi")
     a, b = oe.alias("a"), oe.alias("b")
     ka_hi = F.struct(F.col("a.dhi"), F.col("a.hi"))
     kb_hi = F.struct(F.col("b.dhi"), F.col("b.hi"))
@@ -1527,7 +1513,7 @@ def graph_modularity_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     Q = sum_c (e_c/m - (d_c/2m)^2) clears fractions to ONE exact
     integer rational (4m*sum(e_c) - sum(d_c^2)) / (4m^2) — intra-edge
     counts and community degree sums are exact BIGINTs off the shared
-    cached edge set, rendered by the signed half-up recipe (Q can be
+    stored edge set, rendered by the signed half-up recipe (Q can be
     negative).  The LPA rounds re-run the graph_lpa_communities loop
     verbatim (fixed 2 synchronous rounds, (count DESC, label ASC)
     plurality).  Scale shape: per round one neighbor join + per-node

@@ -28,8 +28,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eecs485_p4_mapreduce_spark.functions import kmeansfn
-from eecs485_p4_mapreduce_spark.functions.kmeansfn import loader_tag
-from eecs485_p4_mapreduce_spark.functions.memo import LRU, mtime_token
 from eecs485_p4_mapreduce_spark.functions.modelstore import load_or_train
 from eecs485_p4_mapreduce_spark.functions.numeric import (
     hu_ratio,
@@ -191,7 +189,7 @@ def embedding_kmeans_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    cdf, final = _lloyds_assignments(spark, e, cache_key=(sf_dir, load_table), sf_dir=sf_dir)
+    cdf, final = _lloyds_assignments(spark, e, sf_dir=sf_dir, loader=load_table)
     norm = F.expr(
         "aggregate(zip_with(cv, cv, (x, y) -> x * y), cast(0.0 as double),"
         " (acc, x) -> acc + x)"
@@ -252,7 +250,7 @@ def knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    _, assigned = _lloyds_assignments(spark, e, cache_key=(sf_dir, load_table), sf_dir=sf_dir)
+    _, assigned = _lloyds_assignments(spark, e, sf_dir=sf_dir, loader=load_table)
     corpus = assigned.select("vec_id", "v", "k")
     q = F.broadcast(
         corpus.filter(F.col("vec_id") < _IVF_NQ).select(
@@ -328,22 +326,13 @@ def _pq_assign(sub: DataFrame, cdf: DataFrame) -> DataFrame:
     )
 
 
-# In-memory front of the trained PQ codebook (same discipline as
-# kmeansfn._CENTROID_CACHE: bounded LRU, mtime-keyed, persisted model
-# store behind it).
-_PQ_CB_CACHE = LRU()
-
-
-def _pq_codebook(
-    spark: SparkSession, sub: DataFrame, sf_dir: str | None = None
-) -> DataFrame:
+def _pq_codebook(spark: SparkSession, sub: DataFrame, sf_dir: str) -> DataFrame:
     """Train the per-subspace codebooks: deterministic init (codeword k =
     vec_id k's subvector), then _PQ_ROUNDS Lloyd updates with
     decimal-exact component means.  Only the M x K x SUB codebook (256
-    doubles) reaches the driver between rounds — and with ``sf_dir`` it
-    is read back from the persisted model store
-    (functions/modelstore.py) instead of retrained, so repeated PQ
-    queries skip every training job."""
+    doubles) reaches the driver between rounds — and it is read back
+    from the model store (functions/modelstore.py) instead of
+    retrained, so repeated PQ queries skip every training job."""
 
     def train() -> list[tuple]:
         init = sub.filter(F.col("vec_id") < _PQ_K).select(
@@ -371,24 +360,7 @@ def _pq_codebook(
         return cb
 
     schema = "m bigint, k bigint, cv array<double>"
-    if sf_dir is None:
-        return spark.createDataFrame(train(), schema)
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        mtime_token(sf_dir, "embeddings"),
-        load_table,
-    )
-    cb = _PQ_CB_CACHE.get(key)
-    if cb is None:
-        cb = load_or_train(
-            spark,
-            loader_tag("pqcb", (sf_dir, load_table)),
-            sf_dir,
-            schema,
-            train,
-        )
-        _PQ_CB_CACHE.put(key, cb)
+    cb = load_or_train(spark, "pqcb", sf_dir, schema, train, loader=load_table)
     return spark.createDataFrame(cb, schema)
 
 
@@ -716,7 +688,7 @@ def eval_ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     _, assigned = _lloyds_assignments(
-        spark, e, cache_key=(sf_dir, load_table), sf_dir=sf_dir
+        spark, e, sf_dir=sf_dir, loader=load_table
     )
     # four self-references below (both query sets + both probe sides):
     # checkpoint the assigned corpus once so the trained-assignment
@@ -809,8 +781,8 @@ def ml_kmeans_inertia(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean squared distance is under-split (an IVF list that over-scans)
     and a near-empty one is wasted capacity.
 
-    Composes the shared ``_lloyds_assignments`` training (cached +
-    model-store persisted, so this readout costs one assignment join
+    Composes the shared ``_lloyds_assignments`` training (stored in
+    the derived-state store, so this readout costs one assignment join
     when the quantizer is already trained) and proves the whole
     training + distance accounting against the unrolled-CTE oracle.
 
@@ -826,7 +798,7 @@ def ml_kmeans_inertia(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     cdf, assigned = _lloyds_assignments(
-        spark, e, cache_key=(sf_dir, load_table), sf_dir=sf_dir
+        spark, e, sf_dir=sf_dir, loader=load_table
     )
     dsq = F.expr(
         "round(aggregate(zip_with(v, v, (x, y) -> x * y), cast(0.0 as double),"

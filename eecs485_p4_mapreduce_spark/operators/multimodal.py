@@ -31,7 +31,7 @@ from pyspark.sql.types import (
 )
 
 from eecs485_p4_mapreduce_spark.plans.registry import query
-from eecs485_p4_mapreduce_spark.sources import load_table
+from eecs485_p4_mapreduce_spark.sources import load_table, widen_scan
 
 
 def with_payload(docs: DataFrame) -> DataFrame:
@@ -422,8 +422,6 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured 2.1-3.0 s -> 0.5-0.8 s at sf0.1).  Conditional + keyed
     # (widen_scan): a wide production scan never pays the extra
     # exchange, and the deterministic key is retry-safe.
-    from eecs485_p4_mapreduce_spark.sources import widen_scan
-
     base = widen_scan(base, "doc_id")
     ph = (
         base

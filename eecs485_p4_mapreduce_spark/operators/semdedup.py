@@ -99,7 +99,7 @@ def dedup_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    _, assigned_raw = _lloyds_assignments(spark, e, cache_key=(sf_dir, load_table), sf_dir=sf_dir)
+    _, assigned_raw = _lloyds_assignments(spark, e, sf_dir=sf_dir, loader=load_table)
     # referenced three times (both pair sides + the final left join);
     # without the pin each reference replays the broadcast-centroid
     # assignment window (measured ~2x of the query).  Norms are cached

@@ -877,22 +877,18 @@ def _bpe_train_readout(
     hit) folds ALL stored rounds into one stacked-replace projection —
     a single job with the readout's pair-count exchange as its only
     shuffle."""
-    from eecs485_p4_mapreduce_spark.functions.kmeansfn import loader_tag
-    from eecs485_p4_mapreduce_spark.functions.modelstore import (
-        load_model,
-        store_model,
-    )
+    from eecs485_p4_mapreduce_spark.functions.modelstore import load_or_train
 
-    tag = loader_tag(tag_name, (sf_dir, load_table))
-    merges = load_model(spark, tag, sf_dir, table="documents")
     docs = load_table(spark, sf_dir, "documents")
     st = _bpe_string_frame(docs)
-    if merges is None:
-        st = st.localCheckpoint()
+    trained: list[DataFrame] = []  # the miss path's final string state
+
+    def train() -> list[tuple]:
+        cur = st.localCheckpoint()
         merges = []
         for i in range(rounds):
             top1 = (
-                _bpe_pairs(st)
+                _bpe_pairs(cur)
                 .groupBy("tok", "nxt")
                 .agg(F.count("*").alias("cnt"))
                 .orderBy(F.desc("cnt"), "tok", "nxt")
@@ -901,19 +897,25 @@ def _bpe_train_readout(
             )
             if top1:
                 merges.append((i, top1[0]["tok"], top1[0]["nxt"]))
-                st = st.select(
+                cur = cur.select(
                     _bpe_apply_pair_str(
                         F.col("s"), top1[0]["tok"], top1[0]["nxt"]
                     ).alias("s")
                 ).localCheckpoint()
-        store_model(
-            spark,
-            tag,
-            sf_dir,
-            "round bigint, pa varchar, pb varchar",
-            merges,
-            table="documents",
-        )
+        trained.append(cur)
+        return merges
+
+    merges = load_or_train(
+        spark,
+        tag_name,
+        sf_dir,
+        "round bigint, pa varchar, pb varchar",
+        train,
+        table="documents",
+        loader=load_table,
+    )
+    if trained:
+        st = trained[0]
     else:
         s_col = F.col("s")
         for _, pa, pb in merges:
@@ -1736,7 +1738,6 @@ def token_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     join of the two exploded-stream groupings (an empty doc has no row
     in either).  The oracle replays selection AND all three
     applications in one monolithic statement."""
-    from eecs485_p4_mapreduce_spark.functions.kmeansfn import loader_tag
     from eecs485_p4_mapreduce_spark.functions.modelstore import load_or_train
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1755,11 +1756,12 @@ def token_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     merge_table = load_or_train(
         spark,
-        loader_tag("bpe_frozen", (sf_dir, load_table)),
+        "bpe_frozen",
         sf_dir,
         "rank bigint, pa varchar, pb varchar",
         train,
         table="documents",
+        loader=load_table,
     )
     s_col = F.col("s")
     for _, pa, pb in merge_table:

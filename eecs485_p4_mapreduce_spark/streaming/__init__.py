@@ -24,6 +24,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eecs485_p4_mapreduce_spark.functions.confscope import stream_session
+from eecs485_p4_mapreduce_spark.functions.memo import (
+    BAND_INDEX_TABLES,
+    mtime_token,
+)
 from eecs485_p4_mapreduce_spark.functions.numeric import dsum, dsum_sql
 from eecs485_p4_mapreduce_spark.plans.registry import query
 from eecs485_p4_mapreduce_spark.sources import load_table
@@ -60,6 +64,7 @@ def run_to_completion(
     *,
     mode: str = "complete",
     state_partitions: int | None = None,
+    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Run a streaming aggregation to completion (availableNow) into a
     memory sink; return the final table as a batch DataFrame.
@@ -78,11 +83,14 @@ def run_to_completion(
     layout multiplies the per-partition commit cost (a stream-stream
     join store commits FOUR sub-stores per partition per batch, so its
     file count is 4 x width x batches) — the operator env var still
-    wins, so one cluster-side setting scales every query together."""
+    wins, so one cluster-side setting scales every query together.
+
+    ``checkpoint_dir`` is for callers that read the query's checkpoint
+    afterwards (the state-store reader); default a fresh temp dir."""
     import os
 
     name = f"sg_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="spark-graft-ckpt-")
+    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="spark-graft-ckpt-")
     spark = stream_df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     width = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
@@ -633,11 +641,6 @@ def _streaming_minhash_oracle() -> str:
     """
 
 
-# session-scoped band-index tables already materialized (app, sf_dir) ->
-# table name; same immutable-sf_dir discipline as dedup._SIG_CACHE
-_BAND_INDEX_TABLES: dict[tuple, str] = {}
-
-
 def _band_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STORED banded signature index the streaming probe joins
     against: corpus-side (doc_id < SPLIT) bands written ONCE per session
@@ -649,14 +652,20 @@ def _band_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     free (zero static-side exchange); while the index is measured small
     the planner still broadcasts it — both scales get the right plan
     without a forced hint.  Bucket count is the local stream-state
-    width; a cluster deployment sizes it to corpus/bucket-target."""
+    width; a cluster deployment sizes it to corpus/bucket-target.
+
+    Keyed (and named) by the documents mtime token too: a corpus
+    rewritten in place during one application gets a fresh index built
+    from the same signatures the stream probes with, never the old
+    corpus's bands."""
     import hashlib
 
     from eecs485_p4_mapreduce_spark.functions.minhashfn import SPLIT as _SPLIT
     from eecs485_p4_mapreduce_spark.operators.dedup import minhash_signatures
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    name = _BAND_INDEX_TABLES.get(key)
+    token = mtime_token(sf_dir, "documents")
+    key = (spark.sparkContext.applicationId, sf_dir, token)
+    name = BAND_INDEX_TABLES.get(key)
     if name is not None:
         # Keep the liveness signal honest for the sibling GC below: a
         # write-once dir's mtime never advances on its own, so a
@@ -675,7 +684,7 @@ def _band_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             # swept out from under us (idle past the TTL on a shared
             # warehouse) — evict and rebuild below instead of returning
             # a table whose files are gone
-            _BAND_INDEX_TABLES.pop(key, None)
+            BAND_INDEX_TABLES.pop(key, None)
             name = None
     if name is None:
         # The name mixes in the applicationId: two applications sharing
@@ -692,7 +701,7 @@ def _band_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.sparkContext.applicationId.encode()
         ).hexdigest()[:6]
         dir_tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        name = f"sg_band_index_{dir_tag}_{app_tag}"
+        name = f"sg_band_index_{dir_tag}_{token or 0}_{app_tag}"
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
         loc = os.path.join(wh, name)
@@ -700,11 +709,13 @@ def _band_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(loc)  # orphan: the DROP above removed any
             # catalog entry this application could have had
         # GC sibling orphans from DEAD applications: same corpus tag,
-        # different app tag, untouched for > SPARK_GRAFT_INDEX_TTL_H
-        # hours (default 72).  "Untouched" means NOT QUERIED: the
-        # cache-hit path above utimes the owner's dir on every re-read,
-        # so a live application's index stays younger than the TTL as
-        # long as it queries at least once per TTL window.  A live app
+        # any other mtime/app tag (the prefix also matches the older
+        # token-less ``sg_band_index_<dir>_<app>`` names), untouched for
+        # > SPARK_GRAFT_INDEX_TTL_H hours (default 72).  "Untouched"
+        # means NOT QUERIED: the cache-hit path above utimes the owner's
+        # dir on every re-read, so a live application's index stays
+        # younger than the TTL as long as it queries at least once per
+        # TTL window.  A live app
         # idle on this corpus for the entire TTL can still lose its
         # index; the cache-hit path detects the missing dir and
         # rebuilds, so the cost is one rebuild, never a broken read.
@@ -736,7 +747,7 @@ def _band_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             .sortBy("b", "band_hash")
             .saveAsTable(name)
         )
-        _BAND_INDEX_TABLES[key] = name
+        BAND_INDEX_TABLES[key] = name
     return spark.table(name)
 
 
@@ -1347,34 +1358,15 @@ def source_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted result comes from the STATE FILES.  At scale the state
     source reads the per-partition state stores in parallel straight
     from the checkpoint filesystem, no running query required."""
-    import os
-
     # Stream start, shuffle-width conf, and statestore read all on the
-    # streaming child (the run_to_completion discipline, inlined).
+    # streaming child.
     spark = stream_session(spark)
     ev = events_stream(spark, sf_dir)
     agg = ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         F.count("*").alias("n")
     )
-    name = f"sg_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="spark-graft-statesrc-")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"),
-    )
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_to_completion(agg, checkpoint_dir=ckpt)
     st = spark.read.format("statestore").load(ckpt)
     return st.select(
         F.col("key.window.start").alias("window_start"),

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -900,23 +901,73 @@ def test_with_running_max_matches_window_hwm(spark):
         assert gxmap[r["seq"]] == r["hwm"], r
 
 
-def test_minhash_signature_cache_shared_across_queries(spark, sf_dir):
-    """Two different minhash-family queries in one session must reuse the
-    SAME materialized signature frame — the stored-signature-table
-    stand-in.  A cache regression re-introduces the ~5s-per-query
-    signature rebuild the bench tail used to pay."""
+def test_minhash_signature_cache_shared_across_queries(spark, sf_dir, monkeypatch):
+    """Every minhash-family query in a session reads the SAME stored
+    signature table: once published, a call runs no signature build and
+    plans a parquet scan of the published location.  A store regression
+    re-introduces the ~5s-per-query signature rebuild the bench tail
+    used to pay."""
+    from eecs485_p4_mapreduce_spark.functions import modelstore
+    from eecs485_p4_mapreduce_spark.functions.memo import mtime_token
     from eecs485_p4_mapreduce_spark.operators import dedup
 
-    sig1, _ = dedup.minhash_signatures(spark, sf_dir)
-    key_count = len(dedup._SIG_CACHE)  # entry may predate this test
-    sig2, _ = dedup.minhash_signatures(spark, sf_dir)
-    # both calls resolve to the SAME stored global-temp-view (one
-    # materialized signature RDD), even though each returns a fresh
-    # session-bound wrapper
-    p1 = sig1._jdf.queryExecution().analyzed()
-    p2 = sig2._jdf.queryExecution().analyzed()
-    assert p1.sameResult(p2)
-    assert len(dedup._SIG_CACHE) == key_count  # hit, not a new entry
+    dedup.minhash_signatures(spark, sf_dir)  # may build (first use)
+    monkeypatch.setattr(
+        dedup, "_minhash_banded", lambda *a: pytest.fail("signatures rebuilt")
+    )
+    sig, _ = dedup.minhash_signatures(spark, sf_dir)
+    loc = modelstore.model_location(
+        spark,
+        modelstore.loader_tag("minhash_sigs", dedup.load_table),
+        sf_dir,
+        mtime_token(sf_dir, "documents"),
+    )
+    assert "FileScan parquet" in sig._jdf.queryExecution().executedPlan().toString()
+    files = sig.inputFiles()
+    assert files and all(loc in f for f in files)
+
+
+def test_unkeyable_corpus_pins_frame_and_publishes_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """An injected corpus (monkeypatched loader, no readable mtime under
+    ``sf_dir``) cannot key the store: the derived frame is built and
+    pinned once with localCheckpoint, and nothing is published."""
+    from eecs485_p4_mapreduce_spark.functions import modelstore
+    from eecs485_p4_mapreduce_spark.operators import dedup
+
+    wh = tmp_path / "wh"
+    monkeypatch.setattr(modelstore, "warehouse_path", lambda s: str(wh))
+    docs = spark.createDataFrame(
+        [Row(doc_id=i, text=f"document number {i} of the injected corpus",
+             lang="en", source="s", n_chars=40) for i in range(4)]
+    )
+    monkeypatch.setattr(dedup, "load_table", lambda spark_, sf, name: docs)
+    sig, _ = dedup.minhash_signatures(spark, "unused")
+    assert sig.count() == 4
+    assert "LogicalRDD" in sig._jdf.queryExecution().analyzed().toString()
+    assert not wh.exists() or not list(wh.iterdir())
+
+
+def test_store_location_depends_on_loader(spark, sf_dir, tmp_path, monkeypatch):
+    """The same ``sf_dir`` read through a different loader resolves to a
+    different store location, so a monkeypatched loader can neither
+    read nor overwrite the real corpus's stored frame."""
+    from eecs485_p4_mapreduce_spark.functions import modelstore
+    from eecs485_p4_mapreduce_spark.operators import dedup
+
+    wh = tmp_path / "wh"
+    monkeypatch.setattr(modelstore, "warehouse_path", lambda s: str(wh))
+    dedup.minhash_signatures(spark, sf_dir)
+    first = {p.name for p in wh.iterdir()}
+    real = dedup.load_table
+    monkeypatch.setattr(dedup, "load_table", lambda *a: real(*a))
+    dedup.minhash_signatures(spark, sf_dir)
+    second = {p.name for p in wh.iterdir()} - first
+    assert len(first) == 1 and len(second) == 1
+    (a,), (b,) = first, second
+    assert a.startswith("sg_model_minhash_sigs_")
+    assert b.startswith("sg_model_minhash_sigs_") and a != b
 
 
 def test_url_canonicalization_collapses_variants(spark):

@@ -798,3 +798,34 @@ def test_idle_timeout_exact_watermark_boundary_stays_open(spark, tmp_path):
         for u, s, e, n, c in con.execute(spec.oracle).fetchall()
     )
     assert oracle == got, oracle
+
+
+def test_band_index_follows_in_place_corpus_rewrite(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The streaming MinHash band index is keyed on the documents mtime:
+    a corpus rewritten in place during one application gets an index
+    built from the NEW corpus, matching the signatures the stream
+    probes with, instead of the old corpus's bands."""
+    import shutil
+
+    import duckdb
+
+    from eecs485_p4_mapreduce_spark.functions import modelstore
+    from eecs485_p4_mapreduce_spark.streaming import _band_index_table
+
+    monkeypatch.setattr(modelstore, "warehouse_path", lambda s: str(tmp_path / "wh"))
+    src = os.path.join(sf_dir, "documents.parquet")
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    shutil.copy(src, corpus / "documents.parquet")
+    n_full = _band_index_table(spark, str(corpus)).count()
+
+    half = tmp_path / "half.parquet"
+    duckdb.connect().execute(
+        f"COPY (SELECT * FROM '{src}' WHERE doc_id % 2 = 0) TO '{half}'"
+        " (FORMAT PARQUET)"
+    )
+    os.replace(half, corpus / "documents.parquet")
+    n_half = _band_index_table(spark, str(corpus)).count()
+    assert 0 < n_half < n_full

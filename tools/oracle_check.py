@@ -117,14 +117,11 @@ def _release_blocks(spark) -> None:
     every prior query's localCheckpoint RDD blocks in the driver heap —
     at --chunk 48 on a vanilla 1g JVM, ~20 predecessors' blocks OOM'd
     graph_centrality_2hop even though it passes isolated.  Once a
-    query's rows are collected its blocks are garbage, EXCEPT those
-    referenced by the memo caches — so release in dependency order:
-    clear the memo LRUs first (their eviction callbacks drop global
-    temp views / unpersist, and the next hit re-reads the PUBLISHED
-    parquet derived frame rather than recomputing), then the SQL cache,
-    then unpersist whatever persistent RDDs remain.  Heap is now
-    bounded by ONE query's state; chunk size is no longer
-    load-bearing."""
+    query's rows are collected its blocks are garbage (stored models
+    and derived frames are parquet on disk, never session memory) — so
+    forget the session's band-index names, clear the SQL cache, then
+    unpersist whatever persistent RDDs remain.  Heap is now bounded by
+    ONE query's state; chunk size is no longer load-bearing."""
     try:
         from eecs485_p4_mapreduce_spark.functions.memo import (
             clear_all_caches,
@@ -173,7 +170,8 @@ def main() -> int:
     if vanilla:
         from pyspark.sql import SparkSession
 
-        spark = SparkSession.builder.master("local[32]").getOrCreate()
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
+        spark = SparkSession.builder.master(f"local[{cpus}]").getOrCreate()
     else:
         spark = get_spark("oracle-check")
     failures = 0

@@ -16,6 +16,7 @@ from __future__ import annotations
 import argparse
 import io
 import os
+import statistics
 import sys
 import time
 from contextlib import redirect_stdout
@@ -73,8 +74,6 @@ def main() -> None:
         rs = [run_once(name) for _ in range(args.runs)]
         # statistics.median averages the middle pair on even --runs;
         # the old upper-middle pick biased even-run medians upward.
-        import statistics
-
         med = statistics.median(rs)
         print(
             f"{name:45s} med={med:7.3f}  runs=" + " ".join(f"{r:.3f}" for r in rs),
