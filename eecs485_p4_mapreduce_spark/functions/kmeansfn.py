@@ -18,7 +18,10 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from eecs485_p4_mapreduce_spark.functions.modelstore import load_or_train
+from eecs485_p4_mapreduce_spark.functions.modelstore import (
+    load_or_train,
+    local_frame,
+)
 
 D = 64          # embedding dim
 KM_K = 8        # clusters (the IVF nlist)
@@ -68,7 +71,7 @@ def lloyds_assignments(
         )
         cents = [(int(r["k"]), list(r["cv"])) for r in init.collect()]
         for _ in range(KM_ROUNDS):
-            cdf = spark.createDataFrame(cents, "k bigint, cv array<double>")
+            cdf = local_frame(spark, cents, "k bigint, cv array<double>")
             assigned = km_assign(e, cdf)
             means = (
                 assigned.select("k", F.posexplode("v").alias("d0", "x"))
@@ -94,7 +97,7 @@ def lloyds_assignments(
     centroids = load_or_train(
         spark, "kmeans", sf_dir, schema, train, loader=loader
     )
-    cdf = spark.createDataFrame(centroids, schema)
+    cdf = local_frame(spark, centroids, schema)
     return cdf, km_assign(e, cdf)
 
 

@@ -33,6 +33,10 @@ entry points; each owns the whole mechanism:
   is published; a model is trained per call, and a frame is built and
   pinned once with ``localCheckpoint()`` so its consumers do not replay
   the derivation per reference.
+
+:func:`local_frame` turns driver-sized rows (a stored model, a loop's
+current vector, a literal dimension) into a DataFrame through the same
+DDL -> Arrow mapping the store publishes with.
 """
 
 from __future__ import annotations
@@ -44,7 +48,7 @@ import uuid
 from typing import Callable
 from urllib.parse import urlparse
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from eecs485_p4_mapreduce_spark.functions.memo import mtime_token
 
@@ -107,22 +111,42 @@ def _location(
     return model_location(spark, loader_tag(kind, loader), sf_dir, token)
 
 
-def _pa_schema(schema: str):
-    """DDL-ish model schema ("k bigint, pa varchar, cv array<double>")
-    -> pyarrow."""
+def _arrow_table(rows: list[tuple], ddl: str):
+    """(Spark struct, pyarrow Table) of ``rows`` under the DDL schema
+    ``ddl`` ("k bigint, cv array<double>"): the one DDL -> Arrow
+    mapping, shared by :func:`local_frame` and the model store's
+    publish."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
 
-    types = {
-        "bigint": pa.int64(),
-        "varchar": pa.string(),
-        "string": pa.string(),
-        "array<double>": pa.list_(pa.float64()),
-    }
-    fields = []
-    for part in schema.split(","):
-        name, typ = part.strip().split(" ", 1)
-        fields.append(pa.field(name, types[typ.strip()]))
-    return pa.schema(fields)
+    struct = DataType.fromDDL(ddl)
+    schema = to_arrow_schema(struct)
+    # zip(*[]) is [] — pad to one empty column per field so an empty
+    # row list still yields a schema-correct zero-row table
+    cols = list(zip(*rows)) or [[] for _ in schema]
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)],
+        schema=schema,
+    )
+    return struct, table
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """Driver-sized ``rows`` (centroids, codebooks, literal dimensions)
+    as a DataFrame with the DDL schema ``ddl``, built as a JVM local
+    relation.
+
+    The rows travel as one Arrow table, and below
+    ``spark.sql.execution.arrow.localRelationThreshold`` Spark plans
+    them as a ``LocalTableScan`` — no task reads them and no Python
+    worker starts.  ``spark.createDataFrame(<python list>)`` instead
+    parallelizes the rows and re-serializes them through a Python
+    ``map``, so every run of a plan holding such a frame starts one
+    Python worker per local core.  The Arrow path reads no conf, so it
+    behaves the same in a vanilla session."""
+    struct, table = _arrow_table(rows, ddl)
+    return spark.createDataFrame(table, struct)
 
 
 def _read_rows(loc: str) -> list[tuple] | None:
@@ -141,20 +165,11 @@ def _read_rows(loc: str) -> list[tuple] | None:
 
 def _publish_rows(loc: str, schema: str, rows: list[tuple]) -> None:
     """Atomically publish ``rows`` as the model at ``loc``."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     tmp = loc + ".tmp-" + uuid.uuid4().hex[:8]
     os.makedirs(tmp, exist_ok=True)
-    pa_schema = _pa_schema(schema)
-    # zip(*[]) is [] — pad to one empty column per field so an empty
-    # corpus publishes a schema-correct zero-row model instead of
-    # crashing Table.from_arrays with a schema/array-count mismatch
-    cols = list(zip(*rows)) or [[] for _ in pa_schema]
-    table = pa.Table.from_arrays(
-        [pa.array(list(c), type=f.type) for c, f in zip(cols, pa_schema)],
-        schema=pa_schema,
-    )
+    _, table = _arrow_table(rows, schema)
     pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
     open(os.path.join(tmp, "_SUCCESS"), "w").close()
     try:
@@ -241,11 +256,13 @@ def load_or_train(
     and publishes nothing.
 
     The model is driver-sized (KB), so publish/read go through pyarrow
-    directly — no Spark job.  (A Spark write of a Python-local 8-row
-    frame costs ~4 s: ``coalesce(1)`` funnels every parallelize
-    partition's Python-runner round-trip through one task.  The dir is
-    still plain parquet + _SUCCESS, readable by ``spark.read.parquet``
-    on a cluster.)"""
+    directly — no Spark job.  (A Spark write of an 8-row frame built
+    with ``spark.createDataFrame(<python list>)`` cost ~4 s: its rows
+    sit in a Python RDD, so every partition ran through a Python worker
+    — the cost :func:`local_frame` avoids.  The dir is still plain
+    parquet + _SUCCESS, readable by ``spark.read.parquet`` on a
+    cluster.)  ``schema`` is Spark DDL, mapped to Arrow as in
+    :func:`local_frame`."""
     loc = _location(spark, kind, sf_dir, table, (), loader)
     if loc is not None:
         rows = _read_rows(loc)

@@ -9,7 +9,9 @@ exe path computes exactly what the DataFrame plans compute.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import sys
 import tempfile
 
@@ -50,7 +52,6 @@ def _materialize_docs(
     text files on shared storage; this adapter exists to feed the compat
     path its native format at any scale."""
     import glob
-    import shutil
 
     staging = dest + ".staging"
     (
@@ -87,7 +88,14 @@ def _materialize_docs(
 def _run_job(
     spark: SparkSession, sf_dir: str, mapper: str, reducer: str, *, with_id: bool = False
 ) -> list[str]:
+    """Run one exe-compat job over documents; return its part files.
+
+    The text copy of documents under ``input/`` is removed as soon as
+    the job returns.  The part files under ``output/`` stay until
+    interpreter exit (the modelstore atexit convention): the caller's
+    frame reads them lazily, on every action."""
     work = tempfile.mkdtemp(prefix="spark-graft-mr-")
+    atexit.register(shutil.rmtree, work, ignore_errors=True)
     in_dir = os.path.join(work, "input")
     out_dir = os.path.join(work, "output")
     os.makedirs(in_dir)
@@ -100,7 +108,10 @@ def _run_job(
         num_mappers=4,
         num_reducers=2,
     )
-    return job.run(spark)
+    try:
+        return job.run(spark)
+    finally:
+        shutil.rmtree(in_dir, ignore_errors=True)
 
 
 

@@ -1893,8 +1893,6 @@ def dedup_containment_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_a on equal sizes.  Scale shape: gram df is a map-side-
     combinable aggregate; only rare-gram postings join; the verify
     joins candidates (bounded) back to the materialized gram arrays."""
-    from eecs485_p4_mapreduce_spark.sources import widen_scan
-
     # 4-gram transform off the compact scan's single core (the
     # dedup_ngram_jaccard fix)
     docs = widen_scan(load_table(spark, sf_dir, "documents"), "doc_id")

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eecs485_p4_mapreduce_spark.functions.confscope import conf_scoped_session
+from eecs485_p4_mapreduce_spark.functions.modelstore import local_frame
 from eecs485_p4_mapreduce_spark.functions.numeric import davg_sql, dsum, dsum_sql, davg
 from eecs485_p4_mapreduce_spark.plans.registry import query
 from eecs485_p4_mapreduce_spark.sources import load_table
@@ -182,9 +183,7 @@ def join_range_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny side; a banded equi-join pre-bucketing would be the 100 TB path
     for range joins against a *large* side)."""
     o = load_table(spark, sf_dir, "orders")
-    t = F.broadcast(
-        spark.createDataFrame(_TIERS, ["tier", "lo", "hi"])
-    )
+    t = F.broadcast(local_frame(spark, _TIERS, "tier string, lo double, hi double"))
     return (
         o.join(t, (o.o_totalprice >= t.lo) & (o.o_totalprice < t.hi))
         .groupBy("tier")

@@ -28,7 +28,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eecs485_p4_mapreduce_spark.functions import kmeansfn
-from eecs485_p4_mapreduce_spark.functions.modelstore import load_or_train
+from eecs485_p4_mapreduce_spark.functions.modelstore import (
+    load_or_train,
+    local_frame,
+)
 from eecs485_p4_mapreduce_spark.functions.numeric import (
     hu_ratio,
     hu_ratio_signed,
@@ -90,12 +93,13 @@ def embedding_top_pc_power_iteration(spark: SparkSession, sf_dir: str) -> DataFr
     """Top principal direction of the (uncentered) embedding matrix:
     v <- X^T X v / ||X^T X v||, {_ITERS} fixed iterations from v0 = 1.
 
-    Per iteration: broadcast v as a literal array, one scan computes each
-    row's dot x.v, posexplode multiplies it back against each component,
-    and a decimal-exact groupBy(d) reduces to the D-vector.  Only the
-    64-double result is collected (the pagerank-style driver loop --
-    data never moves).  Normalization runs on the driver as a sequential
-    d-ascending fold so it is bit-identical to the oracle's list_sum.
+    Per iteration: broadcast v as a one-row local relation, one scan
+    computes each row's dot x.v, posexplode multiplies it back against
+    each component, and a decimal-exact groupBy(d) reduces to the
+    D-vector.  Only the 64-double result is collected (the
+    pagerank-style driver loop -- data never moves).  Normalization runs
+    on the driver as a sequential d-ascending fold so it is
+    bit-identical to the oracle's list_sum.
     sigma (the final pre-normalization norm) estimates the top singular
     value of X^T X's action, i.e. lambda_1.
     """
@@ -104,13 +108,15 @@ def embedding_top_pc_power_iteration(spark: SparkSession, sf_dir: str) -> DataFr
     )
     v = [1.0] * _D
     for _ in range(_ITERS):
-        # v travels as broadcast DATA (1-row DataFrame), not as a literal
-        # array: with literals every iteration is a brand-new plan and
-        # whole-stage codegen recompiles (~1.5 s/iteration of pure JIT);
-        # with identical plan text the compiled stages are cache-hit from
-        # iteration 2 on (measured 11.5 s -> 6.4 s total at sf0.1,
-        # ~0.7 s/iteration steady-state).
-        vdf = spark.createDataFrame([(v,)], "vl array<double>")
+        # v travels as DATA, not as a literal array: with literals every
+        # iteration is a brand-new plan and whole-stage codegen
+        # recompiles (~1.5 s/iteration of pure JIT), while a data leaf
+        # keeps the generated code identical, so the compiled stages are
+        # cache-hit from iteration 2 on.  The leaf is a one-row local
+        # relation (local_frame): the JVM holds the 64 doubles and the
+        # plan reads them in a LocalTableScan, so an iteration starts no
+        # Python worker.
+        vdf = local_frame(spark, [(v,)], "vl array<double>")
         dotted = (
             e.crossJoin(F.broadcast(vdf))
             .withColumn("dot", F.expr(_DOT_V.format(vl="vl")))
@@ -137,7 +143,7 @@ def embedding_top_pc_power_iteration(spark: SparkSession, sf_dir: str) -> DataFr
     # round via Spark's SQL round (HALF_UP, matching the oracle's round),
     # not Python's round (HALF_EVEN)
     rows = [(d + 1, v[d], sigma) for d in range(_D)]
-    raw = spark.createDataFrame(rows, "d bigint, component double, sigma double")
+    raw = local_frame(spark, rows, "d bigint, component double, sigma double")
     return raw.select(
         "d", F.round("component", 6).alias("component"), F.round("sigma", 6).alias("sigma")
     )
@@ -340,7 +346,7 @@ def _pq_codebook(spark: SparkSession, sub: DataFrame, sf_dir: str) -> DataFrame:
         )
         cb = [(int(r["m"]), int(r["k"]), list(r["cv"])) for r in init.collect()]
         for _ in range(_PQ_ROUNDS):
-            cdf = spark.createDataFrame(cb, "m bigint, k bigint, cv array<double>")
+            cdf = local_frame(spark, cb, "m bigint, k bigint, cv array<double>")
             assigned = _pq_assign(sub, cdf)
             means = (
                 assigned.select("m", "k", F.posexplode("sv").alias("d0", "x"))
@@ -361,7 +367,7 @@ def _pq_codebook(spark: SparkSession, sub: DataFrame, sf_dir: str) -> DataFrame:
 
     schema = "m bigint, k bigint, cv array<double>"
     cb = load_or_train(spark, "pqcb", sf_dir, schema, train, loader=load_table)
-    return spark.createDataFrame(cb, schema)
+    return local_frame(spark, cb, schema)
 
 
 def _pq_oracle() -> str:
@@ -940,7 +946,7 @@ def embedding_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pick bigint, vec_id bigint, maximin bigint, coverage_radius bigint"
     )
     if not first:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
     def dist_to(center_qv: list[int]) -> F.Column:
         lit = "array(" + ",".join(f"{int(x)}L" for x in center_qv) + ")"
@@ -959,9 +965,7 @@ def embedding_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint()
 
     rad = cur.agg(F.max("mind").cast("bigint").alias("coverage_radius"))
-    pdf = spark.createDataFrame(
-        picks, "pick bigint, vec_id bigint, maximin bigint"
-    )
+    pdf = local_frame(spark, picks, "pick bigint, vec_id bigint, maximin bigint")
     return pdf.crossJoin(F.broadcast(rad))
 
 

@@ -21,7 +21,7 @@ from eecs485_p4_mapreduce_spark.functions.numeric import (
     hu_ratio_signed_sql,
 )
 from eecs485_p4_mapreduce_spark.plans.registry import query
-from eecs485_p4_mapreduce_spark.sources import load_table
+from eecs485_p4_mapreduce_spark.sources import load_table, widen_scan
 
 # Target language shares for the training mix (sums to 1).  At scale this
 # is the knob file reviewed per training run.
@@ -649,8 +649,6 @@ def mix_dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores token occurrences scan-side, and the per-doc sum is a
     map-side-combinable doc_id aggregate; nothing grows with the
     vocabulary."""
-    from eecs485_p4_mapreduce_spark.sources import widen_scan
-
     # tok (explode + md5 per token) is replayed by ct, cs AND the
     # scoring join — spread the scan so no replay runs on one core
     docs = widen_scan(load_table(spark, sf_dir, "documents"), "doc_id")

@@ -39,7 +39,7 @@ from eecs485_p4_mapreduce_spark.operators.mixing import (
     _SEQ_BUDGET,
 )
 from eecs485_p4_mapreduce_spark.plans.registry import query
-from eecs485_p4_mapreduce_spark.sources import load_table
+from eecs485_p4_mapreduce_spark.sources import load_table, widen_scan
 
 _LANGS = ("en", "de", "es", "fr", "zh")
 _MIN_WORDS = 20
@@ -264,8 +264,6 @@ def pipeline_rag_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed on (doc_id, chunk, dim); the hyperplane grid is a 64-row
     broadcast; nothing document-sized ever shuffles.
     """
-    from eecs485_p4_mapreduce_spark.sources import widen_scan
-
     # the chunk explode fans each token out ~2x and hashes it with two
     # md5 expressions before the first exchange — spread the compact
     # scan so that stage runs wide
@@ -622,8 +620,6 @@ def pipeline_decontam_mix_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         _BENCH_IDS,
         _NGRAM,
     )
-
-    from eecs485_p4_mapreduce_spark.sources import widen_scan
 
     # the DSIR token stream (explode + md5 per token over the clean
     # pool) is replayed by ct, cs and the scoring join; spreading the

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from eecs485_p4_mapreduce_spark.functions.modelstore import local_frame
 from eecs485_p4_mapreduce_spark.functions.textfn import DUCK_TOKENS, tokens
 from eecs485_p4_mapreduce_spark.functions.numeric import hu_ratio, hu_ratio_sql
 from eecs485_p4_mapreduce_spark.plans.registry import query
@@ -552,9 +553,7 @@ def search_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", F.array_distinct(tokens("text")).alias("toks")),
         "doc_id",
     ).select("doc_id", "rk", "toks")
-    q = spark.createDataFrame(
-        [(t,) for t in _QTERMS], "query_term string"
-    )
+    q = local_frame(spark, [(t,) for t in _QTERMS], "query_term string")
     hit = (
         F.broadcast(q)
         .join(top, F.array_contains(F.col("toks"), F.col("query_term")), "left")
@@ -662,7 +661,7 @@ def search_map_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "doc_id",
     ).select("rk", "toks")
-    q = spark.createDataFrame([(t,) for t in _QTERMS], "query_term string")
+    q = local_frame(spark, [(t,) for t in _QTERMS], "query_term string")
     rel = (
         F.broadcast(q)
         .join(

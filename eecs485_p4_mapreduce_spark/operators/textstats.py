@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from eecs485_p4_mapreduce_spark.functions.numeric import hu_ratio, hu_ratio_sql
 from eecs485_p4_mapreduce_spark.functions.textfn import DUCK_TOKENS, tokens
 from eecs485_p4_mapreduce_spark.plans.registry import query
-from eecs485_p4_mapreduce_spark.sources import load_table
+from eecs485_p4_mapreduce_spark.sources import load_table, widen_scan
 
 # n-gram/stopword profiles for the language-ID heuristic.  Tiny on purpose:
 # at scale these ship as a broadcast literal, not a join.
@@ -438,8 +438,6 @@ def quality_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan-aggregates plus two equi-joins, with frequency floors to cap
     vocab (not needed at test scale).
     """
-    from eecs485_p4_mapreduce_spark.sources import widen_scan
-
     # the bigram stream is replayed by THREE consumers (c2, c1, and the
     # scoring join) — without the keyed spread each replay regenerates
     # every bigram on the compact scan's one core
@@ -543,8 +541,8 @@ def token_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     Greedy non-overlapping application is the part engines usually drop
     to imperative code for; here it is ONE string replace per document
     over the delimited-string encoding (`_bpe_apply_pair_str`; the
-    window-kernel reference spelling lives in `_bpe_apply_pair`, and
-    the two are property-pinned equal).  The whole step is a pair-count
+    window-kernel reference spelling lives in the tests, and the two
+    are property-pinned equal).  The whole step is a pair-count
     aggregate (partial-agg shuffle of (tok, nxt) keys only), a bounded
     1-row top-pair collect (the kmeans-centroid model-state pattern,
     same as the training loop), a narrow per-doc replace, and the final
@@ -595,59 +593,6 @@ def token_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_ROUNDS = 3
 
 
-def _bpe_apply_pair(s: DataFrame, pa: str, pb: str, carry: tuple = ()) -> DataFrame:
-    """One greedy left-to-right, non-overlapping merge pass of the
-    CONSTANT pair (``pa``, ``pb``) over a (doc_id, pos, tok) stream —
-    the match/run-group/parity/consume window kernel.  Since round 13
-    this is the REFERENCE implementation only: the production BPE paths
-    apply merges through the equivalent `_bpe_apply_pair_str` string
-    kernel (zero exchanges/sorts per round), and
-    ``test_bpe_string_kernel_matches_window_kernel`` pins the two equal
-    on adversarial run corpora.  ``carry`` lists extra columns to
-    thread through.  Returns the re-numbered, localCheckpointed
-    stream."""
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    big = s.withColumn("nxt", F.lead("tok").over(w))
-    t2 = big.withColumn(
-        "match", (F.col("tok") == F.lit(pa)) & (F.col("nxt") == F.lit(pb))
-    )
-    g = t2.withColumn(
-        "grp",
-        F.col("pos")
-        - F.sum(F.when(F.col("match"), 1).otherwise(0)).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    wg = Window.partitionBy("doc_id", "grp")
-    mg = g.withColumn(
-        "merged",
-        F.when(
-            F.col("match")
-            & (
-                (F.col("pos") - F.min(F.when(F.col("match"), F.col("pos"))).over(wg))
-                % 2
-                == 0
-            ),
-            F.lit(True),
-        ).otherwise(F.lit(False)),
-    )
-    c = mg.withColumn(
-        "consumed", F.coalesce(F.lag("merged").over(w), F.lit(False))
-    )
-    return (
-        c.filter(~F.col("consumed"))
-        .select(
-            "doc_id",
-            *carry,
-            (F.row_number().over(w) - 1).alias("pos"),
-            F.when(F.col("merged"), F.concat("tok", F.lit(" "), "nxt"))
-            .otherwise(F.col("tok"))
-            .alias("tok"),
-        )
-        .localCheckpoint()
-    )
-
-
 def _bpe_doc_string(tokens_col) -> Column:
     """Render a doc's token array as the DOUBLE-newline-delimited string
     the string-replace merge kernel operates on::
@@ -667,10 +612,11 @@ def _bpe_doc_string(tokens_col) -> Column:
 def _bpe_apply_pair_str(s_col, pa: str, pb: str) -> Column:
     """One greedy left-to-right, non-overlapping merge pass of the
     CONSTANT pair (``pa``, ``pb``) as a SINGLE narrow string replace —
-    the round-13 respelling of the `_bpe_apply_pair` window kernel
-    (kept below as the reference implementation; equivalence is
-    property-pinned by ``test_bpe_string_kernel_matches_window_kernel``
-    on adversarial run corpora).
+    the round-13 respelling of the window kernel (whose reference
+    implementation, `_bpe_apply_pair`, lives next to
+    ``test_bpe_string_kernel_matches_window_kernel`` in
+    tests/test_operators_unit.py, which pins the two equal on
+    adversarial run corpora).
 
     Why it is the same function: on the `_bpe_doc_string` encoding,
     ``replace`` scans left to right and resumes AFTER each replacement
@@ -707,8 +653,6 @@ def _bpe_string_frame(docs: DataFrame, *carry: str) -> DataFrame:
     keyed via ``widen_scan`` (round-13 ADVICE: an already-wide
     production scan must not pay a keyless full exchange of document
     text per BPE query)."""
-    from eecs485_p4_mapreduce_spark.sources import widen_scan
-
     return widen_scan(docs, "doc_id").select(
         *carry, _bpe_doc_string(tokens("text")).alias("s")
     )
@@ -909,7 +853,7 @@ def _bpe_train_readout(
         spark,
         tag_name,
         sf_dir,
-        "round bigint, pa varchar, pb varchar",
+        "round bigint, pa string, pb string",
         train,
         table="documents",
         loader=load_table,
@@ -1090,8 +1034,6 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself across documents).  Shuffle keys are 3-gram strings and doc
     ids; the per-doc distinct keeps internal repeats from inflating
     document frequency."""
-    from eecs485_p4_mapreduce_spark.sources import widen_scan
-
     # the 3-gram stream is replayed by the df aggregate AND the marking
     # join — spread the compact scan first
     docs = widen_scan(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -1470,8 +1412,6 @@ def quality_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitwise stable.  Per-bucket means sum the already-rounded per-doc
     scores in decimal.
     """
-    from eecs485_p4_mapreduce_spark.sources import widen_scan
-
     # same three-consumer bigram replay as quality_bigram_surprisal —
     # spread the scan before the per-token transform
     docs = widen_scan(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -1758,7 +1698,7 @@ def token_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "bpe_frozen",
         sf_dir,
-        "rank bigint, pa varchar, pb varchar",
+        "rank bigint, pa string, pb string",
         train,
         table="documents",
         loader=load_table,
@@ -2653,7 +2593,6 @@ def preference_pairs_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         hu_ratio_signed,
     )
     from eecs485_p4_mapreduce_spark.functions.ranking import with_global_rank
-    from eecs485_p4_mapreduce_spark.sources import widen_scan
 
     # feat re-tokenizes the text for three feature columns in one
     # projection — spread the compact scan so it runs wide

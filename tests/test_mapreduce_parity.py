@@ -126,6 +126,39 @@ def test_grep_golden_parity(spark, tmp_path):
     assert sorted(_read_parts(out)) == sorted(expected)
 
 
+def test_mr_query_removes_its_input_copy(spark, sf_dir, monkeypatch):
+    """An mr_* query writes documents as text files into a temp work
+    dir.  That input copy is removed as soon as the job returns; the
+    part files stay for the returned frame, which reads them lazily,
+    and the work dir is registered for removal at exit."""
+    import shutil
+
+    from eecs485_p4_mapreduce_spark import mapreduce as mr
+
+    made, registered = [], []
+    real_mkdtemp = mr.tempfile.mkdtemp
+
+    def mkdtemp(*args, **kwargs):
+        made.append(real_mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(mr.tempfile, "mkdtemp", mkdtemp)
+    monkeypatch.setattr(
+        mr.atexit, "register", lambda fn, *a, **k: registered.append(a)
+    )
+    try:
+        df = mr.mr_grep(spark, sf_dir)
+        (work,) = [m for m in made if "spark-graft-mr-" in m]
+        assert not os.path.exists(os.path.join(work, "input"))
+        assert not os.path.exists(os.path.join(work, "input.staging"))
+        assert os.path.isdir(os.path.join(work, "output"))
+        assert (work,) in registered
+        assert df.count() > 0  # the frame still reads its part files
+    finally:
+        for w in made:
+            shutil.rmtree(w, ignore_errors=True)
+
+
 @needs_ref
 def test_two_jobs_fifo_isolated_outputs(spark, tmp_path):
     """Back-to-back job submission (ref tests/test_manager_03.py:58-104:

@@ -5,7 +5,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from pyspark.sql import Row
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 from eecs485_p4_mapreduce_spark.functions.numeric import dsum
@@ -2065,11 +2065,60 @@ def test_token_budget_allocators_zero_token_source(spark, tmp_path):
         assert drows["empty"][epochs_idx] is None, name
 
 
+def _bpe_apply_pair(s: DataFrame, pa: str, pb: str) -> DataFrame:
+    """Reference BPE merge kernel: one greedy left-to-right,
+    non-overlapping merge pass of the CONSTANT pair (``pa``, ``pb``)
+    over a (doc_id, pos, tok) stream — the match/run-group/parity/
+    consume window kernel the oracles twin.  Production applies merges
+    through the equivalent string kernel `_bpe_apply_pair_str` (zero
+    exchanges/sorts per round); the test below pins the two equal.
+    Returns the re-numbered, localCheckpointed stream."""
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    big = s.withColumn("nxt", F.lead("tok").over(w))
+    t2 = big.withColumn(
+        "match", (F.col("tok") == F.lit(pa)) & (F.col("nxt") == F.lit(pb))
+    )
+    g = t2.withColumn(
+        "grp",
+        F.col("pos")
+        - F.sum(F.when(F.col("match"), 1).otherwise(0)).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ),
+    )
+    wg = Window.partitionBy("doc_id", "grp")
+    mg = g.withColumn(
+        "merged",
+        F.when(
+            F.col("match")
+            & (
+                (F.col("pos") - F.min(F.when(F.col("match"), F.col("pos"))).over(wg))
+                % 2
+                == 0
+            ),
+            F.lit(True),
+        ).otherwise(F.lit(False)),
+    )
+    c = mg.withColumn(
+        "consumed", F.coalesce(F.lag("merged").over(w), F.lit(False))
+    )
+    return (
+        c.filter(~F.col("consumed"))
+        .select(
+            "doc_id",
+            (F.row_number().over(w) - 1).alias("pos"),
+            F.when(F.col("merged"), F.concat("tok", F.lit(" "), "nxt"))
+            .otherwise(F.col("tok"))
+            .alias("tok"),
+        )
+        .localCheckpoint()
+    )
+
+
 def test_bpe_string_kernel_matches_window_kernel(spark):
     """Round-13 optimization proof: the narrow string-replace merge
     kernel (`_bpe_apply_pair_str`, zero exchanges/sorts per round) must
     produce byte-identical per-doc token streams to the proven window
-    kernel (`_bpe_apply_pair`, the oracle-twinned reference) under
+    kernel (`_bpe_apply_pair` above, the oracle-twinned reference) under
     adversarial merge sequences: runs of the repeated pair (parity
     rule), back-to-back occurrences (resume-after-replacement rule),
     hierarchical merges whose pair tokens already CONTAIN spaces, and
@@ -2080,7 +2129,6 @@ def test_bpe_string_kernel_matches_window_kernel(spark):
 
     from eecs485_p4_mapreduce_spark.functions.textfn import tokens
     from eecs485_p4_mapreduce_spark.operators.textstats import (
-        _bpe_apply_pair,
         _bpe_apply_pair_str,
         _bpe_string_frame,
     )

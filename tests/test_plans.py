@@ -880,6 +880,28 @@ def test_t_closeness_single_corpus_aggregate(spark, sf_dir):
     assert plan.count("Scan ExistingRDD") >= 3, plan[:2000]
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "knn_ivf_trained",
+        "embedding_kmeans_ivf_train",
+        "embedding_top_pc_power_iteration",
+        "ann_pq_adc",
+        "join_range_tiers",
+    ],
+)
+def test_driver_sized_frames_are_local_relations(name, spark, sf_dir):
+    """Centroids, the power-iteration vector, PQ codebooks and the tier
+    dimension are built with modelstore.local_frame, so they plan as a
+    LocalTableScan.  A ``Scan ExistingRDD`` here would be a Python-list
+    createDataFrame, whose every run starts Python workers.  (Queries
+    that localCheckpoint on purpose, like eval_ann_recall_ivf, plan an
+    ExistingRDD leaf for that and are not listed.)"""
+    plan = explain(spark, sf_dir, name)
+    assert "Scan ExistingRDD" not in plan, plan[:2000]
+    assert "LocalTableScan" in plan
+
+
 def test_ann_recall_probes_list_and_broadcasts_topk(spark, sf_dir):
     """eval_ann_recall_ivf's IVF side must stay the equi-join list probe
     (BroadcastHashJoin on k) and the only nested loops beyond the shared

@@ -585,13 +585,112 @@ def test_model_store_roundtrip_and_cross_app_read(spark, tmp_path, monkeypatch):
     assert r1 == r2 == [(0, [0.5, 1e-17]), (1, [1.5, -2.25])]
 
 
+_LOCAL_DDL = "k bigint, tag string, w double, cv array<double>"
+
+
+def test_local_frame_schema_matches_ddl(spark):
+    """modelstore.local_frame: column names, types and nullability are
+    exactly what the DDL parses to (the join/aggregate plans built on
+    these frames depend on the types), and null cells survive."""
+    from pyspark.sql.types import DataType
+
+    from eecs485_p4_mapreduce_spark.functions.modelstore import local_frame
+
+    rows = [(1, "a", 0.5, [1.0, 2.0]), (2, None, None, None)]
+    df = local_frame(spark, rows, _LOCAL_DDL)
+    assert df.schema == DataType.fromDDL(_LOCAL_DDL)
+    assert [tuple(r) for r in df.orderBy("k").collect()] == rows
+
+
+def test_local_frame_empty_rows_keep_columns(spark):
+    """rows=[] is a zero-row frame that still has every column and type
+    (the empty-corpus k-center result and an empty model both hit it)."""
+    from pyspark.sql.types import DataType
+
+    from eecs485_p4_mapreduce_spark.functions.modelstore import local_frame
+
+    df = local_frame(spark, [], _LOCAL_DDL)
+    assert df.schema == DataType.fromDDL(_LOCAL_DDL)
+    assert df.count() == 0
+
+
+def test_local_frame_doubles_round_trip_bit_exact(spark):
+    """array<double> values (centroids, power-iteration vectors, PQ
+    codewords) reach the plan bit-for-bit: every consumer's oracle
+    replays the same doubles, so one flipped bit is a wrong answer."""
+    import struct
+
+    from eecs485_p4_mapreduce_spark.functions.modelstore import local_frame
+
+    vals = [-0.0, 1e18, 0.1 + 0.2, 5e-324, -1.7976931348623157e308, 1e-17]
+    got = local_frame(spark, [(vals,)], "cv array<double>").collect()[0]["cv"]
+    assert [struct.pack("<d", x) for x in got] == [
+        struct.pack("<d", x) for x in vals
+    ]
+
+
+def test_local_frame_plans_a_local_table_scan(spark):
+    """The frame is a JVM local relation: its physical plan is a
+    LocalTableScan, not the Python-RDD ``Scan ExistingRDD`` that
+    ``spark.createDataFrame(<python list>)`` plans (whose every run
+    starts Python workers)."""
+    from eecs485_p4_mapreduce_spark.functions.modelstore import local_frame
+
+    df = local_frame(spark, [(1, "a", 0.5, [1.0])], _LOCAL_DDL)
+    plan = _explain(df)
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+
+
+def _create_dataframe_calls(node):
+    import ast
+
+    return [
+        n
+        for n in ast.walk(node)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "createDataFrame"
+    ]
+
+
+def test_create_dataframe_only_inside_local_frame():
+    """Every driver-sized frame in the package goes through
+    modelstore.local_frame: a ``spark.createDataFrame(`` call anywhere
+    else would bring back the Python-RDD leaf and its per-run Python
+    workers."""
+    import ast
+    import glob
+
+    import eecs485_p4_mapreduce_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    inside, stray = [], []
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        allowed = {
+            id(c)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and fn.name == "local_frame"
+            for c in _create_dataframe_calls(fn)
+        }
+        rel = os.path.relpath(path, root)
+        for c in _create_dataframe_calls(tree):
+            (inside if id(c) in allowed else stray).append(f"{rel}:{c.lineno}")
+    assert inside and all(
+        c.startswith("functions/modelstore.py:") for c in inside
+    ), inside
+    assert not stray, stray
+
+
 def test_frame_store_publishes_reads_and_stays_fresh(spark, tmp_path, monkeypatch):
     """modelstore.load_or_build_frame (the stored derived-TABLE variant):
     first call builds and publishes parquet; second call must read the
     published table WITHOUT invoking build; rewriting the corpus in
     place (new mtime) must re-derive — a stale stored edge/signature
-    table would silently corrupt every consumer.  Also pins the
-    varchar/string support in the row-store schema parser."""
+    table would silently corrupt every consumer.  Also pins string
+    columns through the row store's DDL -> Arrow mapping."""
     import shutil as _sh
 
     from eecs485_p4_mapreduce_spark.functions import modelstore
@@ -628,7 +727,7 @@ def test_frame_store_publishes_reads_and_stays_fresh(spark, tmp_path, monkeypatc
         spark, "tedges", str(d1), "documents", "da bigint, db bigint", build
     )
     assert builds == [1, 1]
-    # varchar columns (the BPE merge-table shape) round-trip through the
+    # string columns (the BPE merge-table shape) round-trip through the
     # driver-side row store; the second call reads, not retrains
     rows = [(0, "a", "b"), (1, "a b", "c")]
     trains = []
@@ -639,7 +738,7 @@ def test_frame_store_publishes_reads_and_stays_fresh(spark, tmp_path, monkeypatc
 
     for _ in range(2):
         got = modelstore.load_or_train(
-            spark, "tbpe", str(d1), "round bigint, pa varchar, pb varchar",
+            spark, "tbpe", str(d1), "round bigint, pa string, pb string",
             train, table="documents",
         )
         assert got == rows
