@@ -3,7 +3,7 @@
 A brand-new engine with the query and data-processing capabilities of the
 reference MapReduce framework (``DrewDame/eecs485-p4-mapreduce``), expressed
 Spark-first: declarative DataFrame/SQL plans optimized by Catalyst, an
-RDD ``pipe()`` compatibility path for Hadoop-Streaming-style executables,
+RDD compatibility path that streams Hadoop-Streaming-style executables,
 and LLM-data-pipeline operators (dedup, similarity search, text analysis,
 streaming windows) designed for 100 TB scale.
 
@@ -14,7 +14,7 @@ Layout:
     functions  -- reusable column expressions (tokenize, minhash, cosine, ...)
     plans      -- the query registry consumed by ``__spark_entry__.py``
     streaming  -- Structured Streaming operators over the events table
-    mapreduce  -- exe-compat path running streaming executables via rdd.pipe
+    mapreduce  -- exe-compat path running streaming executables as RDD tasks
 """
 
 from eecs485_p4_mapreduce_spark.session import get_spark

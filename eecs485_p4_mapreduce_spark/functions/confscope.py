@@ -66,5 +66,14 @@ def stream_session(spark: SparkSession) -> SparkSession:
     child = _STREAM_SESSIONS.get(spark)
     if child is None:
         child = spark.newSession()
+        # Checkpoint files through Hadoop's FileSystem API rather than
+        # FileContext: without native libhadoop, the local FileContext
+        # starts a `readlink` subprocess for every checkpoint file it
+        # renames or stats.
+        child.conf.set(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         _STREAM_SESSIONS[spark] = child
     return child

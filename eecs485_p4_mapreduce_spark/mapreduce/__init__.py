@@ -1,22 +1,12 @@
-"""Exe-compat MapReduce path (SURVEY.md §7 v3) + its declared queries.
+"""Exe-compat MapReduce path (SURVEY.md §7 v3).
 
 ``MapReduceJob`` runs unmodified Hadoop-Streaming-style executables with
-the reference's dataflow semantics on Spark RDD ``pipe()``.  The two
-registered queries drive the whole path end-to-end over the documents
-table and are oracle-checked against the declarative twins, proving the
-exe path computes exactly what the DataFrame plans compute.
+the reference's dataflow semantics on Spark RDDs (see ``job.py``).  The
+registered ``mr_*`` queries that drive it over the documents table live
+in ``operators/mapreduce.py``; this package imports only ``job.py``, so a
+PySpark worker that unpickles a job's map or reduce function does not
+load the query registry.
 """
-
-from __future__ import annotations
-
-import atexit
-import os
-import shutil
-import sys
-import tempfile
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from eecs485_p4_mapreduce_spark.mapreduce.job import (
     MapReduceJob,
@@ -24,176 +14,5 @@ from eecs485_p4_mapreduce_spark.mapreduce.job import (
     md5_partition,
     round_robin_groups,
 )
-from eecs485_p4_mapreduce_spark.functions.textfn import DUCK_TOKENS
-from eecs485_p4_mapreduce_spark.plans.registry import query
-from eecs485_p4_mapreduce_spark.sources import load_table
 
 __all__ = ["MapReduceJob", "keyof", "md5_partition", "round_robin_groups"]
-
-_EXE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "executables")
-
-
-def _exe(name: str) -> str:
-    return f"{sys.executable} {os.path.join(_EXE_DIR, name)}"
-
-
-def _materialize_docs(
-    spark: SparkSession, sf_dir: str, dest: str, nfiles: int = 8, *, with_id: bool = False
-) -> None:
-    """Write documents.text as a directory of text files (the reference's
-    input format: SURVEY.md §1.1 Dataset) -- entirely with executors.
-
-    Round 1 collected the table to the driver and wrote files there (the
-    verdict's "What's wrong #4").  Now: bucket = doc_id % nfiles, one
-    shuffle partition per bucket, executors write one text file per bucket
-    via ``write.partitionBy('bucket')``; the driver only RENAMES the part
-    files to the reference's flat ``fileNN`` layout -- a metadata op, no
-    row ever passes through the driver.  Real deployments already have
-    text files on shared storage; this adapter exists to feed the compat
-    path its native format at any scale."""
-    import glob
-
-    staging = dest + ".staging"
-    (
-        load_table(spark, sf_dir, "documents")
-        .select(
-            (F.col("doc_id") % nfiles).cast("int").alias("bucket"),
-            "doc_id",
-            (
-                F.concat(F.col("doc_id").cast("string"), F.lit("\t"), F.col("text"))
-                if with_id
-                else F.col("text")
-            ).alias("value"),
-        )
-        # all rows of one bucket in one partition -> exactly one part file
-        # per bucket dir; sorted so file contents are doc_id-deterministic
-        .repartition(nfiles, "bucket")
-        .sortWithinPartitions("doc_id")
-        .select("bucket", "value")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .text(staging)
-    )
-    for i in range(nfiles):
-        parts = sorted(glob.glob(os.path.join(staging, f"bucket={i}", "part-*")))
-        assert len(parts) <= 1, f"bucket {i} split across tasks: {parts}"
-        target = os.path.join(dest, f"file{i:02d}")
-        if parts:
-            shutil.move(parts[0], target)
-        else:  # empty bucket still yields an (empty) input file
-            open(target, "w", encoding="utf-8").close()
-    shutil.rmtree(staging, ignore_errors=True)
-
-
-def _run_job(
-    spark: SparkSession, sf_dir: str, mapper: str, reducer: str, *, with_id: bool = False
-) -> list[str]:
-    """Run one exe-compat job over documents; return its part files.
-
-    The text copy of documents under ``input/`` is removed as soon as
-    the job returns.  The part files under ``output/`` stay until
-    interpreter exit (the modelstore atexit convention): the caller's
-    frame reads them lazily, on every action."""
-    work = tempfile.mkdtemp(prefix="spark-graft-mr-")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    in_dir = os.path.join(work, "input")
-    out_dir = os.path.join(work, "output")
-    os.makedirs(in_dir)
-    _materialize_docs(spark, sf_dir, in_dir, with_id=with_id)
-    job = MapReduceJob(
-        input_directory=in_dir,
-        output_directory=out_dir,
-        mapper_executable=mapper,
-        reducer_executable=reducer,
-        num_mappers=4,
-        num_reducers=2,
-    )
-    try:
-        return job.run(spark)
-    finally:
-        shutil.rmtree(in_dir, ignore_errors=True)
-
-
-
-
-@query(
-    "mr_wordcount",
-    oracle=f"""
-    SELECT word, cnt
-    FROM (SELECT word, COUNT(*) AS cnt
-          FROM (SELECT unnest({DUCK_TOKENS}) AS word FROM documents)
-          GROUP BY word)
-    """,
-)
-def mr_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word count through the exe-compat path: documents -> text files ->
-    mapper exe -> md5 shuffle -> sorted reduce exe -> part files ->
-    DataFrame.  Oracle identical to the declarative ``wordcount`` --
-    the two paths must agree exactly."""
-    outputs = _run_job(spark, sf_dir, _exe("tokenize_map.py"), _exe("tokenize_reduce.py"))
-    out_dir = os.path.dirname(outputs[0])
-    df = (
-        spark.read.text(out_dir)
-        .select(F.split("value", "\t", 2).alias("kv"))
-        .select(
-            F.col("kv")[0].alias("word"),
-            F.col("kv")[1].cast("bigint").alias("cnt"),
-        )
-    )
-    return df
-
-
-@query(
-    "mr_grep",
-    oracle="""
-    SELECT text AS line FROM documents WHERE contains(lower(text), 'scan')
-    """,
-)
-def mr_grep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grep through the exe-compat path (query term 'scan', matching the
-    declarative ``grep``)."""
-    outputs = _run_job(
-        spark, sf_dir, _exe("match_map.py") + " scan", _exe("match_reduce.py")
-    )
-    out_dir = os.path.dirname(outputs[0])
-    return spark.read.text(out_dir).select(F.col("value").alias("line"))
-
-
-@query(
-    "mr_inverted_index",
-    oracle=f"""
-    WITH tk AS (SELECT doc_id, unnest(list_distinct({DUCK_TOKENS})) AS term
-                FROM documents)
-    SELECT term, CAST(COUNT(*) AS BIGINT) AS df,
-           array_to_string(list(CAST(doc_id AS VARCHAR) ORDER BY doc_id), ',')
-             AS postings
-    FROM tk GROUP BY term
-    """,
-)
-def mr_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference framework's REAL workload — the search-engine
-    inverted-index build its course runs on top of it — through the
-    exe-compat path: documents materialize as ``doc_id\\ttext`` input
-    files, an unmodified streaming mapper emits (term, doc_id) postings,
-    the md5 shuffle groups by term, and the reducer writes
-    ``term\\tdf\\tposting,list`` lines.  The oracle is the declarative
-    twin (distinct-token explode + ordered list agg), so the exe
-    pipeline is proven equal to the DataFrame plan — the same
-    two-expressions-one-answer contract as mr_wordcount."""
-    outputs = _run_job(
-        spark,
-        sf_dir,
-        _exe("index_map.py"),
-        _exe("index_reduce.py"),
-        with_id=True,
-    )
-    out_dir = os.path.dirname(outputs[0])
-    return (
-        spark.read.text(out_dir)
-        .select(F.split("value", "\t", 3).alias("kv"))
-        .select(
-            F.col("kv")[0].alias("term"),
-            F.col("kv")[1].cast("bigint").alias("df"),
-            F.col("kv")[2].alias("postings"),
-        )
-    )

@@ -19,12 +19,15 @@ Reference semantics reproduced (SURVEY.md §2.A, §3.2):
   num_reducers files [ref tests/test_worker_08.py:92-111,246-257;
   tests/test_integration_02.py:31-37]
 
-Spark mapping: ``sc.textFile`` per file -> ``rdd.pipe(mapper)`` ->
+Spark mapping: ``sc.parallelize`` of the round-robin file groups, one
+partition per map task -> per file, a mapper subprocess with the file as
+stdin, its stdout streamed into the shuffle ->
 ``repartitionAndSortWithinPartitions`` (md5 partitioner, full-line sort ==
-the reference's line-wise external sort) -> ``pipe(reducer)`` ->
-per-partition text files renamed to ``part-NNNNN``.  The manager/worker
-control plane (registration, heartbeats, reassignment: §2.A8-A13) is
-subsumed by Spark's scheduler and is deliberately not rebuilt.
+the reference's line-wise external sort) -> per reduce partition, a
+reducer subprocess whose stdout is the ``part-NNNNN`` file itself.  The
+manager/worker control plane (registration, heartbeats, reassignment:
+§2.A8-A13) is subsumed by Spark's scheduler and is deliberately not
+rebuilt.
 """
 
 from __future__ import annotations

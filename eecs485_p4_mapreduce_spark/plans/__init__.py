@@ -38,7 +38,7 @@ from eecs485_p4_mapreduce_spark.operators import (  # noqa: F401
     udx,
     windows,
 )
-from eecs485_p4_mapreduce_spark import mapreduce  # noqa: F401
+from eecs485_p4_mapreduce_spark.operators import mapreduce  # noqa: F401
 from eecs485_p4_mapreduce_spark import streaming  # noqa: F401
 
 __all__ = ["REGISTRY", "QuerySpec", "query"]

@@ -9,6 +9,10 @@ and file-split semantics the reference's tests specify.
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
+import time
+from collections import Counter
 
 import pytest
 
@@ -133,7 +137,7 @@ def test_mr_query_removes_its_input_copy(spark, sf_dir, monkeypatch):
     and the work dir is registered for removal at exit."""
     import shutil
 
-    from eecs485_p4_mapreduce_spark import mapreduce as mr
+    from eecs485_p4_mapreduce_spark.operators import mapreduce as mr
 
     made, registered = [], []
     real_mkdtemp = mr.tempfile.mkdtemp
@@ -157,6 +161,136 @@ def test_mr_query_removes_its_input_copy(spark, sf_dir, monkeypatch):
     finally:
         for w in made:
             shutil.rmtree(w, ignore_errors=True)
+
+
+def _exe_path(name: str) -> str:
+    from eecs485_p4_mapreduce_spark.mapreduce import job
+
+    return os.path.join(os.path.dirname(job.__file__), "executables", name)
+
+
+def test_multi_file_job_places_keys_and_counts(spark, tmp_path):
+    """Eight input files (one with an unterminated last line) through
+    four map tasks and two reducers, with the package's own word-count
+    executables: exactly two part files, every key in its md5 part, and
+    the counts equal to the mapper run over each file on its own."""
+    in_dir, out = tmp_path / "input", tmp_path / "out"
+    in_dir.mkdir()
+    for i in range(1, 9):
+        words = " ".join(f"w{(i * j) % 13} Shared" for j in range(1, 6 + i))
+        text = f"{words}\nfile {i} Tail\n"
+        if i == 5:
+            text += "unterminated last line"
+        (in_dir / f"file{i:02d}").write_text(text, encoding="utf-8")
+    mapper, reducer = _exe_path("tokenize_map.py"), _exe_path("tokenize_reduce.py")
+    outputs = MapReduceJob(
+        input_directory=str(in_dir),
+        output_directory=str(out),
+        mapper_executable=f"{sys.executable} {mapper}",
+        reducer_executable=f"{sys.executable} {reducer}",
+        num_mappers=4,
+        num_reducers=2,
+    ).run(spark)
+    assert sorted(os.listdir(out)) == ["part-00000", "part-00001"]
+    assert [os.path.basename(p) for p in outputs] == ["part-00000", "part-00001"]
+
+    got: dict[str, int] = {}
+    for p in (0, 1):
+        with open(out / f"part-{p:05d}", encoding="utf-8") as fh:
+            for line in fh.read().splitlines():
+                assert md5_partition(line, 2) == p, line
+                key, _, cnt = line.partition("\t")
+                got[key] = int(cnt)
+
+    expected: Counter[str] = Counter()
+    for path in sorted(in_dir.iterdir()):
+        with open(path, "rb") as src:
+            run = subprocess.run(
+                [sys.executable, mapper], stdin=src, capture_output=True, check=True
+            )
+        expected.update(keyof(ln) for ln in run.stdout.decode().splitlines())
+    assert expected["line"] == 1  # the unterminated line reached its mapper
+    assert got == dict(expected)
+
+
+def test_materialize_docs_writes_one_file_per_scan_split(spark, sf_dir, tmp_path):
+    """The MapReduce input copy follows the scan: one file per non-empty
+    split, written by one Spark job with no shuffle stage, holding
+    exactly the documents' lines, with no Spark bookkeeping file left.
+    The table is rewritten with small row groups and scanned with a
+    small split size, so that several splits, split 0 among them, hold
+    no row group."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from eecs485_p4_mapreduce_spark.operators.mapreduce import _materialize_docs
+
+    table = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    split_dir = tmp_path / "sf"
+    split_dir.mkdir()
+    path = split_dir / "documents.parquet"
+    pq.write_table(table, path, row_group_size=max(1, table.num_rows // 6))
+    child = spark.newSession()
+    child.conf.set("spark.sql.files.maxPartitionBytes", str(os.path.getsize(path) // 20))
+    scan = child.read.parquet(str(path))
+    filled = {r[0] for r in scan.groupBy(F.spark_partition_id()).count().collect()}
+    assert 0 not in filled and 1 < len(filled) < scan.rdd.getNumPartitions()
+
+    dest = tmp_path / "input"
+    dest.mkdir()
+    sc = spark.sparkContext
+    group = "test-materialize-docs"
+    sc.setJobGroup(group, "materialize documents")
+    try:
+        _materialize_docs(child, str(split_dir), str(dest))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # The status tracker follows the listener bus, which may lag behind
+    # the write's return: wait for the write job to show as finished.
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while True:
+        infos = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+        stages = [[tracker.getStageInfo(s) for s in i.stageIds] for i in infos]
+        writes = [st for st in stages if any(s and s.name.startswith("text") for s in st)]
+        done = all(str(i.status) == "SUCCEEDED" for i in infos)
+        if (writes and done) or time.monotonic() > deadline:
+            break
+        time.sleep(0.05)
+    # one write job of one stage; the other job is the parquet footer read
+    assert len(writes) == 1 and len(writes[0]) == 1, stages
+    assert all(len(st) == 1 for st in stages), stages
+
+    names = sorted(os.listdir(dest))
+    assert names == [f"file{i:02d}" for i in range(len(filled))]
+    assert not os.path.exists(f"{dest}.staging")
+    lines: Counter[str] = Counter()
+    for name in names:
+        data = (dest / name).read_bytes()
+        assert data and data.endswith(b"\n")
+        lines.update(data.decode("utf-8").split("\n")[:-1])
+    assert lines == Counter(table.column("text").to_pylist())
+
+
+def test_job_module_import_leaves_registry_unloaded():
+    """A PySpark worker that unpickles a job's map or reduce function
+    imports ``mapreduce.job``; that must not load the query registry
+    (every operators module) into the worker."""
+    code = (
+        "import sys, eecs485_p4_mapreduce_spark.mapreduce.job; "
+        "print(sorted(m for m in sys.modules if m.startswith("
+        "'eecs485_p4_mapreduce_spark.plans')))"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    run = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert run.stdout.strip() == "[]"
 
 
 @needs_ref

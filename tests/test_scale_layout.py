@@ -439,6 +439,7 @@ def test_conf_scoped_queries_leave_shared_session_untouched(spark, sf_dir):
     state width) must run their overrides on CHILD sessions — the
     shared session's SQLConf is never touched, so a concurrently
     planned query can never inherit a foreign conf."""
+    from eecs485_p4_mapreduce_spark.functions.confscope import stream_session
     from eecs485_p4_mapreduce_spark.operators.joins import (
         join_runtime_bloom_filter,
     )
@@ -468,6 +469,14 @@ def test_conf_scoped_queries_leave_shared_session_untouched(spark, sf_dir):
         q(spark, sf_dir).collect()
         got = {k: spark.conf.get(k, None) for k in watched}
         assert got == snap, (q.__name__, got)
+    # the streaming child checkpoints through the FileSystem API; the
+    # shared session keeps Spark's default checkpoint file manager
+    manager = "spark.sql.streaming.checkpointFileManagerClass"
+    assert stream_session(spark).conf.get(manager, None) == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    assert spark.conf.get(manager, None) is None
 
 
 def test_grouped_rank_spreads_skewed_group(spark):

@@ -20,7 +20,7 @@ two scale bugs hid exactly where the audit said "skipped"):
   the factored one-iteration frame (``_pagerank_iteration_frame``,
   ``_cc_iteration_frame``) — the plan every round repeats.
 - ``mr_*`` stays plan-less by nature: the exe-compat path is an RDD
-  ``pipe()`` pipeline (no Catalyst plan exists); its scale story is the
+  pipeline of executables (no Catalyst plan exists); its scale story is the
   reference-parity contract in mapreduce/job.py's docstrings.
 """
 
@@ -39,7 +39,7 @@ from eecs485_p4_mapreduce_spark import get_spark  # noqa: E402
 from eecs485_p4_mapreduce_spark.plans import REGISTRY  # noqa: E402
 
 SKIP = {
-    n: "exe-compat RDD pipe() pipeline; no Catalyst plan (see mapreduce/job.py)"
+    n: "exe-compat RDD pipeline of executables; no Catalyst plan (see mapreduce/job.py)"
     for n in REGISTRY
     if n.startswith("mr_")
 }
