@@ -31,12 +31,17 @@ entry points; each owns the whole mechanism:
   session still gets its own confs.
 - Unkeyable corpus (mtime unreadable — injected test frames): nothing
   is published; a model is trained per call, and a frame is built and
-  pinned once with ``localCheckpoint()`` so its consumers do not replay
-  the derivation per reference.
+  pinned once with :func:`pin` so its consumers do not replay the
+  derivation per reference.
 
 :func:`local_frame` turns driver-sized rows (a stored model, a loop's
 current vector, a literal dimension) into a DataFrame through the same
 DDL -> Arrow mapping the store publishes with.
+
+:func:`pin` materializes a frame that several consumers read, or that a
+driver loop carries from round to round — the in-query stage boundary.
+It is the package's only ``localCheckpoint`` call; the one reliable
+``checkpoint`` is functions/ranking.py's.
 """
 
 from __future__ import annotations
@@ -149,6 +154,16 @@ def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
     return spark.createDataFrame(table, struct)
 
 
+def pin(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df`` materialized once into executor storage, with its lineage
+    cut (``localCheckpoint``), whatever checkpoint dir the SparkContext
+    has.  The blocks stay until they are unpersisted (Spark's
+    ``getPersistentRDDs`` lists them) or the application ends.  Plans a
+    ``Scan ExistingRDD`` leaf.  ``eager=False`` materializes on the
+    frame's first action instead of now."""
+    return df.localCheckpoint(eager)
+
+
 def _read_rows(loc: str) -> list[tuple] | None:
     """Published model rows at ``loc`` (sorted), or None if absent."""
     import pyarrow.parquet as pq
@@ -203,13 +218,13 @@ def load_or_build_frame(
     ``table`` (plus ``extra_tables``) name the source tables whose mtime
     keys freshness; ``loader`` is the table loader the derivation reads
     through (see :func:`loader_tag`).  An unkeyable corpus gets
-    ``build()`` pinned with ``localCheckpoint()``, unpublished.
+    ``build()`` pinned with :func:`pin`, unpublished.
     Derivation is deterministic as a SET; a rename race loser reads the
     winner's copy (row order may differ between builders, but every
     consumer is order-insensitive — aggregates and joins only)."""
     loc = _location(spark, kind, sf_dir, table, extra_tables, loader)
     if loc is None:
-        return build().localCheckpoint()
+        return pin(build())
     if not os.path.exists(os.path.join(loc, "_SUCCESS")):
         tmp = loc + ".tmp-" + uuid.uuid4().hex[:8]
         build().write.parquet(tmp)

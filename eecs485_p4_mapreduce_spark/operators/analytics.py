@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from eecs485_p4_mapreduce_spark.functions.modelstore import pin
 from eecs485_p4_mapreduce_spark.functions.numeric import (
     davg_sql,
     dsum,
@@ -323,11 +324,11 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = load_table(spark, sf_dir, "orders")
-    base = o.groupBy("o_custkey").agg(
+    base = pin(o.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_order"),
         F.count("*").alias("freq"),
         dsum("o_totalprice").alias("monetary"),
-    ).localCheckpoint()  # read twice: range-boundary sampling + the rank
+    ))  # read twice: range-boundary sampling + the rank
     # one tagged row per (customer, dimension); the unused key columns
     # are all-NULL constants within a dim, so ordering by (_kd,_kl,_km)
     # inside each dim degenerates to exactly that dim's key
@@ -979,7 +980,7 @@ def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
             "us_to_convert"
         ),
     )
-    conv = conv.localCheckpoint()  # shared by the rank pass + summary
+    conv = pin(conv)  # shared by the rank pass + summary
     # aggregate the selected row so BOTH sides are always exactly one row
     # — a filter-only median frame would be EMPTY on a zero-converter
     # corpus and the crossJoin would drop the summary row, where the
@@ -2370,7 +2371,7 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey", "c_mktsegment", "sens")
         .agg(F.count("*").alias("n_cs"))
     )
-    cell = cell.localCheckpoint(eager=False)
+    cell = pin(cell, eager=False)
     cls = cell.groupBy("c_nationkey", "c_mktsegment").agg(
         F.sum("n_cs").alias("n_c")
     )
@@ -2473,7 +2474,7 @@ def stats_psi_drift_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("bucket"),
     )
     cell = b.groupBy("source", "bucket").agg(F.count("*").alias("c"))
-    cell = cell.localCheckpoint(eager=False)
+    cell = pin(cell, eager=False)
     gb = cell.groupBy("bucket").agg(F.sum("c").alias("cg"))
     ns = cell.groupBy("source").agg(F.sum("c").alias("n_s"))
     ng = gb.agg(F.sum("cg").alias("n_g"), F.count("*").alias("nb"))
@@ -2672,7 +2673,7 @@ def dq_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = e.groupBy("event_type").agg(
         F.max("ts").alias("latest"), F.count("*").alias("n")
     )
-    g = g.localCheckpoint(eager=False)
+    g = pin(g, eager=False)
     mx = g.agg(F.max("latest").alias("head"))
     lag_min = F.expr(
         "(unix_micros(head) - unix_micros(latest)) div 60000000"
@@ -2754,9 +2755,9 @@ def survival_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     duration-day grid — calendar-bounded (~corpus span in days) at any
     row count, the window_cumulative_users precedent."""
     ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
+    u = pin(ev.groupBy("user_id").agg(
         F.min("ts").alias("f"), F.max("ts").alias("l")
-    ).localCheckpoint()
+    ))
     # head anchor from the per-user rollup (max of maxes == corpus max):
     # ONE scan of the event table, the dq_freshness_lag discipline
     mx = u.agg(F.max("l").alias("head"))
@@ -2902,7 +2903,7 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("o_totalprice").cast("decimal(18,6)")).alias("rev"))
     )
     w_rank = Window.orderBy("rev", "d")
-    r = daily.select(
+    r = pin(daily.select(
         "d",
         "rev",
         F.row_number().over(w_rank).alias("rk"),
@@ -2911,7 +2912,7 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                 Window.unboundedPreceding, Window.unboundedFollowing
             )
         ).alias("n_days"),
-    ).localCheckpoint()  # referenced by the median pick AND the sign pass
+    ))  # referenced by the median pick AND the sign pass
     med = r.filter(
         F.col("rk") == F.expr("(n_days + 1) div 2")
     ).select(F.col("rev").alias("med_rev"))
@@ -2995,12 +2996,11 @@ def assoc_basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer over DISTINCT (order, part); lift and confidence are
     single IEEE divisions of exact ints quantized round(6), ranked with
     the (part_a, part_b) tie-break."""
-    lp = (
+    lp = pin(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        .localCheckpoint()  # pair self-join + marginals + basket count
-    )
+    )  # pair self-join + marginals + basket count
     n = lp.agg(F.countDistinct("l_orderkey").alias("nb"))
     pa = lp.groupBy("l_partkey").agg(F.count("*").alias("c"))
     pr = (
@@ -3104,15 +3104,14 @@ def interval_concurrency_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", "last_ship").alias("e"),
         )
     )
-    delta = (
+    delta = pin(
         iv.select(F.col("s").alias("d"), F.lit(1).alias("x"))
         .unionAll(
             iv.select(F.expr("e + interval 1 day").alias("d"), F.lit(-1).alias("x"))
         )
         .groupBy("d")
         .agg(F.sum("x").alias("dx"))
-        .localCheckpoint()  # bounds + spine join reuse it
-    )
+    )  # bounds + spine join reuse it
     b = delta.agg(F.min("d").alias("mn"), F.max("d").alias("mx"))
     spine = b.select(
         F.explode(F.sequence("mn", "mx", F.expr("interval 1 day"))).alias("d")
@@ -3317,15 +3316,14 @@ def stats_spearman_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically-spelled double expression quantized round(6)."""
     from eecs485_p4_mapreduce_spark.functions.ranking import with_global_rank
 
-    cust = (
+    cust = pin(
         load_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(
             F.count("*").cast("bigint").alias("x"),
             F.sum(F.col("o_totalprice").cast("decimal(18,6)")).alias("y"),
         )
-        .localCheckpoint()  # both rank passes read it
-    )
+    )  # both rank passes read it
     rx = with_global_rank(cust.select("o_custkey", "x"), ["x", "o_custkey"]).select(
         "o_custkey", F.col("_rk").alias("rx")
     )
@@ -3764,7 +3762,7 @@ def ab_cuped_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
             " (unix_micros(max(ts)) - unix_micros(min(ts))) div 2"
         ).alias("mid")
     )
-    u = (
+    u = pin(
         ev.crossJoin(F.broadcast(anchor))
         .groupBy(
             "user_id",
@@ -3781,8 +3779,7 @@ def ab_cuped_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.expr("unix_micros(ts) >= mid"), 1).otherwise(0)
             ).alias("y"),
         )
-        .localCheckpoint()  # moments + arms both read it
-    )
+    )  # moments + arms both read it
     m = u.agg(
         F.count("*").alias("n"),
         F.sum(F.col("x").cast("decimal(38,0)")).alias("sx"),
@@ -3902,9 +3899,9 @@ def survival_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction).  Scale shape: one user-keyed aggregate over the
     event scan, then calendar-bounded duration-grid windows."""
     ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
+    u = pin(ev.groupBy("user_id").agg(
         F.min("ts").alias("f"), F.max("ts").alias("l")
-    ).localCheckpoint()
+    ))
     mx = u.agg(F.max("l").alias("head"))
     d = u.crossJoin(F.broadcast(mx)).select(
         F.expr("(unix_micros(l) - unix_micros(f)) div 86400000000")
@@ -4478,11 +4475,11 @@ def ab_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     obs = F.expr(_bucket256_sql("user_id"))
-    u = ev.groupBy("user_id").agg(
+    u = pin(ev.groupBy("user_id").agg(
         F.count("*").cast("bigint").alias("y")
     ).select(
         "user_id", "y", F.when(obs < 128, 1).otherwise(0).alias("t0")
-    ).localCheckpoint()  # observed arms + 16 replicas read it
+    ))  # observed arms + 16 replicas read it
     o = u.agg(
         F.sum(F.when(F.col("t0") == 1, F.col("y")).otherwise(0))
         .cast("decimal(38,0)")
@@ -6325,7 +6322,7 @@ def ab_ratio_metric_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     bkt = F.expr(_bucket256_sql("user_id"))
-    u = ev.groupBy("user_id").agg(
+    u = pin(ev.groupBy("user_id").agg(
         F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
         .cast("bigint")
         .alias("x"),
@@ -6334,7 +6331,7 @@ def ab_ratio_metric_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("y"),
     ).select(
         F.when(bkt < 128, 1).otherwise(0).alias("t"), "x", "y"
-    ).localCheckpoint()  # arm moments AND the Q pass read it
+    ))  # arm moments AND the Q pass read it
     o = u.groupBy("t").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("x").cast("decimal(38,0)").alias("sx"),

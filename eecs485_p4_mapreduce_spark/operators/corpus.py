@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eecs485_p4_mapreduce_spark.functions.hashfn import hex_int_sql
+from eecs485_p4_mapreduce_spark.functions.modelstore import pin
 from eecs485_p4_mapreduce_spark.functions.numeric import (
     hu_ratio,
     hu_ratio_signed,
@@ -896,7 +897,7 @@ def corpus_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("decile")
         .agg(F.count("*").alias("vocab"))
     )
-    pts = (
+    pts = pin(
         dc.join(vc, "decile")
         .select(
             "decile",
@@ -909,8 +910,7 @@ def corpus_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cast(round(ln(cast(vocab as double)), 4) as decimal(18,4))"
             ).alias("y"),
         )
-        .localCheckpoint()  # pts feeds both the readout and the moment agg
-    )
+    )  # pts feeds both the readout and the moment agg
     m = pts.agg(
         F.count("*").alias("np"),
         F.sum("x").alias("sx"),

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from eecs485_p4_mapreduce_spark.functions.hashfn import hex_int_sql
 from eecs485_p4_mapreduce_spark.functions.numeric import hu_ratio
-from eecs485_p4_mapreduce_spark.functions.modelstore import load_or_build_frame
+from eecs485_p4_mapreduce_spark.functions.modelstore import load_or_build_frame, pin
 from eecs485_p4_mapreduce_spark.functions.textfn import DUCK_TOKENS
 from eecs485_p4_mapreduce_spark.plans.registry import query
 from eecs485_p4_mapreduce_spark.sources import load_table, widen_scan
@@ -69,11 +69,9 @@ from eecs485_p4_mapreduce_spark.functions import minhashfn as _mh
 
 _K = _mh.K
 _BANDS = _mh.BANDS
-_R = _mh.R
 _SHINGLE = _mh.SHINGLE
 _M32 = _mh.M32
 _SH_DUCK = _mh.SH_DUCK
-_BANDS_SPARK = _mh.BANDS_SPARK
 _BANDS_DUCK = _mh.BANDS_DUCK
 _EST_SPARK = _mh.EST_SPARK
 _EST_DUCK = _mh.EST_DUCK
@@ -342,7 +340,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
         *[F.expr(e).alias(f"o{j}") for j, e in enumerate(_ONES_SPARK)],
     )
-    fp = ones.select("doc_id", F.expr(_FP_SPARK).alias("fp")).localCheckpoint()
+    fp = pin(ones.select("doc_id", F.expr(_FP_SPARK).alias("fp")))
     banded = fp.select(
         "doc_id",
         "fp",
@@ -432,11 +430,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # transform is ~4 concats per token and would otherwise run on the
     # compact scan's single core before the checkpoint.
     docs = widen_scan(docs, "doc_id")
-    ng = (
+    ng = pin(
         docs.withColumn("toks", F.expr(_TOK_SPARK))
         .withColumn("ng", F.expr(_NG_SPARK))
         .select("doc_id", "ng")
-        .localCheckpoint()
     )
     na = ng.select(F.col("doc_id").alias("doc_a"), F.col("ng").alias("ng_a"))
     nb = ng.select(F.col("doc_id").alias("doc_b"), F.col("ng").alias("ng_b"))
@@ -532,7 +529,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # bits is an expensive derived column read by every band -> checkpoint
     # so projection collapse cannot re-inline it 4x (see module notes)
-    bucketed = emb.withColumn("bits", F.expr(_bucket_expr_spark())).localCheckpoint()
+    bucketed = pin(emb.withColumn("bits", F.expr(_bucket_expr_spark())))
     banded = bucketed.select(
         "vec_id",
         "v",
@@ -600,19 +597,30 @@ def _cc_step(edges: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def _cc_iteration_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy one-round CC plan over the real candidate-edge graph (setup
-    executes; the returned frame does not) -- the audit surface."""
+def _cc_setup(spark: SparkSession, sf_dir: str):
+    """Pinned both-direction edges of the near-dup pair graph, its node
+    set, and the pinned initial labels (every node its own label);
+    shared by the query loop and the audit's one-round template."""
     pairs = dedup_minhash_lsh(spark, sf_dir).filter(
         F.col("est_jaccard") >= _CLUSTER_TAU
     ).select("doc_a", "doc_b")
-    edges = (
+    # no .distinct(): pairs are already distinct with doc_a < doc_b, so
+    # the two reversed branches cannot collide — the dedup exchange the
+    # old spelling paid removed nothing
+    edges = pin(
         pairs.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("d"))
         .union(pairs.select(F.col("doc_b").alias("s"), F.col("doc_a").alias("d")))
-        .localCheckpoint()
     )
+    # nodes restricted to the pair graph; isolated docs join back at the end
     nodes = edges.select(F.col("s").alias("node")).distinct()
-    labels = nodes.withColumn("lbl", F.col("node")).localCheckpoint()
+    labels = pin(nodes.withColumn("lbl", F.col("node")))
+    return edges, nodes, labels
+
+
+def _cc_iteration_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lazy one-round CC plan over the real candidate-edge graph (setup
+    executes; the returned frame does not) -- the audit surface."""
+    edges, _, labels = _cc_setup(spark, sf_dir)
     return _cc_step(edges, labels)
 
 
@@ -673,21 +681,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the iterative form converges in O(diameter) rounds.
     Docs in no near-dup pair form singleton clusters of themselves.
     """
-    pairs = dedup_minhash_lsh(spark, sf_dir).filter(
-        F.col("est_jaccard") >= _CLUSTER_TAU
-    ).select("doc_a", "doc_b")
+    edges, nodes, labels = _cc_setup(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    # no .distinct(): pairs are already distinct with doc_a < doc_b, so
-    # the two reversed branches cannot collide — the dedup exchange the
-    # old spelling paid removed nothing
-    edges = (
-        pairs.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("d"))
-        .union(pairs.select(F.col("doc_b").alias("s"), F.col("doc_a").alias("d")))
-        .localCheckpoint()
-    )
-    # nodes restricted to the pair graph; isolated docs join back at the end
-    nodes = edges.select(F.col("s").alias("node")).distinct()
-    labels = nodes.withColumn("lbl", F.col("node")).localCheckpoint()
     max_rounds = 30
     # convergence via the monotone invariant: min-label propagation only
     # ever DECREASES labels, so sum(lbl) is unchanged iff no label moved
@@ -697,7 +692,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stay exact in decimal(38,0) at any corpus size.
     prev_sum = None
     for it in range(max_rounds):
-        new_labels = _cc_step(edges, labels).localCheckpoint()
+        new_labels = pin(_cc_step(edges, labels))
         cur_sum = new_labels.agg(
             F.sum(F.col("lbl").cast("decimal(38,0)"))
         ).collect()[0][0]
@@ -1056,7 +1051,7 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # array_distinct below is the checkpoint's whole cost and would
     # otherwise run on the compact scan's single core.
     docs = widen_scan(docs, "doc_id")
-    t0 = (
+    t0 = pin(
         docs.select("doc_id", tokens("text").alias("w"))
         .filter(F.size("w") >= 3)
         .select(
@@ -1069,8 +1064,7 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("tk"),
         )
-        .localCheckpoint()  # reused by index build AND verify
-    )
+    )  # reused by index build AND verify
     ex = t0.select("doc_id", F.explode("tk").alias("tok"))
     df = ex.groupBy("tok").agg(F.count("*").alias("df"))
     srt = (
@@ -1519,7 +1513,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     child = conf_scoped_session(
         spark, {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
     )
-    return _calibration_frame(child, sf_dir).localCheckpoint()
+    return pin(_calibration_frame(child, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -1896,11 +1890,10 @@ def dedup_containment_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4-gram transform off the compact scan's single core (the
     # dedup_ngram_jaccard fix)
     docs = widen_scan(load_table(spark, sf_dir, "documents"), "doc_id")
-    ng = (
+    ng = pin(
         docs.withColumn("toks", F.expr(_TOK_SPARK))
         .withColumn("ng", F.expr(_NG_SPARK))
         .select("doc_id", "ng")
-        .localCheckpoint()
     )
     ex = ng.select("doc_id", F.explode("ng").alias("g"))
     rare = (

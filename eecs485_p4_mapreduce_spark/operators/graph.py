@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from eecs485_p4_mapreduce_spark.functions.modelstore import load_or_build_frame
+from eecs485_p4_mapreduce_spark.functions.modelstore import load_or_build_frame, pin
 from eecs485_p4_mapreduce_spark.functions.numeric import (
     hu_ratio,
     hu_ratio_signed,
@@ -70,13 +70,12 @@ def _pagerank_setup(spark: SparkSession, sf_dir: str):
     the plan audit's per-iteration template."""
     e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts")
-    edges = (
+    edges = pin(
         e.select(F.lag("event_type").over(w).alias("src"), F.col("event_type").alias("dst"))
         .filter(F.col("src").isNotNull())
         .groupBy("src", "dst")
         .agg(F.count("*").alias("w"))
-        .localCheckpoint()  # iteration reuses edges; never recompute the window
-    )
+    )  # iteration reuses edges; never recompute the window
     outw = edges.groupBy("src").agg(F.sum("w").alias("tw"))
     nodes = (
         edges.select(F.col("dst").alias("node"))
@@ -142,7 +141,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         if (k + 1) % 4 == 0:
             # truncate lineage: iterative plans grow linearly and would
             # blow up analysis/codegen time by iteration ~15 otherwise
-            ranks = ranks.localCheckpoint()
+            ranks = pin(ranks)
     return ranks.select(F.col("node").alias("event_type"), F.round("rank", 6).alias("pagerank"))
 
 
@@ -434,7 +433,7 @@ def graph_kcore_2core(spark: SparkSession, sf_dir: str) -> DataFrame:
     Distributed shape per round: a degree count (map-side combinable)
     plus two equi-joins of the edge list against the surviving-node
     list -- all shuffles key on doc ids, nothing is ever collected, and
-    localCheckpoint after each round keeps the lineage flat (the
+    a pin after each round keeps the lineage flat (the
     dedup_clusters discipline).  Rounds are FIXED at {r} on both
     engines, so the contract is deterministic at any scale even if an
     adversarial graph needs more rounds to fully converge (unit test
@@ -452,11 +451,10 @@ def graph_kcore_2core(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("deg"))
         )
         keep = deg.filter(F.col("deg") >= _KCORE_K).select("doc_id")
-        surv = (
+        surv = pin(
             surv.join(keep.withColumnRenamed("doc_id", "da"), "da")
             .join(keep.withColumnRenamed("doc_id", "db"), "db")
             .select("da", "db")
-            .localCheckpoint()
         )
     return (
         surv.select(F.col("da").alias("doc_id"))
@@ -535,11 +533,10 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("c"))
         )
         w = Window.partitionBy("node").orderBy(F.col("c").desc(), F.col("lbl").asc())
-        labels = (
+        labels = pin(
             votes.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") == 1)
             .select("node", "lbl")
-            .localCheckpoint()
         )
     return (
         labels.groupBy(F.col("lbl").alias("community"))
@@ -1005,7 +1002,7 @@ def graph_centrality_2hop_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = lsh_candidate_edges(spark, sf_dir)
     # degree, both wedge sides, and the anti-join reuse the capped set
-    cap = _capped_adjacency(edges).localCheckpoint()
+    cap = pin(_capped_adjacency(edges))
     one = cap.groupBy("u").agg(F.count("*").cast("bigint").alias("n1"))
     pairs2 = (
         cap.alias("a1")
@@ -1109,7 +1106,7 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per round, TWO edge-keyed equi-joins + two map-side-
     combinable aggregates + two 1-row totals broadcast back — the
-    alternating sparse mat-vec, node-sized state localCheckpoint'd per
+    alternating sparse mat-vec, node-sized state pinned per
     round (the pagerank/kcore loop discipline).  Raw inflows are
     summed in decimal(38,0): raw <= |edges| * {_HITS_SCALE}, so int64
     would cap the graph at ~9e9 edges; decimal carries 100 TB.
@@ -1169,13 +1166,13 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("p")
             .agg(F.sum(F.col("h").cast("decimal(38,0)")).alias("raw"))
         )
-        a = _normalize(ar, "p", "a").localCheckpoint()
+        a = pin(_normalize(ar, "p", "a"))
         hr = (
             e.join(a, "p")
             .groupBy("c")
             .agg(F.sum(F.col("a").cast("decimal(38,0)")).alias("raw"))
         )
-        h = _normalize(hr, "c", "h").localCheckpoint()
+        h = pin(_normalize(hr, "c", "h"))
 
     from pyspark.sql import Window
 
@@ -1538,11 +1535,10 @@ def graph_modularity_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
         w = Window.partitionBy("node").orderBy(
             F.col("c").desc(), F.col("lbl").asc()
         )
-        labels = (
+        labels = pin(
             votes.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") == 1)
             .select("node", "lbl")
-            .localCheckpoint()
         )
     deg = eu.groupBy(F.col("u").alias("node")).agg(
         F.count("*").cast("bigint").alias("deg")

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eecs485_p4_mapreduce_spark.functions.confscope import conf_scoped_session
-from eecs485_p4_mapreduce_spark.functions.modelstore import local_frame
+from eecs485_p4_mapreduce_spark.functions.modelstore import local_frame, pin
 from eecs485_p4_mapreduce_spark.functions.numeric import davg_sql, dsum, dsum_sql, davg
 from eecs485_p4_mapreduce_spark.plans.registry import query
 from eecs485_p4_mapreduce_spark.sources import load_table
@@ -663,9 +663,9 @@ def graph_temporal_reach_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both hops — without the pin the two-window sessionization chain
     # replays SIXTEEN times (measured: 16 parquet scans / 32 Window
     # nodes in the unpinned plan, zero ReusedExchange)
-    iv = sess.groupBy("user_id", "sid").agg(
+    iv = pin(sess.groupBy("user_id", "sid").agg(
         F.min("us").alias("s_us"), F.max("us").alias("e_us")
-    ).localCheckpoint()
+    ))
     bucketed = iv.select(
         "user_id",
         "s_us",
@@ -684,7 +684,9 @@ def graph_temporal_reach_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").alias("v"), F.col("s_us").alias("sb"),
         F.col("e_us").alias("eb"), "hb",
     )
-    contacts = (
+    # h1 AND h2 both read the contact graph — pin it so the bucket
+    # join + overlap verify runs once
+    contacts = pin(
         a.join(b, "hb")
         .filter(
             (F.col("u") != F.col("v"))
@@ -693,9 +695,6 @@ def graph_temporal_reach_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("u", "v", F.greatest("sa", "sb").alias("t"))
         .distinct()
-        # h1 AND h2 both read the contact graph — pin it so the bucket
-        # join + overlap verify runs once
-        .localCheckpoint()
     )
     h1 = (
         contacts.filter((F.col("u") < 10) & (F.col("v") >= 10))
@@ -753,7 +752,7 @@ def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     The overrides live on a CHILD session (``conf_scoped_session`` —
     isolated SQLConf over the shared SparkContext), so no other query
     can observe them regardless of submission interleaving; the plan is
-    optimized and materialized eagerly (localCheckpoint) on the child
+    optimized and materialized eagerly (pin) on the child
     and the driver reads the checkpointed result.  Plan shape (bloom
     aggregate on the creation side, might_contain on the fact scan) is
     pinned in tests/test_plans.py; conf isolation is pinned in
@@ -780,7 +779,7 @@ def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum("l_extendedprice").alias("revenue"),
         )
     )
-    return joined.localCheckpoint()  # optimize + run under the child confs
+    return pin(joined)  # optimize + run under the child confs
 
 
 @query(

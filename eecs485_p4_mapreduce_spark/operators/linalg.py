@@ -31,6 +31,7 @@ from eecs485_p4_mapreduce_spark.functions import kmeansfn
 from eecs485_p4_mapreduce_spark.functions.modelstore import (
     load_or_train,
     local_frame,
+    pin,
 )
 from eecs485_p4_mapreduce_spark.functions.numeric import (
     hu_ratio,
@@ -155,7 +156,6 @@ def embedding_top_pc_power_iteration(spark: SparkSession, sf_dir: str) -> DataFr
 # Local underscore aliases keep this module's call sites unchanged.
 _KM_K = kmeansfn.KM_K
 _KM_ROUNDS = kmeansfn.KM_ROUNDS
-_km_assign = kmeansfn.km_assign
 _lloyds_assignments = kmeansfn.lloyds_assignments
 _kmeans_cte = kmeansfn.kmeans_cte
 
@@ -700,7 +700,7 @@ def eval_ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint the assigned corpus once so the trained-assignment
     # lineage isn't re-derived per reference (graph_triangle_count
     # precedent)
-    corpus = assigned.select("vec_id", "v", "k").localCheckpoint()
+    corpus = pin(assigned.select("vec_id", "v", "k"))
     cos = F.expr(
         "aggregate(zip_with(qv, v, (x, y) -> x * y), cast(0.0 as double),"
         " (acc, x) -> acc + x)"
@@ -929,7 +929,7 @@ def embedding_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the newly chosen center (a broadcast 64-int literal), a least()
     fold into the running min-distance column, and a TakeOrdered(1)
     argmax (per-partition top-1 + driver merge, no global sort).  The
-    frame is localCheckpoint'd per round (the BPE-loop discipline) so
+    frame is pinned per round (the BPE-loop discipline) so
     round r+1 rescans materialized state instead of replaying r rounds
     of lineage; only k 1-row argmax results ever reach the driver.
     k*n distance evaluations total — the Gonzalez bound."""
@@ -956,13 +956,13 @@ def embedding_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     picks = [(1, int(first[0]["vec_id"]), 0)]
-    cur = e.withColumn("mind", dist_to(first[0]["qv"])).localCheckpoint()
+    cur = pin(e.withColumn("mind", dist_to(first[0]["qv"])))
     for r in range(2, _KC_K + 1):
         top = cur.orderBy(F.desc("mind"), "vec_id").limit(1).collect()[0]
         picks.append((r, int(top["vec_id"]), int(top["mind"])))
-        cur = cur.withColumn(
+        cur = pin(cur.withColumn(
             "mind", F.least("mind", dist_to(top["qv"]))
-        ).localCheckpoint()
+        ))
 
     rad = cur.agg(F.max("mind").cast("bigint").alias("coverage_radius"))
     pdf = local_frame(spark, picks, "pick bigint, vec_id bigint, maximin bigint")

@@ -30,6 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from eecs485_p4_mapreduce_spark.functions.modelstore import pin
 from eecs485_p4_mapreduce_spark.plans.registry import query
 from eecs485_p4_mapreduce_spark.sources import load_table, widen_scan
 
@@ -423,7 +424,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (widen_scan): a wide production scan never pays the extra
     # exchange, and the deterministic key is retry-safe.
     base = widen_scan(base, "doc_id")
-    ph = (
+    ph = pin(
         base
         .withColumn("px", F.expr(e["pixels"]))
         .withColumn("s", F.expr(e["psum"]))
@@ -438,8 +439,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.expr(e["bands"]).alias("bands"),
         )
-        .localCheckpoint()  # referenced by both the band join and the verify
-    )
+    )  # referenced by both the band join and the verify
     bd = ph.select("doc_id", F.explode("bands").alias("b")).select(
         "doc_id", F.col("b.k").alias("k"), F.col("b.bv").alias("bv")
     )

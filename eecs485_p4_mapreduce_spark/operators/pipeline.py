@@ -17,7 +17,7 @@ the point of an engine, not just a query zoo.
 Scale shape: stages 0-2 are scan-side expressions plus one fp-keyed
 window; stage 3 is the banded-signature equi-join (16-byte keys only);
 stage 4 is a 5-row broadcast of acceptance thresholds.  The survivor
-id set is localCheckpointed after the MinHash stage so the funnel's
+id set is pinned after the MinHash stage so the funnel's
 later branches never recompute signatures.
 """
 
@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eecs485_p4_mapreduce_spark.functions.textfn import DUCK_TOKENS, tokens
+from eecs485_p4_mapreduce_spark.functions.modelstore import pin
 from eecs485_p4_mapreduce_spark.functions.minhashfn import (
     MINHASH_BANDED_DUCK as _MINHASH_BANDED_DUCK,
 )
@@ -153,7 +154,7 @@ def pipeline_curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .distinct()
     )
-    nd = ex.join(victims, "doc_id", "left_anti").localCheckpoint()
+    nd = pin(ex.join(victims, "doc_id", "left_anti"))
     counts = nd.groupBy("lang").agg(F.count("*").alias("n_lang"))
     tot = nd.agg(F.count("*").alias("n_total"))
     rates = (
@@ -604,7 +605,7 @@ def pipeline_decontam_mix_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     text never shuffles; the DSIR model is a {4096}-row broadcast
     scoring token occurrences scan-side into one doc-keyed aggregate;
     the mix thresholds are a 5-row broadcast.  The selected id set
-    (ints only) is localCheckpointed — the funnel's three downstream
+    (ints only) is pinned — the funnel's three downstream
     readers never recompute the scoring join (the
     pipeline_curation_end_to_end survivor-set discipline).
     Monotonicity (mixed <= selected <= clean <= raw, per language) is
@@ -677,10 +678,9 @@ def pipeline_decontam_mix_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "lang")
         .agg(F.count("*").alias("n_tok"), F.sum("llr").alias("s"))
     )
-    sel = (
+    sel = pin(
         per_doc.filter(F.col("s") > 0)
         .select("doc_id", "lang", "n_tok")
-        .localCheckpoint()
     )
     counts = sel.groupBy("lang").agg(F.count("*").alias("n_sel"))
     tot = sel.agg(F.count("*").alias("n_tot"))

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from eecs485_p4_mapreduce_spark.functions.modelstore import local_frame
+from eecs485_p4_mapreduce_spark.functions.modelstore import local_frame, pin
 from eecs485_p4_mapreduce_spark.functions.textfn import DUCK_TOKENS, tokens
 from eecs485_p4_mapreduce_spark.functions.numeric import hu_ratio, hu_ratio_sql
 from eecs485_p4_mapreduce_spark.plans.registry import query
@@ -561,7 +561,7 @@ def search_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("rk").alias("first_rank"))
     )
     warr = F.array(*[F.lit(w) for w in _MRR_W])
-    rr = hit.select(
+    rr = pin(hit.select(
         "query_term",
         F.coalesce(F.col("first_rank"), F.lit(0)).cast("bigint").alias(
             "first_rank"
@@ -569,7 +569,7 @@ def search_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("first_rank").isNull(), F.lit(0.0))
         .otherwise(F.element_at(warr, F.col("first_rank").cast("int")))
         .alias("rr"),
-    ).localCheckpoint()
+    ))
     # integer half-up: rr values are exact 6-decimal literals, so the
     # mean is an integer ratio at micro-rr scale — round(double, 6) of
     # the division is the cross-engine half-boundary risk class
@@ -700,12 +700,12 @@ def search_map_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("is_rel").cast("bigint").alias("n_rel_topk"),
     )
     ap = hu_ratio("psum", f"least(r, {_MRR_K}) * 1000000", 6)
-    per_term = pterm.join(F.broadcast(rel), "query_term").select(
+    per_term = pin(pterm.join(F.broadcast(rel), "query_term").select(
         "query_term",
         F.col("r").cast("bigint").alias("n_relevant"),
         "n_rel_topk",
         F.when(F.col("r") == 0, F.lit(None)).otherwise(ap).alias("ap"),
-    ).localCheckpoint()
+    ))
     map_ = per_term.agg(
         hu_ratio(
             "sum(cast(coalesce(ap, 0.0) as decimal(18,6)) * 1000000)",

@@ -33,6 +33,7 @@ from eecs485_p4_mapreduce_spark.functions.kmeansfn import (
     kmeans_cte as _kmeans_cte,
     lloyds_assignments as _lloyds_assignments,
 )
+from eecs485_p4_mapreduce_spark.functions.modelstore import pin
 from eecs485_p4_mapreduce_spark.functions.textfn import DUCK_TOKENS, tokens
 from eecs485_p4_mapreduce_spark.plans.registry import query
 from eecs485_p4_mapreduce_spark.sources import load_table
@@ -47,13 +48,6 @@ _COS_FOLD = (
     "aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0.0 as double),"
     " (acc, x) -> acc + x)"
 )
-
-
-def _cos_spark(a: str, b: str) -> str:
-    num = _COS_FOLD.format(a=a, b=b)
-    na = _COS_FOLD.format(a=a, b=a)
-    nb = _COS_FOLD.format(a=b, b=b)
-    return f"{num} / (sqrt({na}) * sqrt({nb}))"
 
 
 def _semdedup_oracle() -> str:
@@ -107,11 +101,10 @@ def dedup_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dot), not three -- sqrt(fold(v,v)) per pair was ~2/3 of the
     # interpreted-lambda cost, and the cached value is the identical
     # double the oracle's per-pair sqrt(list_inner_product(v,v)) yields.
-    assigned = (
+    assigned = pin(
         assigned_raw.withColumn(
             "nv", F.sqrt(F.expr(_COS_FOLD.format(a="v", b="v")))
         )
-        .localCheckpoint()
     )
     a = assigned.select(
         "k", F.col("vec_id").alias("a_id"), F.col("v").alias("av"),
@@ -205,7 +198,10 @@ def sketch_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame
     bound flag the oracle asserts).
     """
     docs = load_table(spark, sf_dir, "documents")
-    tc = (
+    # referenced three times below (bucket sums, total, top-k);
+    # vocabulary-sized, so pinning it is cheap and stops projection
+    # collapse from re-tokenizing the corpus per consumer
+    tc = pin(
         docs.select(F.explode(tokens("text")).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").cast("bigint").alias("cnt"))
@@ -215,10 +211,6 @@ def sketch_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame
             F.expr(_hex_int_sql("spark", "md5(tok)", 1)).alias("h1"),
             F.expr(_hex_int_sql("spark", "md5(tok)", 9)).alias("h2"),
         )
-        # referenced three times below (bucket sums, total, top-k);
-        # vocabulary-sized, so pinning it is cheap and stops projection
-        # collapse from re-tokenizing the corpus per consumer
-        .localCheckpoint()
     )
     bucket = (F.col("h1") + F.col("i") * (2 * F.col("h2") + 1)) % _M32 % _CM_W
     buckets = (

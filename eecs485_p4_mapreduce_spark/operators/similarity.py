@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from eecs485_p4_mapreduce_spark.functions.modelstore import pin
 from eecs485_p4_mapreduce_spark.functions.numeric import (
     hu_ratio,
     hu_ratio_signed,
@@ -239,7 +240,7 @@ def ann_lsh_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # bucket is an expensive derived column used by both join sides ->
     # materialize once (cf. the projection-collapse notes in dedup.py)
-    bucketed = e.withColumn("bucket", F.expr(_bucket_expr_spark())).localCheckpoint()
+    bucketed = pin(e.withColumn("bucket", F.expr(_bucket_expr_spark())))
     q = F.broadcast(
         bucketed.filter(F.col("vec_id") < _NQ).select(
             F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "bucket"
@@ -431,7 +432,7 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    bucketed = e.withColumn("bucket", F.expr(_bucket_expr_spark())).localCheckpoint()
+    bucketed = pin(e.withColumn("bucket", F.expr(_bucket_expr_spark())))
     q = F.broadcast(
         bucketed.filter(F.col("vec_id") < _NQ)
         .withColumn("probe", F.explode(F.expr(_probes_sql("spark"))))
@@ -1511,7 +1512,7 @@ def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = e.filter(F.col("label") == _BTX_TGT).select(
         F.col("vec_id").alias("y_id"), F.col("v").alias("yv"), norm.alias("yn")
     )
-    p = (
+    p = pin(
         s.crossJoin(F.broadcast(t))
         .select(
             "x_id",
@@ -1521,7 +1522,6 @@ def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("cos_r"),
         )
-        .localCheckpoint()
     )
     wx = Window.partitionBy("x_id").orderBy(F.desc("cos_r"), F.asc("y_id"))
     wy = Window.partitionBy("y_id").orderBy(F.desc("cos_r"), F.asc("x_id"))
@@ -1957,7 +1957,7 @@ def eval_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("p_bp"),
     )
-    b = p.groupBy(
+    b = pin(p.groupBy(
         F.least(F.expr("p_bp div 1000"), F.lit(9)).alias("bin")
     ).agg(
         F.count("*").cast("bigint").alias("n_k"),
@@ -1974,7 +1974,7 @@ def eval_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * (F.col("p_bp") - 10000 * F.col("y"))
             ).cast("decimal(38,0)")
         ).alias("ssq"),
-    ).localCheckpoint()  # global rollup + per-bin terms both read it
+    ))  # global rollup + per-bin terms both read it
     g = b.agg(
         F.sum("n_k").cast("bigint").alias("n"),
         F.sum("sy").cast("bigint").alias("sy_tot"),
@@ -2124,12 +2124,12 @@ def eval_brier_resolution_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("p_bp"),
     )
-    b = p.groupBy(
+    b = pin(p.groupBy(
         F.least(F.expr("p_bp div 1000"), F.lit(9)).alias("bin")
     ).agg(
         F.count("*").cast("bigint").alias("n_k"),
         F.sum("y").cast("bigint").alias("sy"),
-    ).localCheckpoint()  # global rollup + per-bin terms both read it
+    ))  # global rollup + per-bin terms both read it
     g = b.agg(
         F.sum("n_k").cast("bigint").alias("n"),
         F.sum("sy").cast("bigint").alias("sy_tot"),
@@ -2498,12 +2498,12 @@ def eval_isotonic_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("p_bp"),
     )
-    b = p.groupBy(
+    b = pin(p.groupBy(
         F.least(F.expr("p_bp div 1000"), F.lit(9)).alias("bin")
     ).agg(
         F.count("*").cast("bigint").alias("n_k"),
         F.sum("y").cast("bigint").alias("sy"),
-    ).localCheckpoint()  # cumulative window + joins all read the tiny frame
+    ))  # cumulative window + joins all read the tiny frame
     wbin = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
     c = b.select(
         "bin", "n_k", "sy",
@@ -2751,13 +2751,13 @@ def eval_model_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("label") >= 5, 1).otherwise(0).alias("y"),
         F.round(F.expr(dot), 6).alias("logit"),
     )
-    p = e.select(
+    p = pin(e.select(
         "y",
         F.round(10000 * (1 / (1 + F.exp(-F.col("logit")))))
         .cast("bigint")
         .alias("p_bp"),
-    ).localCheckpoint()  # the bin rollup AND the histogram read it
-    b = p.groupBy(
+    ))  # the bin rollup AND the histogram read it
+    b = pin(p.groupBy(
         F.least(F.expr("p_bp div 1000"), F.lit(9)).alias("bin")
     ).agg(
         F.count("*").cast("bigint").alias("n_k"),
@@ -2769,7 +2769,7 @@ def eval_model_card(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " as decimal(38,0))"
             )
         ).alias("ssq"),
-    ).localCheckpoint()
+    ))
     g = b.agg(
         F.sum("n_k").cast("bigint").alias("n"),
         F.sum("sy").cast("bigint").alias("sy_tot"),

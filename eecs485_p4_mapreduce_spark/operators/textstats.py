@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from eecs485_p4_mapreduce_spark.functions.modelstore import load_or_train, pin
 from eecs485_p4_mapreduce_spark.functions.numeric import hu_ratio, hu_ratio_sql
 from eecs485_p4_mapreduce_spark.functions.textfn import DUCK_TOKENS, tokens
 from eecs485_p4_mapreduce_spark.plans.registry import query
@@ -556,7 +557,7 @@ def token_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     Degenerate contract (oracle's ``FROM toks, top1`` comma join): a
     corpus with NO adjacent pair anywhere yields an EMPTY readout."""
     docs = load_table(spark, sf_dir, "documents")
-    st = _bpe_string_frame(docs).localCheckpoint()
+    st = pin(_bpe_string_frame(docs))
     top1 = (
         _bpe_pairs(st)
         .groupBy("tok", "nxt")
@@ -793,7 +794,7 @@ def token_bpe_train_3merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     published atomically at the end.  A round with NO adjacent pair is
     a no-op — exactly the oracle's NULL scalar-subquery semantics
     (the old broadcast-crossJoin spelling emptied the stream there).
-    Each round's output string state is localCheckpointed before the
+    Each round's output string state is pinned before the
     next: as one monolithic statement the round-3 scalar subqueries
     re-executed the whole round-1/2 chain (34 s at sf0.01); the
     pinned-round loop runs the identical logic in ~4 s.  The oracle IS
@@ -811,7 +812,7 @@ def _bpe_train_readout(
     """Shared parametric BPE training loop (round-9: the loop, not N
     unrolled rounds) — per-round top-pair selection (bounded 1-row
     model-state collect), literal apply via the `_bpe_apply_pair_str`
-    string-replace kernel with a per-round localCheckpoint of the
+    string-replace kernel with a per-round pin of the
     per-doc STRING state (round 13: the exploded-stream window kernel
     cost one exchange + four window sorts + a full-stream checkpoint
     per round; the string state applies each round as a narrow replace
@@ -821,14 +822,12 @@ def _bpe_train_readout(
     hit) folds ALL stored rounds into one stacked-replace projection —
     a single job with the readout's pair-count exchange as its only
     shuffle."""
-    from eecs485_p4_mapreduce_spark.functions.modelstore import load_or_train
-
     docs = load_table(spark, sf_dir, "documents")
     st = _bpe_string_frame(docs)
     trained: list[DataFrame] = []  # the miss path's final string state
 
     def train() -> list[tuple]:
-        cur = st.localCheckpoint()
+        cur = pin(st)
         merges = []
         for i in range(rounds):
             top1 = (
@@ -841,11 +840,11 @@ def _bpe_train_readout(
             )
             if top1:
                 merges.append((i, top1[0]["tok"], top1[0]["nxt"]))
-                cur = cur.select(
+                cur = pin(cur.select(
                     _bpe_apply_pair_str(
                         F.col("s"), top1[0]["tok"], top1[0]["nxt"]
                     ).alias("s")
-                ).localCheckpoint()
+                ))
         trained.append(cur)
         return merges
 
@@ -888,7 +887,7 @@ def token_bpe_train_8merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE training at production-like depth ({_BPE_DEEP_ROUNDS} merge
     rounds) through the SAME parametric loop as
     ``token_bpe_train_3merges`` — the round-9 proof that the iterative
-    training discipline (per-round localCheckpoint, bounded 1-row
+    training discipline (per-round pin, bounded 1-row
     model-state collects, model-store freshness key) is a loop that
     scales in N, not three unrolled rounds: rounds 4-8 merge tokens
     rounds 1-3 BUILT, so the stored merge list is genuinely
@@ -1678,10 +1677,8 @@ def token_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     join of the two exploded-stream groupings (an empty doc has no row
     in either).  The oracle replays selection AND all three
     applications in one monolithic statement."""
-    from eecs485_p4_mapreduce_spark.functions.modelstore import load_or_train
-
     docs = load_table(spark, sf_dir, "documents")
-    st = _bpe_string_frame(docs, "source").localCheckpoint()
+    st = pin(_bpe_string_frame(docs, "source"))
 
     def train() -> list[tuple]:
         rows = (
@@ -2362,11 +2359,10 @@ def lang_id_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = docs.withColumn("toks", tokens("text")).select(
         "lang", F.expr(_argmax_case(_score_exprs("spark"))).alias("pred")
     )
-    conf = (
+    conf = pin(
         scored.groupBy("lang", "pred")
         .agg(F.count("*").alias("n"))
-        .localCheckpoint()  # marginals + diagonal + per-class all read it
-    )
+    )  # marginals + diagonal + per-class all read it
     rows_ = conf.groupBy(F.col("lang").alias("c")).agg(
         F.sum("n").alias("rn")
     )

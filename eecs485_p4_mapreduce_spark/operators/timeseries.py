@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from eecs485_p4_mapreduce_spark.functions.modelstore import pin
 from eecs485_p4_mapreduce_spark.functions.numeric import (
     davg,
     davg_sql,
@@ -822,15 +823,14 @@ def timeseries_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = bounds.select(
         F.explode(F.sequence("mn", "mx", F.expr("interval 1 hour"))).alias("h")
     )
-    s = (
+    s = pin(
         spine.join(hourly, "h", "left")
         .select(
             F.unix_micros("h").alias("uh"),
             F.coalesce("na", F.lit(0)).cast("bigint").alias("na"),
             F.coalesce("nb", F.lit(0)).cast("bigint").alias("nb"),
         )
-        .localCheckpoint()  # referenced twice (x and y): scan events once
-    )
+    )  # referenced twice (x and y): scan events once
     lags = spark.range(1).select(
         F.explode(F.expr("sequence(0, 3)")).alias("lag_hours")
     )
@@ -1237,9 +1237,9 @@ def stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     the wire; the dims are two 1-row counts broadcast into a 1-row
     readout."""
     e = load_table(spark, sf_dir, "events")
-    obs = e.groupBy(
+    obs = pin(e.groupBy(
         "event_type", F.dayofweek("ts").cast("bigint").alias("dow")
-    ).agg(F.count("*").alias("o")).localCheckpoint()
+    ).agg(F.count("*").alias("o")))
     rt = obs.groupBy("event_type").agg(F.sum("o").alias("r"))
     ct = obs.groupBy("dow").agg(F.sum("o").alias("c"))
     n = obs.agg(F.sum("o").alias("n"))

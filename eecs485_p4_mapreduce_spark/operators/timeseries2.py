@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from eecs485_p4_mapreduce_spark.functions.modelstore import pin
 from eecs485_p4_mapreduce_spark.functions.numeric import (
     hu_ratio,
     hu_ratio_signed,
@@ -974,7 +975,7 @@ def stats_theil_sen_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     of days, constant in row count); the per-type rank window rides the
     same bounded frame.  The event scan itself is one
     map-side-combinable daily aggregate."""
-    filled = _daily_filled(spark, sf_dir).localCheckpoint()
+    filled = pin(_daily_filled(spark, sf_dir))
     a = filled.select(
         "event_type", F.col("x").alias("ax"), F.col("y").alias("ay")
     )
@@ -1067,7 +1068,7 @@ def stats_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL via a lazy CASE.  Scale shape: identical to
     stats_theil_sen_daily — calendar-bounded pair enumeration, one
     map-side-combinable scan."""
-    filled = _daily_filled(spark, sf_dir).localCheckpoint()
+    filled = pin(_daily_filled(spark, sf_dir))
     a = filled.select(
         "event_type", F.col("x").alias("ax"), F.col("y").alias("ay")
     )
@@ -1201,7 +1202,7 @@ def resample_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic.  Scale shape: one map-side-combinable daily aggregate
     over the scan, then a banded self-join on the calendar-bounded
     filled grid."""
-    filled = _daily_filled(spark, sf_dir).localCheckpoint()
+    filled = pin(_daily_filled(spark, sf_dir))
     w6 = "array(" + ", ".join(str(w) for w in _EWMA_W6) + ")"
     cur = filled.select(
         "event_type", F.col("x").alias("d")

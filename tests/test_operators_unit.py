@@ -932,7 +932,7 @@ def test_unkeyable_corpus_pins_frame_and_publishes_nothing(
 ):
     """An injected corpus (monkeypatched loader, no readable mtime under
     ``sf_dir``) cannot key the store: the derived frame is built and
-    pinned once with localCheckpoint, and nothing is published."""
+    pinned once with ``modelstore.pin``, and nothing is published."""
     from eecs485_p4_mapreduce_spark.functions import modelstore
     from eecs485_p4_mapreduce_spark.operators import dedup
 

@@ -651,27 +651,23 @@ def test_local_frame_plans_a_local_table_scan(spark):
     assert "ExistingRDD" not in plan
 
 
-def _create_dataframe_calls(node):
-    import ast
-
-    return [
-        n
-        for n in ast.walk(node)
-        if isinstance(n, ast.Call)
-        and isinstance(n.func, ast.Attribute)
-        and n.func.attr == "createDataFrame"
-    ]
-
-
-def test_create_dataframe_only_inside_local_frame():
-    """Every driver-sized frame in the package goes through
-    modelstore.local_frame: a ``spark.createDataFrame(`` call anywhere
-    else would bring back the Python-RDD leaf and its per-run Python
-    workers."""
+def _package_calls(owner: str, *methods: str):
+    """``<x>.<method>(`` calls anywhere in the package, split into those
+    inside a function named ``owner`` and the rest, each as
+    ``"<module>:<line> <method>"``."""
     import ast
     import glob
 
     import eecs485_p4_mapreduce_spark as pkg
+
+    def calls(node):
+        return [
+            n
+            for n in ast.walk(node)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr in methods
+        ]
 
     root = os.path.dirname(pkg.__file__)
     inside, stray = [], []
@@ -681,16 +677,116 @@ def test_create_dataframe_only_inside_local_frame():
         allowed = {
             id(c)
             for fn in ast.walk(tree)
-            if isinstance(fn, ast.FunctionDef) and fn.name == "local_frame"
-            for c in _create_dataframe_calls(fn)
+            if isinstance(fn, ast.FunctionDef) and fn.name == owner
+            for c in calls(fn)
         }
         rel = os.path.relpath(path, root)
-        for c in _create_dataframe_calls(tree):
-            (inside if id(c) in allowed else stray).append(f"{rel}:{c.lineno}")
+        for c in calls(tree):
+            site = f"{rel}:{c.lineno} {c.func.attr}"
+            (inside if id(c) in allowed else stray).append(site)
+    return inside, stray
+
+
+def test_create_dataframe_only_inside_local_frame():
+    """Every driver-sized frame in the package goes through
+    modelstore.local_frame: a ``spark.createDataFrame(`` call anywhere
+    else would bring back the Python-RDD leaf and its per-run Python
+    workers."""
+    inside, stray = _package_calls("local_frame", "createDataFrame")
     assert inside and all(
         c.startswith("functions/modelstore.py:") for c in inside
     ), inside
     assert not stray, stray
+
+
+def test_checkpoint_only_inside_pin():
+    """Every materialize-for-reuse site goes through modelstore.pin, a
+    local pin; the one reliable ``.checkpoint(`` is ranking's ranged
+    frame.  A call anywhere else would choose its own durability."""
+    inside, stray = _package_calls("pin", "localCheckpoint")
+    assert len(inside) == 1 and inside[0].startswith(
+        "functions/modelstore.py:"
+    ), inside
+    assert not stray, stray
+    inside, stray = _package_calls("_pin_partitioning", "checkpoint")
+    assert len(inside) == 1 and inside[0].startswith(
+        "functions/ranking.py:"
+    ), inside
+    assert not stray, stray
+
+
+def test_pin_stays_local_beside_a_reliable_checkpoint(tmp_path):
+    """modelstore.pin is a localCheckpoint (one ``getPersistentRDDs``
+    entry, no checkpoint files) for eager and lazy pins, whether or not
+    ``SPARK_GRAFT_CHECKPOINT_DIR`` is set and whether or not an earlier
+    ranking pin gave the SparkContext a checkpoint dir; the ranking pin
+    itself writes files there and adds no entry.  So the order queries
+    run in cannot switch a pin's mode.  Rows are equal on every path and
+    each plans a ``Scan ExistingRDD`` leaf.  Runs in its own subprocess
+    because setCheckpointDir is SparkContext-sticky."""
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ckpt = str(tmp_path / "envckpt")
+    script = textwrap.dedent(
+        f"""
+        import os, sys
+        sys.path.insert(0, {repo!r})
+        from pyspark.sql import SparkSession
+        from eecs485_p4_mapreduce_spark.functions.modelstore import pin
+        from eecs485_p4_mapreduce_spark.functions.ranking import (
+            _pin_partitioning,
+        )
+        spark = (SparkSession.builder.master("local[2]")
+                 .config("spark.ui.enabled", "false").getOrCreate())
+        spark.sparkContext.setLogLevel("ERROR")
+        sc = spark.sparkContext
+        ckpt = {ckpt!r}
+
+        def entries():
+            return sc._jsc.getPersistentRDDs().size()
+
+        def files():
+            return sum(len(fs) for _, _, fs in os.walk(ckpt))
+
+        df = spark.range(0, 200).selectExpr("id", "id * 7 % 31 AS v")
+        want = sorted(map(tuple, df.collect()))
+
+        def check(p, added_entries, added_files, e0, f0):
+            assert sorted(map(tuple, p.collect())) == want
+            plan = p._jdf.queryExecution().executedPlan().toString()
+            assert "Scan ExistingRDD" in plan, plan
+            assert entries() - e0 == added_entries, (entries(), e0)
+            assert (files() > f0) == added_files, (files(), f0)
+
+        def check_pins():
+            for eager in (True, False):
+                e0, f0 = entries(), files()
+                check(pin(df, eager=eager), 1, False, e0, f0)
+
+        assert sc.getCheckpointDir() is None
+        check_pins()
+        assert sc.getCheckpointDir() is None and not os.path.exists(ckpt)
+
+        e0, f0 = entries(), files()
+        check(_pin_partitioning(df), 0, True, e0, f0)
+        assert ckpt in sc.getCheckpointDir(), sc.getCheckpointDir()
+        check_pins()
+        print("PIN_OK")
+        """
+    )
+    env = dict(os.environ, SPARK_GRAFT_CHECKPOINT_DIR=ckpt)
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env=env,
+        cwd=str(tmp_path),
+    )
+    assert "PIN_OK" in out.stdout, out.stdout + out.stderr
 
 
 def test_frame_store_publishes_reads_and_stays_fresh(spark, tmp_path, monkeypatch):

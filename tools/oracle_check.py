@@ -22,12 +22,14 @@ here first.
 
 ``--chunk N`` (full-registry runs) executes the sweep as subprocess
 batches of N queries, each in a FRESH JVM, and merges the partial
-results into the one artifact.  Needed for vanilla sweeps at sf0.1+:
-a vanilla session runs the default 1g driver heap, and ~300 queries of
-accumulated localCheckpoint blocks (the memo-cache design) plus one
-heavy wedge enumeration OOM a single JVM even though every query
-passes in isolation -- chunking bounds the accumulation while every
-query still runs on a vanilla session.
+results into the one artifact.  It is needed only at high core counts.
+The per-query release (:func:`_release_blocks`) bounds a sweep's heap
+to about one query's state, and on ``local[4]`` the whole sf0.1
+registry runs on one vanilla JVM with the default 1g driver heap.  On
+``local[32]`` the same heap once OOM'd on accumulated pinned blocks
+plus one heavy wedge enumeration, even though every query passed in
+isolation; chunking bounds that while every query still runs on a
+vanilla session.
 """
 
 from __future__ import annotations
@@ -90,6 +92,19 @@ def _run_chunked(vanilla: bool, sf_dir: str, chunk: int) -> int:
                 if results.get(n, {}).get("err") is not None
             )
     print(f"\n{len(names) - failures}/{len(names)} passed (chunked x{chunk})")
+    _write_artifact(
+        results, sf_dir, len(names) - failures, len(names),
+        vanilla=vanilla, chunked=chunk,
+    )
+    return 1 if failures else 0
+
+
+def _write_artifact(
+    results: dict, sf_dir: str, passed: int, total: int, **meta
+) -> None:
+    """Write a full-registry sweep's per-query ``results`` plus a
+    ``_meta`` entry (HEAD, sf_dir, ``meta``, timestamp, pass count) to
+    ``CORRECTNESS_LOCAL[_<sf>].json`` at the repo root."""
     head = subprocess.run(
         ["git", "-C", REPO, "rev-parse", "HEAD"],
         capture_output=True, text=True,
@@ -97,11 +112,10 @@ def _run_chunked(vanilla: bool, sf_dir: str, chunk: int) -> int:
     results["_meta"] = {
         "head": head,
         "sf_dir": sf_dir,
-        "vanilla": vanilla,
-        "chunked": chunk,
+        **meta,
         "when": time.strftime("%Y-%m-%d %H:%M:%S"),
-        "passed": len(names) - failures,
-        "total": len(names),
+        "passed": passed,
+        "total": total,
     }
     base = os.path.basename(os.path.normpath(sf_dir))
     suffix = "" if base == "sf0.01" else f"_{base}"
@@ -109,12 +123,11 @@ def _run_chunked(vanilla: bool, sf_dir: str, chunk: int) -> int:
     with open(out, "w") as f:
         json.dump(results, f, indent=1, sort_keys=True)
     print(f"wrote {out}")
-    return 1 if failures else 0
 
 
 def _release_blocks(spark) -> None:
     """Per-query block release (round 10): a sweep used to accumulate
-    every prior query's localCheckpoint RDD blocks in the driver heap —
+    every prior query's pinned RDD blocks in the driver heap —
     at --chunk 48 on a vanilla 1g JVM, ~20 predecessors' blocks OOM'd
     graph_centrality_2hop even though it passes isolated.  Once a
     query's rows are collected its blocks are garbage (stored models
@@ -270,24 +283,10 @@ def main() -> int:
         with open(partial, "w") as f:
             json.dump(results, f)
     if set(names) == set(REGISTRY):
-        head = subprocess.run(
-            ["git", "-C", REPO, "rev-parse", "HEAD"],
-            capture_output=True, text=True,
-        ).stdout.strip()
-        results["_meta"] = {
-            "head": head,
-            "sf_dir": sf_dir,
-            "vanilla": vanilla,
-            "when": time.strftime("%Y-%m-%d %H:%M:%S"),
-            "passed": len(names) - failures,
-            "total": len(names),
-        }
-        base = os.path.basename(os.path.normpath(sf_dir))
-        suffix = "" if base == "sf0.01" else f"_{base}"
-        out = os.path.join(REPO, f"CORRECTNESS_LOCAL{suffix}.json")
-        with open(out, "w") as f:
-            json.dump(results, f, indent=1, sort_keys=True)
-        print(f"wrote {out}")
+        _write_artifact(
+            results, sf_dir, len(names) - failures, len(names),
+            vanilla=vanilla,
+        )
     return 1 if failures else 0
 
 
