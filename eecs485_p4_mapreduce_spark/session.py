@@ -15,7 +15,15 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# The directory holding this package, so Python workers started from any
+# cwd can import it (and its daemon module).
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the cores this process may run on (what
+    ``nproc`` prints)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(app_name: str = "spark-graft", *, cpus: int | None = None) -> SparkSession:
@@ -24,7 +32,7 @@ def get_spark(app_name: str = "spark-graft", *, cpus: int | None = None) -> Spar
     Test/bench entry point only -- the driver supplies its own session to
     ``__spark_entry__.entry``/``queries``.
     """
-    n = cpus or DEFAULT_SHUFFLE_PARTITIONS
+    n = cpus or default_cpus()
     return (
         # local[n, 2]: allow one task retry, mirroring the reference's
         # dead-worker task reassignment (SURVEY.md §2.A10) -- a failed
@@ -45,6 +53,11 @@ def get_spark(app_name: str = "spark-graft", *, cpus: int | None = None) -> Spar
         # interpreted as UTC instants, matching the DuckDB oracle.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # Workers import the installed, compiled PySpark instead of the
+        # source-only archives the JVM puts first on their path
+        # (pydaemon.py).
+        .config("spark.python.daemon.module", "eecs485_p4_mapreduce_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .getOrCreate()
     )

@@ -11,6 +11,7 @@ exe-compat path.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -100,8 +101,15 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 
 
 def run_sql(spark, sf_dir: str, sql: str):
-    """Register all table views, then run one SQL text -- the shared
-    execution path for queries whose Spark and DuckDB spellings are the
-    same string (relational4/relational5)."""
-    register_views(spark, sf_dir)
+    """Register the table views the SQL text names (as whole words), then
+    run it -- the shared execution path for queries whose Spark and DuckDB
+    spellings are the same string (relational4/relational5).  Each view
+    costs a schema-inference job, so the other tables are not loaded."""
+    # Set here, not only by the ``events`` loader: timestamp_ntz columns
+    # cast to or compared with timestamps must read as UTC, as in the
+    # DuckDB oracle, whichever tables the text names.
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    for name in TABLES:
+        if re.search(rf"\b{name}\b", sql, re.IGNORECASE):
+            load_table(spark, sf_dir, name).createOrReplaceTempView(name)
     return spark.sql(sql)

@@ -293,6 +293,25 @@ def test_job_module_import_leaves_registry_unloaded():
     assert run.stdout.strip() == "[]"
 
 
+def test_package_import_leaves_pyspark_unloaded():
+    """``python -m eecs485_p4_mapreduce_spark.pydaemon`` imports the
+    package before the daemon chooses where PySpark comes from, so the
+    package ``__init__`` must import no ``pyspark`` module."""
+    code = (
+        "import sys, eecs485_p4_mapreduce_spark; "
+        "print(sorted(m for m in sys.modules if m.split('.')[0] in ('pyspark', 'py4j')))"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    run = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert run.stdout.strip() == "[]"
+
+
 @needs_ref
 def test_two_jobs_fifo_isolated_outputs(spark, tmp_path):
     """Back-to-back job submission (ref tests/test_manager_03.py:58-104:

@@ -47,6 +47,7 @@ import duckdb  # noqa: E402
 
 from eecs485_p4_mapreduce_spark import get_spark  # noqa: E402
 from eecs485_p4_mapreduce_spark.plans import REGISTRY  # noqa: E402
+from eecs485_p4_mapreduce_spark.session import default_cpus  # noqa: E402
 from eecs485_p4_mapreduce_spark.sources import TABLES  # noqa: E402
 from tools.canon import canon as _canon  # noqa: E402
 from tools.canon import close as _close  # noqa: E402
@@ -183,8 +184,7 @@ def main() -> int:
     if vanilla:
         from pyspark.sql import SparkSession
 
-        cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
-        spark = SparkSession.builder.master(f"local[{cpus}]").getOrCreate()
+        spark = SparkSession.builder.master(f"local[{default_cpus()}]").getOrCreate()
     else:
         spark = get_spark("oracle-check")
     failures = 0
