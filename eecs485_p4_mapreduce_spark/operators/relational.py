@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from eecs485_p4_mapreduce_spark.functions.numeric import davg, davg_sql, dsum, dsum_sql
 from eecs485_p4_mapreduce_spark.plans.registry import query
-from eecs485_p4_mapreduce_spark.sources import load_table
+from eecs485_p4_mapreduce_spark.sources import load_table, run_sql
 
 
 @query(
@@ -388,10 +388,9 @@ def pipe_syntax_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     new surface stays available and semantically equal to the oracle's
     classic spelling (DuckDB has no pipe syntax).
     """
-    from eecs485_p4_mapreduce_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return run_sql(
+        spark,
+        sf_dir,
         """
         FROM orders
         |> WHERE o_totalprice > 1000

@@ -7,7 +7,7 @@ ship-mode/commit/receipt dates, no phone/comment columns) has a
 registered adaptation: q1-q8, q10, q13-q15, q17-q19, q22.
 
 Same construction as relational4: one SQL text for both engines via
-``register_views``; all double aggregates decimal-exact; all LIMIT /
+``run_sql``; all double aggregates decimal-exact; all LIMIT /
 threshold comparisons deterministic by construction.
 """
 

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from eecs485_p4_mapreduce_spark.functions.skew import salted_agg_count
 from eecs485_p4_mapreduce_spark.functions.numeric import hu_ratio, hu_ratio_sql
 from eecs485_p4_mapreduce_spark.plans.registry import query
-from eecs485_p4_mapreduce_spark.sources import load_table
+from eecs485_p4_mapreduce_spark.sources import load_table, run_sql
 
 
 @query(
@@ -162,10 +162,9 @@ def param_sql_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the hand-inlined spelling the oracle uses -- including the pushed
     BETWEEN filter.
     """
-    from eecs485_p4_mapreduce_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return run_sql(
+        spark,
+        sf_dir,
         """
         SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS revenue
@@ -242,12 +241,11 @@ def sql_variables_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     inlined spelling the oracle uses.  IF NOT EXISTS + SET keeps the
     query re-runnable within one session (the registry runs every query
     repeatedly)."""
-    from eecs485_p4_mapreduce_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir)
     spark.sql("DECLARE OR REPLACE VARIABLE sg_min_price DOUBLE DEFAULT 200000.0")
     spark.sql("DECLARE OR REPLACE VARIABLE sg_status STRING DEFAULT 'F'")
-    return spark.sql(
+    return run_sql(
+        spark,
+        sf_dir,
         """
         SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS revenue
@@ -292,11 +290,10 @@ def sql_scripting_threshold_search(spark: SparkSession, sf_dir: str) -> DataFram
     from eecs485_p4_mapreduce_spark.functions.confscope import (
         conf_scoped_session,
     )
-    from eecs485_p4_mapreduce_spark.sources import register_views
-
     spark = conf_scoped_session(spark, {"spark.sql.scripting.enabled": "true"})
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return run_sql(
+        spark,
+        sf_dir,
         """
         BEGIN
           DECLARE t DOUBLE DEFAULT 1024.0;

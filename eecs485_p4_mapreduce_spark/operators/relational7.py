@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eecs485_p4_mapreduce_spark.plans.registry import query
-from eecs485_p4_mapreduce_spark.sources import load_table
+from eecs485_p4_mapreduce_spark.sources import load_table, run_sql
 
 
 @query(
@@ -392,10 +392,9 @@ def modern_sql_sugar_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     very next select item).  All three fold away at analysis time: the
     oracle is the fully desugared spelling and the plan (pushdown
     included) is identical."""
-    from eecs485_p4_mapreduce_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return run_sql(
+        spark,
+        sf_dir,
         """
         SELECT * EXCEPT (o_custkey, o_orderdate, o_orderpriority),
                o_totalprice * 0.5 AS half,

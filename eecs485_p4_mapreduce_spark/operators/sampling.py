@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from eecs485_p4_mapreduce_spark.functions.hashfn import hex_int_sql
 from eecs485_p4_mapreduce_spark.plans.registry import query
-from eecs485_p4_mapreduce_spark.sources import load_table, register_views
+from eecs485_p4_mapreduce_spark.sources import load_table, run_sql
 
 # hex digit -> value via position scan: DuckDB has no conv(); instr() over
 # this alphabet is identical in both engines (1-based, so subtract 1).
@@ -167,8 +167,9 @@ def sample_weighted_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-pass broadcast into a scan-side filter; the sample itself never
     shuffles.  This is the 100 TB shape for length-balanced corpus
     subsampling."""
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return run_sql(
+        spark,
+        sf_dir,
         f"""
         WITH mx AS (SELECT MAX(n_chars) AS m FROM documents),
         s AS (

@@ -30,7 +30,7 @@ from eecs485_p4_mapreduce_spark.functions.memo import (
 )
 from eecs485_p4_mapreduce_spark.functions.numeric import dsum, dsum_sql
 from eecs485_p4_mapreduce_spark.plans.registry import query
-from eecs485_p4_mapreduce_spark.sources import load_table
+from eecs485_p4_mapreduce_spark.sources import load_table, parquet_schema
 from eecs485_p4_mapreduce_spark.sources.tables import normalize_events_ts
 
 
@@ -48,7 +48,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Must be set BEFORE any schema read of the file.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     # The file source monitors a *directory*; select just the events file.
     raw = (
         spark.readStream.schema(raw_schema)
@@ -483,7 +483,7 @@ def streaming_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame
     load_table(spark, sf_dir, "events").repartitionByRange(4, "ts").write.mode(
         "overwrite"
     ).parquet(src)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
     )
@@ -612,7 +612,7 @@ def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the documents parquet (file source, same pattern
     as events_stream, including the streaming child session)."""
     spark = stream_session(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     return (
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", "1000")

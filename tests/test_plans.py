@@ -535,9 +535,10 @@ def test_cluster_by_plans_exchange_plus_local_sort(spark, sf_dir):
     """SQL physical-layout clauses: CLUSTER BY = hash exchange + within-
     partition sort; DISTRIBUTE BY alone = exchange without sort -- the
     write-side co-location levers (bucketing's ad-hoc cousin)."""
-    from eecs485_p4_mapreduce_spark.sources import register_views
+    from eecs485_p4_mapreduce_spark.sources import TABLES, load_table
 
-    register_views(spark, sf_dir)
+    for name in TABLES:
+        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
     def plan_of(sql: str) -> str:
         buf = io.StringIO()

@@ -651,23 +651,17 @@ def test_local_frame_plans_a_local_table_scan(spark):
     assert "ExistingRDD" not in plan
 
 
-def _package_calls(owner: str, *methods: str):
-    """``<x>.<method>(`` calls anywhere in the package, split into those
-    inside a function named ``owner`` and the rest, each as
-    ``"<module>:<line> <method>"``."""
+def _package_sites(owner: str, matches):
+    """Nodes anywhere in the package for which ``matches(node)`` returns
+    a label, split into those inside a function named ``owner`` and the
+    rest, each as ``"<module>:<line> <label>"``."""
     import ast
     import glob
 
     import eecs485_p4_mapreduce_spark as pkg
 
-    def calls(node):
-        return [
-            n
-            for n in ast.walk(node)
-            if isinstance(n, ast.Call)
-            and isinstance(n.func, ast.Attribute)
-            and n.func.attr in methods
-        ]
+    def found(node):
+        return [n for n in ast.walk(node) if matches(n)]
 
     root = os.path.dirname(pkg.__file__)
     inside, stray = [], []
@@ -678,13 +672,30 @@ def _package_calls(owner: str, *methods: str):
             id(c)
             for fn in ast.walk(tree)
             if isinstance(fn, ast.FunctionDef) and fn.name == owner
-            for c in calls(fn)
+            for c in found(fn)
         }
         rel = os.path.relpath(path, root)
-        for c in calls(tree):
-            site = f"{rel}:{c.lineno} {c.func.attr}"
+        for c in found(tree):
+            site = f"{rel}:{c.lineno} {matches(c)}"
             (inside if id(c) in allowed else stray).append(site)
     return inside, stray
+
+
+def _package_calls(owner: str, *methods: str):
+    """``<x>.<method>(`` calls anywhere in the package, split into those
+    inside a function named ``owner`` and the rest, each as
+    ``"<module>:<line> <method>"``."""
+    import ast
+
+    def matches(n):
+        return (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr in methods
+            and n.func.attr
+        )
+
+    return _package_sites(owner, matches)
 
 
 def test_create_dataframe_only_inside_local_frame():
@@ -712,6 +723,31 @@ def test_checkpoint_only_inside_pin():
     assert len(inside) == 1 and inside[0].startswith(
         "functions/ranking.py:"
     ), inside
+    assert not stray, stray
+
+
+def test_parquet_schema_read_only_inside_parquet_schema():
+    """A parquet schema is read through ``sources.parquet_schema``, which
+    takes a file's schema from its footer on the driver: a
+    ``<x>.read.parquet(...).schema`` anywhere else would run Spark's
+    one-task inference job.  The helper itself keeps that spelling as
+    its fallback for directories and unreadable footers."""
+    import ast
+
+    def matches(n):
+        return (
+            isinstance(n, ast.Attribute)
+            and n.attr == "schema"
+            and isinstance(n.value, ast.Call)
+            and isinstance(n.value.func, ast.Attribute)
+            and n.value.func.attr == "parquet"
+            and isinstance(n.value.func.value, ast.Attribute)
+            and n.value.func.value.attr == "read"
+            and "read.parquet().schema"
+        )
+
+    inside, stray = _package_sites("parquet_schema", matches)
+    assert inside and all(c.startswith("sources/tables.py:") for c in inside), inside
     assert not stray, stray
 
 
