@@ -15,9 +15,27 @@ import os
 import sys
 from collections.abc import Callable
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
+
+
+def _with_repo(path: str) -> str:
+    parts = [p for p in path.split(os.pathsep) if p]
+    return os.pathsep.join(parts if REPO in parts else [REPO, *parts])
+
+
+# Python workers (UDFs, the MapReduce path, stateful stream functions)
+# import the package too, from whatever cwd the session runs in.  A JVM
+# started after this import inherits PYTHONPATH and passes it on to its
+# workers; a SparkContext already running gives ``sc.environment`` to
+# every Python function created from now on.
+os.environ["PYTHONPATH"] = _with_repo(os.environ.get("PYTHONPATH", ""))
+if SparkContext._active_spark_context is not None:
+    _env = SparkContext._active_spark_context.environment
+    _env["PYTHONPATH"] = _with_repo(_env.get("PYTHONPATH", ""))
 
 from eecs485_p4_mapreduce_spark.plans import REGISTRY  # noqa: E402
 

@@ -279,6 +279,26 @@ BENCH_QUERIES = [n for n in _ORDERED if n not in BENCH_EXCLUDE] + [
 ]
 
 
+def warm_up(spark, sf_dir: str) -> None:
+    """Untimed warm-up: JVM + codegen + parquet footer caches (q1), plus
+    one trivial Pandas UDF so Python worker + Arrow spin-up isn't billed
+    to whichever UDF query happens to run first."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import pandas_udf
+
+    REGISTRY["q1_pricing_summary"].fn(spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+
+    @pandas_udf("long")
+    def _warm(s):  # noqa: ANN001
+        return s
+
+    spark.range(32, numPartitions=32).select(_warm(F.col("id"))).write.format(
+        "noop"
+    ).mode("overwrite").save()
+
+
 def main() -> None:
     import argparse
 
@@ -299,22 +319,7 @@ def main() -> None:
     spark = get_spark("spark-graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warmup (untimed): JVM + codegen + parquet footer caches, plus one
-    # trivial Pandas UDF so Python worker + Arrow spin-up isn't billed to
-    # whichever UDF query happens to run first.
-    REGISTRY["q1_pricing_summary"].fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm(s):  # noqa: ANN001
-        return s
-
-    spark.range(32, numPartitions=32).select(_warm(F.col("id"))).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm_up(spark, sf_dir)
 
     times: dict[str, float] = {}
     runs: dict[str, list[float]] = {}

@@ -1,4 +1,4 @@
-"""Freshness token for stored derived state, and the one session map.
+"""Freshness token for stored derived state.
 
 Every stored model and derived frame lives in the content-addressed
 parquet store (functions/modelstore.py), keyed by :func:`mtime_token`:
@@ -7,26 +7,21 @@ store resolves a NEW location and never serves the old corpus's state.
 There are no in-memory caches in front of the store — a hit is a
 parquet read (a scan in the requesting session for frames, a pyarrow
 read for driver-sized models), which is what the reference's
-stage-boundary files are too.
-
-The one map the session still keeps is :data:`BAND_INDEX_TABLES`, the
-names of the streaming band-index tables this application has written
-(streaming/__init__.py); :func:`clear_all_caches` forgets it.
+stage-boundary files are too.  The streaming band index is a catalog
+table under the same token (streaming/__init__.py:_band_index_table);
+the session catalog is its only registry.
 """
 
 from __future__ import annotations
 
 import os
 
-# (applicationId, sf_dir, documents mtime token) -> warehouse table name
-BAND_INDEX_TABLES: dict[tuple, str] = {}
-
 
 def clear_all_caches() -> None:
-    """Forget the streaming band-index names, so the next streaming
-    MinHash probe rewrites its index.  Safe at any point between
-    queries; stored models and frames are on disk and need no release."""
-    BAND_INDEX_TABLES.clear()
+    """No-op: the engine keeps no session-side cache to clear.  Stored
+    state is on disk (a cold reset empties the warehouse), and the band
+    index rebuilds when its location is gone.  Kept only because the
+    benchmark's cold reset (perfbench/worker.py) still calls it."""
 
 
 def mtime_token(sf_dir: str, table: str) -> int | None:

@@ -2,7 +2,15 @@
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
+import pytest
+
 import __spark_entry__ as entrymod
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_oracle_keys_subset_of_queries():
@@ -52,3 +60,30 @@ def test_bench_covers_whole_registry():
     assert benched == set(REGISTRY), set(REGISTRY) ^ benched
     for name, reason in bench.BENCH_EXCLUDE.items():
         assert reason.strip(), f"exclusion without a reason: {name}"
+
+
+@pytest.mark.parametrize("session_first", [True, False])
+def test_entry_puts_repo_on_worker_path(tmp_path, session_first):
+    """A vanilla session run from an empty cwd with no ``PYTHONPATH``:
+    once ``__spark_entry__`` is imported, its Python workers import the
+    package, whether the session was built before the import or after."""
+    session = "spark = SparkSession.builder.master('local[1]').getOrCreate(); "
+    entry = f"sys.path.insert(0, {REPO!r}); import __spark_entry__; "
+    code = (
+        "import sys; from pyspark.sql import SparkSession; "
+        + (session + entry if session_first else entry + session)
+        + "from eecs485_p4_mapreduce_spark.mapreduce.job import keyof; "
+        "print(spark.sparkContext.parallelize(['k\\tv'], 1).map(keyof).collect()); "
+        "spark.stop()"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert run.stdout.strip().splitlines()[-1] == "['k']"

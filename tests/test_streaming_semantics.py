@@ -599,18 +599,7 @@ def test_idle_timeout_sessions_timer_and_restart(spark):
     nothing — append output is exactly-once-at-close."""
     import time
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from eecs485_p4_mapreduce_spark import streaming as S
 
@@ -618,51 +607,6 @@ def test_idle_timeout_sessions_timer_and_restart(spark):
     ckpt = tempfile.mkdtemp(prefix="sg-ckpt-")
     sink = tempfile.mkdtemp(prefix="sg-sink-")
     t = lambda h, m: dt.datetime(2024, 1, 1, h, m)  # noqa: E731
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("session_start", TimestampType()),
-            StructField("session_end", TimestampType()),
-            StructField("n_events", LongType()),
-            StructField("closed_by", StringType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("uids", ArrayType(LongType())),
-            StructField("sts", ArrayType(LongType())),
-            StructField("lts", ArrayType(LongType())),
-            StructField("ns", ArrayType(LongType())),
-        ]
-    )
-
-    def idle_fn(key, pdfs, state: GroupState):
-        # the production fallback spelling, verbatim semantics
-        if state.hasTimedOut:
-            wm_us = state.getCurrentWatermarkMs() * 1000
-            open_ = S._idle_unpack(state.get) if state.exists else {}
-            closed, open_ = S._idle_close_expired(open_, wm_us)
-        else:
-            open_ = S._idle_unpack(state.get) if state.exists else {}
-            closed = []
-            parts = [p for p in pdfs if len(p)]
-            if parts:
-                pdf = pd.concat(parts).sort_values(["user_id", "ts"])
-                closed, open_ = S._idle_merge_batch(open_, pdf)
-        if open_:
-            state.update(S._idle_pack(open_))
-            earliest = min(v[1] for v in open_.values())
-            state.setTimeoutTimestamp(
-                max(
-                    earliest // 1000 + S._IDLE_GAP_MS,
-                    state.getCurrentWatermarkMs() + 1,
-                )
-            )
-        else:
-            state.remove()
-        if closed:
-            yield S._idle_emit(closed)
 
     def run_once():
         stream = (
@@ -678,9 +622,9 @@ def test_idle_timeout_sessions_timer_and_restart(spark):
         q = (
             stream.groupBy("shard")
             .applyInPandasWithState(
-                idle_fn,
-                outputStructType=out_schema,
-                stateStructType=state_schema,
+                S._idle_update,
+                outputStructType=S._IDLE_OUT,
+                stateStructType=S._IDLE_STATE,
                 outputMode="append",
                 timeoutConf=GroupStateTimeout.EventTimeTimeout,
             )
@@ -829,3 +773,178 @@ def test_band_index_follows_in_place_corpus_rewrite(
     os.replace(half, corpus / "documents.parquet")
     n_half = _band_index_table(spark, str(corpus)).count()
     assert 0 < n_half < n_full
+
+
+def _jobs_run_by(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` starts.  The status tracker follows
+    the listener bus, which handles jobs in the order they start: once a
+    marker job started after ``fn`` shows, so does every job ``fn`` ran."""
+    import time
+
+    sc = spark.sparkContext
+    group, marker = f"sg-jobs-{uuid.uuid4().hex}", f"sg-marker-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, "counted")
+        fn()
+        sc.setJobGroup(marker, "marker")
+        spark.range(1).write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(marker) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(marker)
+    return list(tracker.getJobIdsForGroup(group))
+
+
+def test_band_index_is_reused_and_rebuilt_when_deleted(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The session catalog is the band index's registry: a second call in
+    the same application reads the stored table and runs no job.
+    Deleting its location, as a cold reset that empties the warehouse
+    does, makes the next call rebuild it with the same rows."""
+    import shutil
+
+    from eecs485_p4_mapreduce_spark.functions import modelstore
+    from eecs485_p4_mapreduce_spark.streaming import _band_index_table
+
+    monkeypatch.setattr(modelstore, "warehouse_path", lambda s: str(tmp_path / "wh"))
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    shutil.copy(os.path.join(sf_dir, "documents.parquet"), corpus)
+    first = sorted(_band_index_table(spark, str(corpus)).collect())
+    assert first
+
+    assert _jobs_run_by(spark, lambda: _band_index_table(spark, str(corpus))) == []
+
+    loc = {os.path.dirname(f) for f in _band_index_table(spark, str(corpus)).inputFiles()}
+    assert len(loc) == 1
+    shutil.rmtree(loc.pop().removeprefix("file:"))
+    built = []
+    assert _jobs_run_by(
+        spark, lambda: built.append(_band_index_table(spark, str(corpus)))
+    )
+    assert sorted(built[0].collect()) == first
+
+
+def test_band_index_probe_scans_buckets_without_exchange(spark, sf_dir):
+    """With broadcast joins off, the streaming MinHash probe joins the
+    band index as stored: its side of the sort-merge join is a bucketed
+    scan (``Bucketed: true``) with no exchange above it, so no
+    micro-batch re-shuffles the corpus."""
+    import contextlib
+    import io
+    import re
+
+    from eecs485_p4_mapreduce_spark import streaming as S
+    from eecs485_p4_mapreduce_spark.functions.confscope import stream_session
+
+    class Captured(Exception):
+        pass
+
+    def capture(stream_df, **_kw):
+        raise Captured(stream_df)
+
+    child = stream_session(spark)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = child.conf.get(key)
+    child.conf.set(key, "-1")
+    orig = S.run_to_completion
+    S.run_to_completion = capture
+    try:
+        with pytest.raises(Captured) as got:
+            S.streaming_minhash_incremental(spark, sf_dir)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            got.value.args[0].explain()
+    finally:
+        S.run_to_completion = orig
+        child.conf.set(key, prev)
+
+    lines = buf.getvalue().splitlines()
+
+    def col(line: str) -> int:
+        return re.match(r"[ :+\-]*", line).end()
+
+    scan = next(i for i, ln in enumerate(lines) if "sg_band_index" in ln)
+    assert "FileScan parquet" in lines[scan] and "Bucketed: true" in lines[scan]
+    path, c = [], col(lines[scan])
+    for ln in reversed(lines[:scan]):
+        if col(ln) < c:
+            if "SortMergeJoin" in ln:
+                break
+            path.append(ln)
+            c = col(ln)
+    else:
+        pytest.fail("the band index is not a sort-merge join input")
+    assert not any("Exchange" in ln for ln in path), path
+
+
+def test_user_stats_fold_is_split_invariant():
+    """The accumulator both stateful user-stats spellings share: folding
+    the events in several batches (empty ones included, state carried
+    between calls) equals one groupby, and the micro-unit sums stay
+    integers past float64's exact range."""
+    import numpy as np
+    import pandas as pd
+
+    from eecs485_p4_mapreduce_spark.streaming import _fold_user_stats
+
+    rng = np.random.default_rng(7)
+    n = 3000
+    ev = pd.DataFrame(
+        {
+            "user_id": rng.integers(0, 7, n).astype("int64"),
+            # ~2.5e13 micro-units a row: a user's total exceeds 2**53
+            "value": np.round(rng.uniform(2.4e7, 2.5e7, n), 6),
+        }
+    )
+    empty = ev.iloc[:0]
+    state, out = None, None
+    for batches in ([empty], [ev.iloc[:700], empty], [], [ev.iloc[700:1900], ev.iloc[1900:]]):
+        state, out = _fold_user_stats(state, iter(batches))
+
+    micro = np.rint(ev["value"].to_numpy() * 1e6).astype("int64")
+    g = ev.assign(sm=micro).groupby("user_id")
+    users = ev["user_id"].to_numpy()
+    exact = {int(u): sum(int(m) for m in micro[users == u]) for u in set(users)}
+    assert max(exact.values()) > 2**53
+    uids, ns, mxs, sums = state
+    assert uids == sorted(exact) and sums == [exact[u] for u in uids]
+    assert all(type(v) is int for v in sums)
+    assert ns == g.size().tolist() and mxs == g["value"].max().tolist()
+
+    _, whole = _fold_user_stats(None, [ev])
+    pd.testing.assert_frame_equal(out, whole)
+    assert out["n_events"].dtype == "int64" and out["user_id"].dtype == "int64"
+
+
+def test_stream_run_leaves_no_checkpoint_or_view(spark, sf_dir, tmp_path, monkeypatch):
+    """``run_to_completion`` removes the checkpoint it created and drops
+    its memory-sink view once the returned frame has resolved it; the
+    frame keeps its rows."""
+    from eecs485_p4_mapreduce_spark.functions.confscope import stream_session
+    from eecs485_p4_mapreduce_spark.sources import load_table
+    from eecs485_p4_mapreduce_spark.streaming import streaming_dedup_keys
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    child = stream_session(spark)
+
+    def sg_tables():
+        return {t.name for t in child.catalog.listTables() if t.name.startswith("sg_")}
+
+    before = sg_tables()
+    got = {tuple(r) for r in streaming_dedup_keys(spark, sf_dir).collect()}
+    assert not [p for p in os.listdir(tmp_path) if p.startswith("spark-graft-ckpt-")]
+    assert sg_tables() == before
+    exp = {
+        tuple(r)
+        for r in load_table(spark, sf_dir, "events")
+        .select("user_id", "event_type")
+        .distinct()
+        .collect()
+    }
+    assert got == exp and got

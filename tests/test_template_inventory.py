@@ -139,6 +139,9 @@ INVENTORY: dict[str, tuple[str, str]] = {
         "test_brier_resolution_q4_survives_where_exact_form_wraps"),
     "similarity::_BRIER_Q4_TERM": (F,
         "test_brier_resolution_q4_survives_where_exact_form_wraps"),
+    # streaming
+    "streaming::_LEFT_OUTER_ORACLE": (OO, "left- and full-outer oracles;"
+                                         " spark joins are DF code"),
     # textstats
     "textstats::_TOKEN_RE": (RE_, "Java vs RE2 execute independently"),
     "textstats::_SENT_RE": (RE_, "Java vs RE2 execute independently"),

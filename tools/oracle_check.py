@@ -16,9 +16,9 @@ full-registry sweep is a checked-in, diffable record rather than a prose
 claim.
 
 ``--vanilla`` runs on a bare ``SparkSession.builder.getOrCreate()`` with
-NONE of the engine's session confs -- the driver's exact environment --
-so any query that silently depends on get_spark's configuration fails
-here first.
+NONE of the engine's session confs, then imports ``__spark_entry__`` --
+the driver's exact environment -- so any query that silently depends on
+get_spark's configuration fails here first.
 
 ``--chunk N`` (full-registry runs) executes the sweep as subprocess
 batches of N queries, each in a FRESH JVM, and merges the partial
@@ -133,15 +133,10 @@ def _release_blocks(spark) -> None:
     graph_centrality_2hop even though it passes isolated.  Once a
     query's rows are collected its blocks are garbage (stored models
     and derived frames are parquet on disk, never session memory) — so
-    forget the session's band-index names, clear the SQL cache, then
-    unpersist whatever persistent RDDs remain.  Heap is now bounded by
-    ONE query's state; chunk size is no longer load-bearing."""
+    clear the SQL cache, then unpersist whatever persistent RDDs remain.
+    Heap is now bounded by ONE query's state; chunk size is no longer
+    load-bearing."""
     try:
-        from eecs485_p4_mapreduce_spark.functions.memo import (
-            clear_all_caches,
-        )
-
-        clear_all_caches()
         spark.catalog.clearCache()
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         for k in list(jmap.keys()):
@@ -185,6 +180,8 @@ def main() -> int:
         from pyspark.sql import SparkSession
 
         spark = SparkSession.builder.master(f"local[{default_cpus()}]").getOrCreate()
+        # as the driver does: build the session, then import the contract
+        import __spark_entry__  # noqa: F401
     else:
         spark = get_spark("oracle-check")
     failures = 0

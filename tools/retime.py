@@ -4,7 +4,7 @@ Usage:
     python tools/retime.py [--runs N] [--plans DIR] [--sf DIR] query [query ...]
 
 Times each named query N times (default 3) with the noop sink on one
-warm session (same warmup as bench.py), prints per-run seconds + the
+warm session (bench.py's warm-up), prints per-run seconds + the
 median, and optionally writes ``<query>.txt`` files with
 ``.explain(formatted)`` output into --plans DIR.  A `control` pseudo-run
 of q1_pricing_summary brackets the list so ambient-host swings are
@@ -23,6 +23,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import warm_up  # noqa: E402
 from eecs485_p4_mapreduce_spark import get_spark  # noqa: E402
 from eecs485_p4_mapreduce_spark.plans import REGISTRY  # noqa: E402
 
@@ -48,20 +49,7 @@ def main() -> None:
         spark.sparkContext.setJobDescription(None)
         return dt
 
-    # warmup, identical to bench.py
-    REGISTRY["q1_pricing_summary"].fn(spark, args.sf).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm(s):  # noqa: ANN001
-        return s
-
-    spark.range(32, numPartitions=32).select(_warm(F.col("id"))).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm_up(spark, args.sf)
 
     names = list(args.queries)
     if not args.no_control and "q1_pricing_summary" not in names:
