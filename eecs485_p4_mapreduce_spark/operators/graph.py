@@ -14,17 +14,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from eecs485_p4_mapreduce_spark.functions.minhashfn import MINHASH_BANDED_DUCK
 from eecs485_p4_mapreduce_spark.functions.modelstore import load_or_build_frame, pin
 from eecs485_p4_mapreduce_spark.functions.numeric import (
     hu_ratio,
     hu_ratio_signed,
     hu_ratio_signed_sql,
+    hu_ratio_sql,
 )
 from eecs485_p4_mapreduce_spark.plans.registry import query
 from eecs485_p4_mapreduce_spark.sources import load_table, widen_scan
 
 _ITERS = 10
 _DAMP = 0.85
+
+# The oracles' MinHash-LSH candidate graph (dedup.lsh_candidate_edges in
+# Spark): the banded signatures, then each band-collision edge once as
+# (da, db) with da < db.
+_EDGES_DUCK = f"""{MINHASH_BANDED_DUCK},
+    e AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
+          FROM banded a JOIN banded b
+            ON a.b = b.b AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id)"""
+
+# ... plus adj: every edge in both directions as (u, v).
+_ADJ_DUCK = f"""{_EDGES_DUCK},
+    adj AS (SELECT da AS u, db AS v FROM e
+            UNION ALL SELECT db AS u, da AS v FROM e)"""
 
 
 def _pagerank_oracle() -> str:
@@ -292,12 +307,7 @@ def _triangles_from_oriented(oe: DataFrame) -> DataFrame:
 
 
 def _triangle_oracle() -> str:
-    from eecs485_p4_mapreduce_spark.functions.minhashfn import MINHASH_BANDED_DUCK
-
-    return f"""{MINHASH_BANDED_DUCK},
-    e AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-          FROM banded a JOIN banded b
-            ON a.b = b.b AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
+    return f"""{_EDGES_DUCK},
     tri AS (SELECT ab.da AS a, ab.db AS b, bc.db AS c
             FROM e ab
             JOIN e bc ON bc.da = ab.db
@@ -395,8 +405,6 @@ _KCORE_ROUNDS = 6
 
 
 def _kcore_oracle() -> str:
-    from eecs485_p4_mapreduce_spark.functions.minhashfn import MINHASH_BANDED_DUCK
-
     sql = f"""{MINHASH_BANDED_DUCK},
     e0 AS MATERIALIZED (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
            FROM banded a JOIN banded b
@@ -468,8 +476,6 @@ _LPA_ROUNDS = 2
 
 
 def _lpa_oracle() -> str:
-    from eecs485_p4_mapreduce_spark.functions.minhashfn import MINHASH_BANDED_DUCK
-
     sql = f"""{MINHASH_BANDED_DUCK},
     eu AS MATERIALIZED (
       SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
@@ -549,14 +555,7 @@ _LP_TOPK = 50  # link-prediction readout size
 
 
 def _linkpred_oracle() -> str:
-    from eecs485_p4_mapreduce_spark.functions.minhashfn import MINHASH_BANDED_DUCK
-
-    return f"""{MINHASH_BANDED_DUCK},
-    e AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-          FROM banded a JOIN banded b
-            ON a.b = b.b AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-    adj AS (SELECT da AS u, db AS v FROM e
-            UNION ALL SELECT db AS u, da AS v FROM e),
+    return f"""{_ADJ_DUCK},
     wedge AS (SELECT a1.u AS a, a2.v AS c
               FROM adj a1 JOIN adj a2 ON a2.u = a1.v AND a1.u < a2.v),
     cn AS (SELECT a, c, CAST(COUNT(*) AS BIGINT) AS common_neighbors
@@ -615,12 +614,7 @@ def graph_linkpred_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 def _assortativity_oracle() -> str:
-    from eecs485_p4_mapreduce_spark.functions.minhashfn import MINHASH_BANDED_DUCK
-
-    return f"""{MINHASH_BANDED_DUCK},
-    e AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-          FROM banded a JOIN banded b
-            ON a.b = b.b AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
+    return f"""{_EDGES_DUCK},
     deg AS (SELECT doc_id, COUNT(*) AS degree FROM
             (SELECT da AS doc_id FROM e UNION ALL SELECT db AS doc_id FROM e)
             GROUP BY doc_id),
@@ -707,12 +701,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _clustcoef_oracle() -> str:
-    from eecs485_p4_mapreduce_spark.functions.minhashfn import MINHASH_BANDED_DUCK
-
-    return f"""{MINHASH_BANDED_DUCK},
-    e AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-          FROM banded a JOIN banded b
-            ON a.b = b.b AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
+    return f"""{_EDGES_DUCK},
     tri AS (SELECT ab.da AS a, ab.db AS b, bc.db AS c
             FROM e ab
             JOIN e bc ON bc.da = ab.db
@@ -836,29 +825,29 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CENT_TOPK = 20
 
 
-def _centrality_oracle() -> str:
-    from eecs485_p4_mapreduce_spark.functions.minhashfn import MINHASH_BANDED_DUCK
-
-    return f"""{MINHASH_BANDED_DUCK},
-    e AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-          FROM banded a JOIN banded b
-            ON a.b = b.b AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-    adj AS (SELECT da AS u, db AS v FROM e
-            UNION ALL SELECT db AS u, da AS v FROM e),
-    one AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS n1 FROM adj GROUP BY u),
+def _harmonic_top_sql(adj: str) -> str:
+    """The centrality oracles' tail over the adjacency CTE ``adj``:
+    1-hop and exact 2-hop neighbor counts, the doubled harmonic score
+    2*n1 + n2, and its top ``_CENT_TOPK``."""
+    return f"""one AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS n1 FROM {adj} GROUP BY u),
     two_raw AS (SELECT DISTINCT a1.u AS u, a2.v AS w
-                FROM adj a1 JOIN adj a2 ON a2.u = a1.v
+                FROM {adj} a1 JOIN {adj} a2 ON a2.u = a1.v
                 WHERE a2.v <> a1.u),
     two AS (SELECT t.u, CAST(COUNT(*) AS BIGINT) AS n2
             FROM two_raw t
-            LEFT JOIN adj ON adj.u = t.u AND adj.v = t.w
-            WHERE adj.u IS NULL
+            LEFT JOIN {adj} ON {adj}.u = t.u AND {adj}.v = t.w
+            WHERE {adj}.u IS NULL
             GROUP BY t.u),
     sc AS (SELECT one.u AS doc_id, one.n1, COALESCE(two.n2, 0) AS n2,
                   2 * one.n1 + COALESCE(two.n2, 0) AS harmonic_x2
            FROM one LEFT JOIN two ON two.u = one.u)
     SELECT doc_id, n1, n2, harmonic_x2
-    FROM sc ORDER BY harmonic_x2 DESC, doc_id LIMIT {_CENT_TOPK}
+    FROM sc ORDER BY harmonic_x2 DESC, doc_id LIMIT {_CENT_TOPK}"""
+
+
+def _centrality_oracle() -> str:
+    return f"""{_ADJ_DUCK},
+    {_harmonic_top_sql("adj")}
     """
 
 
@@ -949,31 +938,11 @@ def _capped_adjacency(edges: DataFrame) -> DataFrame:
 
 
 def _centrality_capped_oracle() -> str:
-    from eecs485_p4_mapreduce_spark.functions.minhashfn import MINHASH_BANDED_DUCK
-
-    return f"""{MINHASH_BANDED_DUCK},
-    e AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-          FROM banded a JOIN banded b
-            ON a.b = b.b AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-    adj AS (SELECT da AS u, db AS v FROM e
-            UNION ALL SELECT db AS u, da AS v FROM e),
+    return f"""{_ADJ_DUCK},
     cap AS (SELECT u, v FROM (
               SELECT u, v, ROW_NUMBER() OVER (PARTITION BY u ORDER BY v) AS rk
               FROM adj) WHERE rk <= {_CENT_CAP}),
-    one AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS n1 FROM cap GROUP BY u),
-    two_raw AS (SELECT DISTINCT a1.u AS u, a2.v AS w
-                FROM cap a1 JOIN cap a2 ON a2.u = a1.v
-                WHERE a2.v <> a1.u),
-    two AS (SELECT t.u, CAST(COUNT(*) AS BIGINT) AS n2
-            FROM two_raw t
-            LEFT JOIN cap ON cap.u = t.u AND cap.v = t.w
-            WHERE cap.u IS NULL
-            GROUP BY t.u),
-    sc AS (SELECT one.u AS doc_id, one.n1, COALESCE(two.n2, 0) AS n2,
-                  2 * one.n1 + COALESCE(two.n2, 0) AS harmonic_x2
-           FROM one LEFT JOIN two ON two.u = one.u)
-    SELECT doc_id, n1, n2, harmonic_x2
-    FROM sc ORDER BY harmonic_x2 DESC, doc_id LIMIT {_CENT_TOPK}
+    {_harmonic_top_sql("cap")}
     """
 
 
@@ -1209,20 +1178,10 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _linkpred_jaccard_oracle() -> str:
-    from eecs485_p4_mapreduce_spark.functions.minhashfn import (
-        MINHASH_BANDED_DUCK,
-    )
-    from eecs485_p4_mapreduce_spark.functions.numeric import hu_ratio_sql
-
     j = hu_ratio_sql(
         "pred.common_neighbors * 1000000",
         "dga.deg + dgc.deg - pred.common_neighbors", 6)
-    return f"""{MINHASH_BANDED_DUCK},
-    e AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-          FROM banded a JOIN banded b
-            ON a.b = b.b AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-    adj AS (SELECT da AS u, db AS v FROM e
-            UNION ALL SELECT db AS u, da AS v FROM e),
+    return f"""{_ADJ_DUCK},
     deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS deg FROM adj GROUP BY u),
     wedge AS (SELECT a1.u AS a, a2.v AS c
               FROM adj a1 JOIN adj a2 ON a2.u = a1.v AND a1.u < a2.v),
@@ -1264,7 +1223,6 @@ def graph_linkpred_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree join, TakeOrdered readout — the oracle keeps the
     unoriented adjacency spelling (wedge-multiset equivalence is
     property-pinned)."""
-    from eecs485_p4_mapreduce_spark.functions.numeric import hu_ratio
     from eecs485_p4_mapreduce_spark.operators.dedup import (
         lsh_candidate_edges,
         lsh_oriented_edges,
@@ -1319,14 +1277,7 @@ def graph_linkpred_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _adamic_adar_oracle() -> str:
-    from eecs485_p4_mapreduce_spark.functions.minhashfn import MINHASH_BANDED_DUCK
-
-    return f"""{MINHASH_BANDED_DUCK},
-    e AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-          FROM banded a JOIN banded b
-            ON a.b = b.b AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-    adj AS (SELECT da AS u, db AS v FROM e
-            UNION ALL SELECT db AS u, da AS v FROM e),
+    return f"""{_ADJ_DUCK},
     deg AS (SELECT u AS doc_id, CAST(COUNT(*) AS BIGINT) AS degree
             FROM adj GROUP BY 1),
     wedge AS (SELECT a1.u AS a, a1.v AS m, a2.v AS c
@@ -1453,8 +1404,6 @@ def graph_linkpred_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _modularity_oracle() -> str:
-    from eecs485_p4_mapreduce_spark.functions.minhashfn import MINHASH_BANDED_DUCK
-
     sql = f"""{MINHASH_BANDED_DUCK},
     e AS MATERIALIZED (
       SELECT DISTINCT a.doc_id AS da, b.doc_id AS db

@@ -1,15 +1,26 @@
-"""Similarity search over the embeddings table (SURVEY.md §2.C ⊕).
+"""Similarity search, sketches and model evaluation over the embeddings
+table (SURVEY.md §2.C ⊕).
 
-Three tiers, mirroring how ANN is actually deployed:
-- ``knn_cosine``        exact brute-force top-k, pure JVM expressions.
-- ``knn_cosine_pandas`` the same query through a vectorized Arrow/Pandas
-  UDF (numpy matmul per batch) -- the pattern for when the metric is not
-  expressible with built-ins.  ~10-100x faster than a row-at-a-time
-  Python UDF; still the slow path vs built-ins.
-- ``knn_ivf_label``     partition-pruned search: probe only the query's
-  cluster (the ``label`` column stands in for a trained IVF coarse
-  quantizer).  At 100 TB: partition the table by list id, prune scans by
-  the probed lists, brute-force within lists -- the shuffle-free path.
+- kNN / ANN top-k, mirroring how ANN is actually deployed:
+  ``knn_cosine`` (exact brute force, pure JVM expressions),
+  ``knn_cosine_pandas`` (the same through a vectorized Arrow/Pandas UDF
+  -- the pattern for a metric built-ins cannot express),
+  ``knn_ivf_label`` (probe only the query's cluster; ``label`` stands in
+  for a trained IVF coarse quantizer), ``ann_lsh_hyperplane`` and
+  ``ann_lsh_multiprobe`` (random-hyperplane LSH buckets), plus
+  ``knn_hard_negatives`` and the ``embedding_matryoshka_topk`` cascade.
+  Each ends in the one partitioned top-k (:func:`_top_k` /
+  :func:`_top_k_sql`).
+- Sketches (HLL, KLL, theta, Bloom, AMS) validated against exact
+  counts, and embedding statistics (dimension moments, whitening,
+  Mahalanobis outliers, JL distortion, int8 quantization).
+- The linear-scorer bank: one stand-in model (``_INF_W``) served by a
+  Pandas UDF and evaluated by the ``eval_*`` queries.  Every eval
+  query starts from the same scored frame, :func:`_scored_embeddings`
+  in Spark and ``_SCORED_DUCK`` in the oracle.
+- The nearest-centroid classifier (``eval_confusion_nearest_centroid``
+  and ``eval_macro_f1_centroid``, one oracle chain
+  ``_CENTROID_CONF_DUCK``).
 
 Dot products fold left-to-right in double (Spark ``aggregate`` ==
 DuckDB ``list_inner_product`` order), round(6) guards the last bit.
@@ -19,7 +30,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eecs485_p4_mapreduce_spark.functions.modelstore import pin
@@ -45,23 +56,80 @@ def _cos_expr(a: str, b: str) -> str:
     return f"{dot} / ({na} * {nb})"
 
 
+def _cos_sql(a: str, b: str) -> str:
+    """DuckDB twin of :func:`_cos_expr`."""
+    return (
+        f"list_inner_product({a}, {b})"
+        f" / (sqrt(list_inner_product({a}, {a})) * sqrt(list_inner_product({b}, {b})))"
+    )
+
+
+def _top_k(scored: DataFrame, k: int = _TOPK, *extra: str) -> DataFrame:
+    """Each query's ``k`` nearest neighbors among ``scored``'s (query_id,
+    neighbor_id, cos_raw, ``extra``) rows: ranked by cosine, ties to the
+    lower neighbor id, the cosine rounded to 6 places.  The window is
+    partitioned by query, so only (query, neighbor, score) rows shuffle."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("query_id", "neighbor_id", *extra, F.round("cos_raw", 6).alias("cosine"), "rk")
+    )
+
+
+def _knn_rank_sql(score: str, rk: str) -> str:
+    """Oracle rank of each query's candidates by ``score``, ties to the
+    lower neighbor id."""
+    return f"ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY {score} DESC, neighbor_id) AS {rk}"
+
+
+def _top_k_sql(k: int = _TOPK, src: str = "scored", extra: str = "") -> str:
+    """Oracle twin of :func:`_top_k`: the ``ranked`` CTE and the final
+    SELECT over ``src``'s rows; ``extra`` is a column list ending in
+    ``", "``."""
+    return f"""ranked AS (
+      SELECT query_id, neighbor_id, {extra}cos_raw, {_knn_rank_sql("cos_raw", "rk")}
+      FROM {src})
+    SELECT query_id, neighbor_id, {extra}round(cos_raw, 6) AS cosine, rk
+    FROM ranked WHERE rk <= {k}"""
+
+
 _ORACLE_KNN = f"""
     WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
     q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < {_NQ}),
     scored AS (
-      SELECT q.query_id, e.vec_id AS neighbor_id,
-             list_inner_product(q.qv, e.v)
-               / (sqrt(list_inner_product(q.qv, q.qv)) * sqrt(list_inner_product(e.v, e.v)))
-               AS cos_raw
+      SELECT q.query_id, e.vec_id AS neighbor_id, {_cos_sql("q.qv", "e.v")} AS cos_raw
       FROM q JOIN e ON e.vec_id <> q.query_id),
-    ranked AS (
-      SELECT query_id, neighbor_id, cos_raw,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cos_raw DESC, neighbor_id) AS rk
-      FROM scored)
-    SELECT query_id, neighbor_id, round(cos_raw, 6) AS cosine, rk
-    FROM ranked WHERE rk <= {_TOPK}
+    {_top_k_sql()}
 """
+
+
+def _knn_sides(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The vectors (vec_id, label, v) and the broadcast query vectors
+    (query_id, qlabel, qv): the first ``_NQ`` vec_ids."""
+    e = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
+    )
+    q = F.broadcast(
+        e.filter(F.col("vec_id") < _NQ).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("label").alias("qlabel"),
+            F.col("v").alias("qv"),
+        )
+    )
+    return e, q
+
+
+def _knn_exact(spark: SparkSession, sf_dir: str, cos: Column) -> DataFrame:
+    """Exact top-k of every query vector over all other vectors, scored
+    by ``cos``, a column over the query vector ``qv`` and the vector ``v``."""
+    e, q = _knn_sides(spark, sf_dir)
+    scored = (
+        q.join(e, F.col("vec_id") != F.col("query_id"))
+        .withColumn("cos_raw", cos)
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos_raw")
+    )
+    return _top_k(scored)
 
 
 @query("knn_cosine", oracle=_ORACLE_KNN)
@@ -73,25 +141,7 @@ def knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     The scan side never shuffles -- this shape survives any table size;
     it is the verify/rerank stage for the IVF/LSH variants.
     """
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = F.broadcast(
-        e.filter(F.col("vec_id") < _NQ).select(
-            F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-        )
-    )
-    scored = (
-        q.join(e, F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_raw", F.expr(_cos_expr("qv", "v")))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos_raw")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _TOPK)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rk")
-    )
+    return _knn_exact(spark, sf_dir, F.expr(_cos_expr("qv", "v")))
 
 
 @query("knn_cosine_pandas", oracle=_ORACLE_KNN)
@@ -100,7 +150,6 @@ def knn_cosine_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched columns -> numpy dot per row pair.  Demonstrates the
     vectorized-UDF escape hatch with identical results to the built-in
     plan (same oracle)."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -119,25 +168,7 @@ def knn_cosine_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         return pd.Series(out)
 
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = F.broadcast(
-        e.filter(F.col("vec_id") < _NQ).select(
-            F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-        )
-    )
-    scored = (
-        q.join(e, F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_raw", cos_udf(F.col("qv"), F.col("v")))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos_raw")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _TOPK)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rk")
-    )
+    return _knn_exact(spark, sf_dir, cos_udf(F.col("qv"), F.col("v")))
 
 
 @query(
@@ -146,18 +177,9 @@ def knn_cosine_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
     q AS (SELECT vec_id AS query_id, label AS qlabel, v AS qv FROM e WHERE vec_id < {_NQ}),
     scored AS (
-      SELECT q.query_id, e.vec_id AS neighbor_id,
-             list_inner_product(q.qv, e.v)
-               / (sqrt(list_inner_product(q.qv, q.qv)) * sqrt(list_inner_product(e.v, e.v)))
-               AS cos_raw
+      SELECT q.query_id, e.vec_id AS neighbor_id, {_cos_sql("q.qv", "e.v")} AS cos_raw
       FROM q JOIN e ON e.label = q.qlabel AND e.vec_id <> q.query_id),
-    ranked AS (
-      SELECT query_id, neighbor_id, cos_raw,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cos_raw DESC, neighbor_id) AS rk
-      FROM scored)
-    SELECT query_id, neighbor_id, round(cos_raw, 6) AS cosine, rk
-    FROM ranked WHERE rk <= {_TOPK}
+    {_top_k_sql()}
     """,
 )
 def knn_ivf_label(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -165,27 +187,13 @@ def knn_ivf_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     (label = coarse quantizer cell).  The label equi-join IS the partition
     pruning -- with the table bucketed by label, each query touches one
     bucket (1/nlist of the data) and nothing shuffles but the results."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = F.broadcast(
-        e.filter(F.col("vec_id") < _NQ).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("qlabel"),
-            F.col("v").alias("qv"),
-        )
-    )
+    e, q = _knn_sides(spark, sf_dir)
     scored = (
         q.join(e, (F.col("label") == F.col("qlabel")) & (F.col("vec_id") != F.col("query_id")))
         .withColumn("cos_raw", F.expr(_cos_expr("qv", "v")))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos_raw")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _TOPK)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rk")
-    )
+    return _top_k(scored)
 
 
 # ---------------------------------------------------- LSH-bucketed ANN
@@ -210,18 +218,9 @@ from eecs485_p4_mapreduce_spark.functions.lshfn import w_sql as _w_sql
     q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM bucketed
           WHERE vec_id < {_NQ}),
     scored AS (
-      SELECT q.query_id, b.vec_id AS neighbor_id,
-             list_inner_product(q.qv, b.v)
-               / (sqrt(list_inner_product(q.qv, q.qv)) * sqrt(list_inner_product(b.v, b.v)))
-               AS cos_raw
+      SELECT q.query_id, b.vec_id AS neighbor_id, {_cos_sql("q.qv", "b.v")} AS cos_raw
       FROM q JOIN bucketed b ON b.bucket = q.bucket AND b.vec_id <> q.query_id),
-    ranked AS (
-      SELECT query_id, neighbor_id, cos_raw,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cos_raw DESC, neighbor_id) AS rk
-      FROM scored)
-    SELECT query_id, neighbor_id, round(cos_raw, 6) AS cosine, rk
-    FROM ranked WHERE rk <= {_TOPK}
+    {_top_k_sql()}
     """,
 )
 def ann_lsh_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -252,12 +251,7 @@ def ann_lsh_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cos_raw", F.expr(_cos_expr("qv", "v")))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos_raw")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _TOPK)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rk")
-    )
+    return _top_k(scored)
 
 
 @query(
@@ -402,18 +396,9 @@ def _probes_sql(dialect: str) -> str:
                    {_probes_sql('duckdb')} AS probes
             FROM bucketed WHERE vec_id < {_NQ})),
     scored AS (
-      SELECT q.query_id, b.vec_id AS neighbor_id,
-             list_inner_product(q.qv, b.v)
-               / (sqrt(list_inner_product(q.qv, q.qv)) * sqrt(list_inner_product(b.v, b.v)))
-               AS cos_raw
+      SELECT q.query_id, b.vec_id AS neighbor_id, {_cos_sql("q.qv", "b.v")} AS cos_raw
       FROM q JOIN bucketed b ON b.bucket = q.probe AND b.vec_id <> q.query_id),
-    ranked AS (
-      SELECT query_id, neighbor_id, cos_raw,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cos_raw DESC, neighbor_id) AS rk
-      FROM scored)
-    SELECT query_id, neighbor_id, round(cos_raw, 6) AS cosine, rk
-    FROM ranked WHERE rk <= {_TOPK}
+    {_top_k_sql()}
     """,
 )
 def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -444,12 +429,7 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cos_raw", F.expr(_cos_expr("qv", "v")))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos_raw")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _TOPK)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rk")
-    )
+    return _top_k(scored)
 
 
 @query(
@@ -763,17 +743,9 @@ _MAT_K1 = 25  # stage-1 candidate pool per query
     q AS (SELECT vec_id AS query_id, label AS qlabel, v AS qv FROM e WHERE vec_id < {_NQ}),
     scored AS (
       SELECT q.query_id, e.vec_id AS neighbor_id, e.label AS neg_label,
-             list_inner_product(q.qv, e.v)
-               / (sqrt(list_inner_product(q.qv, q.qv)) * sqrt(list_inner_product(e.v, e.v)))
-               AS cos_raw
+             {_cos_sql("q.qv", "e.v")} AS cos_raw
       FROM q JOIN e ON e.label <> q.qlabel),
-    ranked AS (
-      SELECT query_id, neighbor_id, neg_label, cos_raw,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cos_raw DESC, neighbor_id) AS rk
-      FROM scored)
-    SELECT query_id, neighbor_id, neg_label, round(cos_raw, 6) AS cosine, rk
-    FROM ranked WHERE rk <= {_HN_K}
+    {_top_k_sql(_HN_K, extra="neg_label, ")}
     """,
 )
 def knn_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -786,16 +758,7 @@ def knn_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered before any scoring.  At 100 TB this is knn over the
     label-pruned candidate stream (in practice run after ANN recall,
     see ``ann_lsh_hyperplane``)."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = F.broadcast(
-        e.filter(F.col("vec_id") < _NQ).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("qlabel"),
-            F.col("v").alias("qv"),
-        )
-    )
+    e, q = _knn_sides(spark, sf_dir)
     scored = (
         q.join(e, F.col("label") != F.col("qlabel"))
         .withColumn("cos_raw", F.expr(_cos_expr("qv", "v")))
@@ -806,18 +769,7 @@ def knn_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cos_raw",
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _HN_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "neg_label",
-            F.round("cos_raw", 6).alias("cosine"),
-            "rk",
-        )
-    )
+    return _top_k(scored, _HN_K, "neg_label")
 
 
 @query(
@@ -829,28 +781,15 @@ def knn_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     q AS (SELECT vec_id AS query_id, v AS qv, vp AS qp FROM e WHERE vec_id < {_NQ}),
     pre AS (
       SELECT q.query_id, e.vec_id AS neighbor_id, q.qv, e.v,
-             list_inner_product(q.qp, e.vp)
-               / (sqrt(list_inner_product(q.qp, q.qp)) * sqrt(list_inner_product(e.vp, e.vp)))
-               AS cos_pre
+             {_cos_sql("q.qp", "e.vp")} AS cos_pre
       FROM q JOIN e ON e.vec_id <> q.query_id),
     cand AS (
-      SELECT query_id, neighbor_id, qv, v,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cos_pre DESC, neighbor_id) AS rk1
+      SELECT query_id, neighbor_id, qv, v, {_knn_rank_sql("cos_pre", "rk1")}
       FROM pre),
     full_r AS (
-      SELECT query_id, neighbor_id,
-             list_inner_product(qv, v)
-               / (sqrt(list_inner_product(qv, qv)) * sqrt(list_inner_product(v, v)))
-               AS cos_raw
+      SELECT query_id, neighbor_id, {_cos_sql("qv", "v")} AS cos_raw
       FROM cand WHERE rk1 <= {_MAT_K1}),
-    ranked AS (
-      SELECT query_id, neighbor_id, cos_raw,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cos_raw DESC, neighbor_id) AS rk
-      FROM full_r)
-    SELECT query_id, neighbor_id, round(cos_raw, 6) AS cosine, rk
-    FROM ranked WHERE rk <= {_TOPK}
+    {_top_k_sql(src="full_r")}
     """,
 )
 def embedding_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -890,12 +829,7 @@ def embedding_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     full_r = cand.withColumn("cos_raw", F.expr(_cos_expr("qv", "v"))).select(
         "query_id", "neighbor_id", "cos_raw"
     )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        full_r.withColumn("rk", F.row_number().over(w2))
-        .filter(F.col("rk") <= _TOPK)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rk")
-    )
+    return _top_k(full_r)
 
 
 # embedding_dim_stats' single-pass variance rational, factored to
@@ -1060,6 +994,118 @@ def embedding_dim_stats_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
 _INF_W = [-0.021426, -0.238382, -0.084529, -0.079714, -0.407197, 0.061007, 0.033981, -0.290046, -0.209396, -0.433055, 0.325514, -0.272452, 0.050871, 0.139029, -0.241085, -0.469813, -0.286796, 0.480144, -0.356815, 0.31483, 0.012064, -0.06554, 0.12421, 0.314971, -0.239186, 0.36039, -0.444064, 0.014245, 0.456717, 0.133074, 0.002064, -0.295269, 0.425871, 0.267484, 0.300831, 0.470085, -0.196794, -0.156624, -0.087983, -0.274415, -0.09705, -0.303554, -0.149114, 0.209532, -0.499992, 0.48193, 0.049541, 0.091163, 0.116252, 0.204575, 0.08902, -0.065811, 0.446259, -0.013789, 0.484094, -0.229645, -0.006373, -0.157964, -0.256003, -0.148068, -0.218903, 0.35249, 0.24842, -0.448734]
 
 
+def _weights(dialect: str, ws: list[float] = _INF_W) -> str:
+    """The scorer's weights ``ws`` (default all 64) as an array literal."""
+    if dialect == "spark":
+        return "array(" + ", ".join(f"{w}D" for w in ws) + ")"
+    return "[" + ", ".join(str(w) for w in ws) + "]"
+
+
+def _logit(a: str = "CAST(embedding AS ARRAY<DOUBLE>)", ws: list[float] = _INF_W) -> Column:
+    """The scorer's logit of the vector ``a`` under the weights ``ws``:
+    the sequential-fold dot product, rounded to 6 places."""
+    return F.round(F.expr(_DOT.format(a=a, b=_weights("spark", ws))), 6)
+
+
+_LOGIT_DUCK = f"round(list_inner_product(CAST(embedding AS DOUBLE[]), {_weights('duckdb')}), 6)"
+
+
+def _scored_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The frame every eval query starts from: per vector, the weak
+    positive label ``y`` (label >= 5) as 0/1 and the scorer's sigmoid
+    probability ``p_bp`` in integer basis points.  The sigmoid of the
+    round(6) logit is quantized to basis points at once (round-half-away
+    on identical IEEE doubles -- the ln round-4 convention's risk class),
+    so everything downstream is integer arithmetic."""
+    e = load_table(spark, sf_dir, "embeddings").select(
+        F.when(F.col("label") >= 5, 1).otherwise(0).alias("y"),
+        _logit().alias("logit"),
+    )
+    return e.select(
+        "y",
+        F.round(10000 * (1 / (1 + F.exp(-F.col("logit")))))
+        .cast("bigint")
+        .alias("p_bp"),
+    )
+
+
+# Oracle twin of _scored_embeddings: CTEs e and p, p holding (y, p_bp).
+_SCORED_DUCK = f"""
+    WITH e AS (SELECT CASE WHEN label >= 5 THEN 1 ELSE 0 END AS y,
+                      {_LOGIT_DUCK} AS logit
+               FROM embeddings),
+    p AS (SELECT y,
+                 CAST(round(10000 * (1 / (1 + exp(-logit)))) AS BIGINT)
+                   AS p_bp
+          FROM e)"""
+
+
+def _decile_bin() -> Column:
+    """The decile of the basis-point score (p_bp = 10000 joins decile 9)."""
+    return F.least(F.expr("p_bp div 1000"), F.lit(9)).alias("bin")
+
+
+_DECILE_DUCK = "least(p_bp // 1000, 9) AS bin"
+
+
+def _score_histogram(p: DataFrame) -> DataFrame:
+    """(v, c, c1): per distinct basis-point score, its count and its
+    positives -- at most 10001 rows."""
+    return p.groupBy(F.col("p_bp").alias("v")).agg(
+        F.count("*").cast("bigint").alias("c"),
+        F.sum("y").cast("bigint").alias("c1"),
+    )
+
+
+# Oracle twin of _score_histogram over the p CTE.
+_HISTOGRAM_DUCK = """vc AS (SELECT p_bp AS v, CAST(COUNT(*) AS BIGINT) AS c,
+                  CAST(SUM(y) AS BIGINT) AS c1
+           FROM p GROUP BY 1)"""
+
+
+def _rank_sums_sql(name: str) -> str:
+    """Oracle CTEs vc, r and ``name``, the one row (n1, n0, r2):
+    positives, negatives and the positives' DOUBLED midrank sum over the
+    score histogram.  Per distinct score the doubled midrank
+    2*cum_before + c + 1 is an exact integer, so ties count half
+    without enumerating n1*n0 pairs."""
+    return f"""{_HISTOGRAM_DUCK},
+    r AS (SELECT v, c, c1,
+                 CAST(SUM(c) OVER (ORDER BY v
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - c
+                   AS BIGINT) AS cum_before
+          FROM vc),
+    {name} AS (SELECT CAST(SUM(c1) AS BIGINT) AS n1,
+                 CAST(SUM(c) - SUM(c1) AS BIGINT) AS n0,
+                 CAST(SUM(CAST(c1 AS HUGEINT)
+                          * (2 * cum_before + c + 1)) AS HUGEINT) AS r2
+          FROM r)"""
+
+
+def _auc() -> Column:
+    """ROC AUC = U / (n1 n0) from the rank sums (n1, n0, r2), NULL for a
+    single-class corpus (a lazy CASE before the division: ANSI
+    divide-by-zero rule)."""
+    return (
+        F.when((F.col("n1") == 0) | (F.col("n0") == 0), F.lit(None).cast("double"))
+        .otherwise(
+            hu_ratio(
+                "r2 - cast(n1 as decimal(38,0)) * (n1 + 1)",
+                "2 * cast(n1 as decimal(38,0)) * n0",
+                6,
+            )
+        )
+        .alias("auc")
+    )
+
+
+def _auc_sql(m: str) -> str:
+    """Oracle twin of :func:`_auc` over the rank-sum CTE ``m``."""
+    return f"""CASE WHEN {m}.n1 = 0 OR {m}.n0 = 0 THEN NULL ELSE
+           {hu_ratio_sql(f"{m}.r2 - CAST({m}.n1 AS HUGEINT) * ({m}.n1 + 1)",
+                         f"2 * CAST({m}.n1 AS HUGEINT) * {m}.n0", 6)} END AS auc"""
+
+
 @query(
     "inference_linear_scores",
     oracle=f"""
@@ -1067,7 +1113,7 @@ _INF_W = [-0.021426, -0.238382, -0.084529, -0.079714, -0.407197, 0.061007, 0.033
                FROM embeddings),
     scored AS (
       SELECT vec_id, label,
-             round(list_inner_product(v, [-0.021426, -0.238382, -0.084529, -0.079714, -0.407197, 0.061007, 0.033981, -0.290046, -0.209396, -0.433055, 0.325514, -0.272452, 0.050871, 0.139029, -0.241085, -0.469813, -0.286796, 0.480144, -0.356815, 0.31483, 0.012064, -0.06554, 0.12421, 0.314971, -0.239186, 0.36039, -0.444064, 0.014245, 0.456717, 0.133074, 0.002064, -0.295269, 0.425871, 0.267484, 0.300831, 0.470085, -0.196794, -0.156624, -0.087983, -0.274415, -0.09705, -0.303554, -0.149114, 0.209532, -0.499992, 0.48193, 0.049541, 0.091163, 0.116252, 0.204575, 0.08902, -0.065811, 0.446259, -0.013789, 0.484094, -0.229645, -0.006373, -0.157964, -0.256003, -0.148068, -0.218903, 0.35249, 0.24842, -0.448734]), 6) AS logit
+             round(list_inner_product(v, {_weights('duckdb')}), 6) AS logit
       FROM e)
     SELECT label, CAST(COUNT(*) AS BIGINT) AS n,
            CAST(SUM(CASE WHEN logit > 0 THEN 1 ELSE 0 END) AS BIGINT)
@@ -1215,21 +1261,24 @@ def sketch_bloom_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "embedding_centroid_similarity",
-    oracle="""
+# Oracle CTEs el and cm: per (label, dimension d), the decimal-exact
+# mean m of the label's vectors.
+_CENTROID_MEANS_DUCK = """
     WITH el AS (
       SELECT label, d, CAST(embedding[d] AS DOUBLE) AS x
       FROM embeddings, unnest(range(1, 65)) AS t(d)),
     cm AS (
       SELECT label, d,
              CAST(SUM(CAST(x AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*) AS m
-      FROM el GROUP BY 1, 2),
+      FROM el GROUP BY 1, 2)"""
+
+
+@query(
+    "embedding_centroid_similarity",
+    oracle=f"""{_CENTROID_MEANS_DUCK},
     cv AS (SELECT label, array_agg(m ORDER BY d) AS v FROM cm GROUP BY 1)
     SELECT a.label AS label_a, b.label AS label_b,
-           round(list_inner_product(a.v, b.v)
-                 / (sqrt(list_inner_product(a.v, a.v))
-                    * sqrt(list_inner_product(b.v, b.v))), 6) AS cosine
+           round({_cos_sql("a.v", "b.v")}, 6) AS cosine
     FROM cv a JOIN cv b ON a.label < b.label
     """,
 )
@@ -1276,12 +1325,9 @@ _SWEEP_THRESHOLDS = [-0.5, -0.25, 0.0, 0.25, 0.5]
 
 
 def _sweep_oracle() -> str:
-    w_list = ", ".join(str(w) for w in _INF_W)
     th_list = ", ".join(str(t) for t in _SWEEP_THRESHOLDS)
     return f"""
-    WITH e AS (SELECT label >= 5 AS pos,
-                      round(list_inner_product(CAST(embedding AS DOUBLE[]),
-                            [{w_list}]), 6) AS logit
+    WITH e AS (SELECT label >= 5 AS pos, {_LOGIT_DUCK} AS logit
                FROM embeddings),
     th AS (SELECT CAST(unnest([{th_list}]) AS DOUBLE) AS threshold),
     m AS (
@@ -1314,11 +1360,8 @@ def inference_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold list, so the confusion counts for every threshold
     accumulate in a single map-side-combinable aggregate.  All counts
     are exact integers; precision/recall are single exact divisions."""
-    w_arr = "array(" + ", ".join(f"{w}D" for w in _INF_W) + ")"
-    dot = _DOT.format(a="CAST(embedding AS ARRAY<DOUBLE>)", b=w_arr)
     e = load_table(spark, sf_dir, "embeddings").select(
-        (F.col("label") >= 5).alias("pos"),
-        F.round(F.expr(dot), 6).alias("logit"),
+        (F.col("label") >= 5).alias("pos"), _logit().alias("logit")
     )
     th = spark.range(len(_SWEEP_THRESHOLDS)).select(
         F.explode(F.array(*[F.lit(t) for t in _SWEEP_THRESHOLDS])).alias(
@@ -1587,17 +1630,8 @@ def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _calib_oracle() -> str:
-    w_list = ", ".join(str(w) for w in _INF_W)
-    return f"""
-    WITH e AS (SELECT CASE WHEN label >= 5 THEN 1 ELSE 0 END AS y,
-                      round(list_inner_product(CAST(embedding AS DOUBLE[]),
-                            [{w_list}]), 6) AS logit
-               FROM embeddings),
-    p AS (SELECT y,
-                 CAST(round(10000 * (1 / (1 + exp(-logit)))) AS BIGINT)
-                   AS p_bp
-          FROM e),
-    b AS (SELECT least(p_bp // 1000, 9) AS bin, y, p_bp,
+    return f"""{_SCORED_DUCK},
+    b AS (SELECT {_DECILE_DUCK}, y, p_bp,
                  (p_bp - 10000 * y) * (p_bp - 10000 * y) AS sq
           FROM p)
     SELECT bin,
@@ -1635,20 +1669,9 @@ def eval_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel scan+project into a ≤10-group map-side-combinable
     aggregate; no joins, no windows, nothing leaves the executors but
     10 rows."""
-    w_arr = "array(" + ", ".join(f"{w}D" for w in _INF_W) + ")"
-    dot = _DOT.format(a="CAST(embedding AS ARRAY<DOUBLE>)", b=w_arr)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        F.when(F.col("label") >= 5, 1).otherwise(0).alias("y"),
-        F.round(F.expr(dot), 6).alias("logit"),
-    )
-    p = e.select(
-        "y",
-        F.round(10000 * (1 / (1 + F.exp(-F.col("logit")))))
-        .cast("bigint")
-        .alias("p_bp"),
-    )
+    p = _scored_embeddings(spark, sf_dir)
     b = p.select(
-        F.least(F.expr("p_bp div 1000"), F.lit(9)).alias("bin"),
+        _decile_bin(),
         "y",
         "p_bp",
         ((F.col("p_bp") - 10000 * F.col("y"))
@@ -1687,16 +1710,9 @@ def eval_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "eval_confusion_nearest_centroid",
-    oracle="""
-    WITH el AS (
-      SELECT label, d, CAST(embedding[d] AS DOUBLE) AS x
-      FROM embeddings, unnest(range(1, 65)) AS t(d)),
-    cm AS (
-      SELECT label, d,
-             CAST(SUM(CAST(x AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*) AS m
-      FROM el GROUP BY 1, 2),
+# The nearest-centroid classifier's oracle up to its (true_label,
+# pred_label, n_vectors) confusion rollup ``conf``.
+_CENTROID_CONF_DUCK = f"""{_CENTROID_MEANS_DUCK},
     cv AS (SELECT label AS c_label, array_agg(m ORDER BY d) AS cvec
            FROM cm GROUP BY 1),
     scored AS (
@@ -1713,7 +1729,12 @@ def eval_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     conf AS (
       SELECT label AS true_label, pred_label,
              CAST(COUNT(*) AS BIGINT) AS n_vectors
-      FROM pred GROUP BY 1, 2)
+      FROM pred GROUP BY 1, 2)"""
+
+
+@query(
+    "eval_confusion_nearest_centroid",
+    oracle=f"""{_CENTROID_CONF_DUCK}
     SELECT true_label, pred_label, n_vectors,
            CAST(CAST((2 * CAST(n_vectors AS HUGEINT) * 1000000
                           + SUM(n_vectors) OVER (PARTITION BY true_label))
@@ -1876,17 +1897,8 @@ _BRIER_DRES = (
 
 
 def _brier_decomp_oracle() -> str:
-    w_list = ", ".join(str(w) for w in _INF_W)
-    return f"""
-    WITH e AS (SELECT CASE WHEN label >= 5 THEN 1 ELSE 0 END AS y,
-                      round(list_inner_product(CAST(embedding AS DOUBLE[]),
-                            [{w_list}]), 6) AS logit
-               FROM embeddings),
-    p AS (SELECT y,
-                 CAST(round(10000 * (1 / (1 + exp(-logit)))) AS BIGINT)
-                   AS p_bp
-          FROM e),
-    b AS (SELECT least(p_bp // 1000, 9) AS bin,
+    return f"""{_SCORED_DUCK},
+    b AS (SELECT {_DECILE_DUCK},
                  CAST(COUNT(*) AS BIGINT) AS n_k,
                  CAST(SUM(p_bp) AS BIGINT) AS sp,
                  CAST(SUM(y) AS BIGINT) AS sy,
@@ -1945,20 +1957,9 @@ def eval_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     too, so no round(double, N) of a ratio survives.
     Scale shape: one scan into a ≤10-group aggregate, then constant
     rows."""
-    w_arr = "array(" + ", ".join(f"{w}D" for w in _INF_W) + ")"
-    dot = _DOT.format(a="CAST(embedding AS ARRAY<DOUBLE>)", b=w_arr)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        F.when(F.col("label") >= 5, 1).otherwise(0).alias("y"),
-        F.round(F.expr(dot), 6).alias("logit"),
-    )
-    p = e.select(
-        "y",
-        F.round(10000 * (1 / (1 + F.exp(-F.col("logit")))))
-        .cast("bigint")
-        .alias("p_bp"),
-    )
+    p = _scored_embeddings(spark, sf_dir)
     b = pin(p.groupBy(
-        F.least(F.expr("p_bp div 1000"), F.lit(9)).alias("bin")
+        _decile_bin()
     ).agg(
         F.count("*").cast("bigint").alias("n_k"),
         # sp <= 10^4 * n_k and sy <= n_k stay comfortably inside bigint
@@ -2058,30 +2059,25 @@ _BRIER_Q4_TERM = (
     f"cast(n_k as decimal(38,0)) * ({_BRIER_Q4_RATE} - {_BRIER_Q4_BASE})"
     f" * ({_BRIER_Q4_RATE} - {_BRIER_Q4_BASE})"
 )
+# The oracle's spelling of the same term (HUGEINT, flooring //).
+_BRIER_Q4_RATE_DUCK = "((2 * CAST(sy AS HUGEINT) * 10000 + n_k) // (2 * CAST(n_k AS HUGEINT)))"
+_BRIER_Q4_BASE_DUCK = "((2 * CAST(sy_tot AS HUGEINT) * 10000 + n) // (2 * CAST(n AS HUGEINT)))"
+_BRIER_Q4_TERM_DUCK = (
+    f"CAST(n_k AS HUGEINT) * ({_BRIER_Q4_RATE_DUCK} - {_BRIER_Q4_BASE_DUCK})"
+    f" * ({_BRIER_Q4_RATE_DUCK} - {_BRIER_Q4_BASE_DUCK})"
+)
 
 
 def _brier_resolution_q4_oracle() -> str:
-    w_list = ", ".join(str(w) for w in _INF_W)
-    rate = "((2 * CAST(sy AS HUGEINT) * 10000 + n_k) // (2 * CAST(n_k AS HUGEINT)))"
-    base = "((2 * CAST(sy_tot AS HUGEINT) * 10000 + n) // (2 * CAST(n AS HUGEINT)))"
-    return f"""
-    WITH e AS (SELECT CASE WHEN label >= 5 THEN 1 ELSE 0 END AS y,
-                      round(list_inner_product(CAST(embedding AS DOUBLE[]),
-                            [{w_list}]), 6) AS logit
-               FROM embeddings),
-    p AS (SELECT y,
-                 CAST(round(10000 * (1 / (1 + exp(-logit)))) AS BIGINT)
-                   AS p_bp
-          FROM e),
-    b AS (SELECT least(p_bp // 1000, 9) AS bin,
+    return f"""{_SCORED_DUCK},
+    b AS (SELECT {_DECILE_DUCK},
                  CAST(COUNT(*) AS BIGINT) AS n_k,
                  CAST(SUM(y) AS BIGINT) AS sy
           FROM p GROUP BY 1),
     g AS (SELECT CAST(SUM(n_k) AS BIGINT) AS n,
                  CAST(SUM(sy) AS BIGINT) AS sy_tot
           FROM b),
-    t AS (SELECT CAST(n_k AS HUGEINT) * ({rate} - {base})
-                   * ({rate} - {base}) AS term
+    t AS (SELECT {_BRIER_Q4_TERM_DUCK} AS term
           FROM b CROSS JOIN g)
     SELECT g.n,
            {hu_ratio_sql("g.sy_tot", "g.n", 6)} AS base_rate,
@@ -2112,20 +2108,9 @@ def eval_brier_resolution_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact form's wrap point is pinned in
     tests/test_headroom_bounds.py.  Same plan shape as the exact form:
     one scan into a <=10-bin rollup, constant rows out."""
-    w_arr = "array(" + ", ".join(f"{w}D" for w in _INF_W) + ")"
-    dot = _DOT.format(a="CAST(embedding AS ARRAY<DOUBLE>)", b=w_arr)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        F.when(F.col("label") >= 5, 1).otherwise(0).alias("y"),
-        F.round(F.expr(dot), 6).alias("logit"),
-    )
-    p = e.select(
-        "y",
-        F.round(10000 * (1 / (1 + F.exp(-F.col("logit")))))
-        .cast("bigint")
-        .alias("p_bp"),
-    )
+    p = _scored_embeddings(spark, sf_dir)
     b = pin(p.groupBy(
-        F.least(F.expr("p_bp div 1000"), F.lit(9)).alias("bin")
+        _decile_bin()
     ).agg(
         F.count("*").cast("bigint").alias("n_k"),
         F.sum("y").cast("bigint").alias("sy"),
@@ -2356,16 +2341,8 @@ def embedding_whiten_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "eval_ece_mce",
-    oracle=f"""
-    WITH e AS (SELECT CASE WHEN label >= 5 THEN 1 ELSE 0 END AS y,
-                      round(list_inner_product(CAST(embedding AS DOUBLE[]),
-                            [{", ".join(str(w) for w in _INF_W)}]), 6) AS logit
-               FROM embeddings),
-    p AS (SELECT y,
-                 CAST(round(10000 * (1 / (1 + exp(-logit)))) AS BIGINT)
-                   AS p_bp
-          FROM e),
-    b AS (SELECT least(p_bp // 1000, 9) AS bin,
+    oracle=f"""{_SCORED_DUCK},
+    b AS (SELECT {_DECILE_DUCK},
                  CAST(COUNT(*) AS BIGINT) AS n_k,
                  CAST(SUM(p_bp) AS BIGINT) AS sp,
                  CAST(SUM(y) AS BIGINT) AS sy
@@ -2396,20 +2373,9 @@ def eval_ece_mce(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e-6 first, then takes MAX of the identical doubles (a value, not
     an argmax — tie-safe by construction).  Scale shape: one scan into
     the <=10-bin rollup, one row out."""
-    w_arr = "array(" + ", ".join(f"{w}D" for w in _INF_W) + ")"
-    dot = _DOT.format(a="CAST(embedding AS ARRAY<DOUBLE>)", b=w_arr)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        F.when(F.col("label") >= 5, 1).otherwise(0).alias("y"),
-        F.round(F.expr(dot), 6).alias("logit"),
-    )
-    p = e.select(
-        "y",
-        F.round(10000 * (1 / (1 + F.exp(-F.col("logit")))))
-        .cast("bigint")
-        .alias("p_bp"),
-    )
+    p = _scored_embeddings(spark, sf_dir)
     b = p.groupBy(
-        F.least(F.expr("p_bp div 1000"), F.lit(9)).alias("bin")
+        _decile_bin()
     ).agg(
         F.count("*").cast("bigint").alias("n_k"),
         F.sum("p_bp").cast("bigint").alias("sp"),
@@ -2435,16 +2401,8 @@ def eval_ece_mce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "eval_isotonic_bins",
-    oracle=f"""
-    WITH e AS (SELECT CASE WHEN label >= 5 THEN 1 ELSE 0 END AS y,
-                      round(list_inner_product(CAST(embedding AS DOUBLE[]),
-                            [{", ".join(str(w) for w in _INF_W)}]), 6) AS logit
-               FROM embeddings),
-    p AS (SELECT y,
-                 CAST(round(10000 * (1 / (1 + exp(-logit)))) AS BIGINT)
-                   AS p_bp
-          FROM e),
-    b AS (SELECT least(p_bp // 1000, 9) AS bin,
+    oracle=f"""{_SCORED_DUCK},
+    b AS (SELECT {_DECILE_DUCK},
                  CAST(COUNT(*) AS BIGINT) AS n_k,
                  CAST(SUM(y) AS BIGINT) AS sy
           FROM p GROUP BY 1),
@@ -2486,20 +2444,9 @@ def eval_isotonic_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     a closed-form all-segments formulation precisely because 10x10
     segment enumeration is free while a sequential pool over a
     distributed frame is not."""
-    w_arr = "array(" + ", ".join(f"{w}D" for w in _INF_W) + ")"
-    dot = _DOT.format(a="CAST(embedding AS ARRAY<DOUBLE>)", b=w_arr)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        F.when(F.col("label") >= 5, 1).otherwise(0).alias("y"),
-        F.round(F.expr(dot), 6).alias("logit"),
-    )
-    p = e.select(
-        "y",
-        F.round(10000 * (1 / (1 + F.exp(-F.col("logit")))))
-        .cast("bigint")
-        .alias("p_bp"),
-    )
+    p = _scored_embeddings(spark, sf_dir)
     b = pin(p.groupBy(
-        F.least(F.expr("p_bp div 1000"), F.lit(9)).alias("bin")
+        _decile_bin()
     ).agg(
         F.count("*").cast("bigint").alias("n_k"),
         F.sum("y").cast("bigint").alias("sy"),
@@ -2555,32 +2502,10 @@ def eval_isotonic_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "eval_auc_roc",
-    oracle=f"""
-    WITH e AS (SELECT CASE WHEN label >= 5 THEN 1 ELSE 0 END AS y,
-                      round(list_inner_product(CAST(embedding AS DOUBLE[]),
-                            [{", ".join(str(w) for w in _INF_W)}]), 6) AS logit
-               FROM embeddings),
-    p AS (SELECT y,
-                 CAST(round(10000 * (1 / (1 + exp(-logit)))) AS BIGINT)
-                   AS p_bp
-          FROM e),
-    vc AS (SELECT p_bp AS v, CAST(COUNT(*) AS BIGINT) AS c,
-                  CAST(SUM(y) AS BIGINT) AS c1
-           FROM p GROUP BY 1),
-    r AS (SELECT v, c, c1,
-                 CAST(SUM(c) OVER (ORDER BY v
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - c
-                   AS BIGINT) AS cum_before
-          FROM vc),
-    m AS (SELECT CAST(SUM(c1) AS BIGINT) AS n1,
-                 CAST(SUM(c) - SUM(c1) AS BIGINT) AS n0,
-                 CAST(SUM(CAST(c1 AS HUGEINT)
-                          * (2 * cum_before + c + 1)) AS HUGEINT) AS r2
-          FROM r)
+    oracle=f"""{_SCORED_DUCK},
+    {_rank_sums_sql("m")}
     SELECT n1 AS n_pos, n0 AS n_neg,
-           CASE WHEN m.n1 = 0 OR m.n0 = 0 THEN NULL ELSE
-           {hu_ratio_sql("m.r2 - CAST(m.n1 AS HUGEINT) * (m.n1 + 1)",
-                         "2 * CAST(m.n1 AS HUGEINT) * m.n0", 6)} END AS auc,
+           {_auc_sql("m")},
            CASE WHEN m.n1 = 0 OR m.n0 = 0 THEN NULL ELSE
            {hu_ratio_signed_sql(
                "m.r2 - CAST(m.n1 AS HUGEINT) * (m.n1 + 1)"
@@ -2607,22 +2532,7 @@ def eval_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     CASE before the division (ANSI divide-by-zero rule).  Scale shape: one scoring scan into a
     <=10001-row score histogram; the cumulative window and the final
     reduce are output-sized."""
-    w_arr = "array(" + ", ".join(f"{w}D" for w in _INF_W) + ")"
-    dot = _DOT.format(a="CAST(embedding AS ARRAY<DOUBLE>)", b=w_arr)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        F.when(F.col("label") >= 5, 1).otherwise(0).alias("y"),
-        F.round(F.expr(dot), 6).alias("logit"),
-    )
-    p = e.select(
-        "y",
-        F.round(10000 * (1 / (1 + F.exp(-F.col("logit")))))
-        .cast("bigint")
-        .alias("p_bp"),
-    )
-    vc = p.groupBy(F.col("p_bp").alias("v")).agg(
-        F.count("*").cast("bigint").alias("c"),
-        F.sum("y").cast("bigint").alias("c1"),
-    )
+    vc = _score_histogram(_scored_embeddings(spark, sf_dir))
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     r = vc.select(
         "v",
@@ -2634,25 +2544,14 @@ def eval_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c1").cast("bigint").alias("n1"),
         (F.sum("c") - F.sum("c1")).cast("bigint").alias("n0"),
         F.sum(
-            F.expr(
-                "cast(c1 as decimal(38,0)) * (2 * cum_before + c + 1)"
-            )
+            F.expr("cast(c1 as decimal(38,0)) * (2 * cum_before + c + 1)")
         ).alias("r2"),
     )
-    degen = (F.col("n1") == 0) | (F.col("n0") == 0)
     return m.select(
         F.col("n1").alias("n_pos"),
         F.col("n0").alias("n_neg"),
-        F.when(degen, F.lit(None).cast("double"))
-        .otherwise(
-            hu_ratio(
-                "r2 - cast(n1 as decimal(38,0)) * (n1 + 1)",
-                "2 * cast(n1 as decimal(38,0)) * n0",
-                6,
-            )
-        )
-        .alias("auc"),
-        F.when(degen, F.lit(None).cast("double"))
+        _auc(),
+        F.when((F.col("n1") == 0) | (F.col("n0") == 0), F.lit(None).cast("double"))
         .otherwise(
             hu_ratio_signed(
                 "r2 - cast(n1 as decimal(38,0)) * (n1 + 1)"
@@ -2666,20 +2565,8 @@ def eval_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _model_card_oracle() -> str:
-    w_list = ", ".join(str(w) for w in _INF_W)
-    rate = "((2 * CAST(sy AS HUGEINT) * 10000 + n_k) // (2 * CAST(n_k AS HUGEINT)))"
-    base = "((2 * CAST(sy_tot AS HUGEINT) * 10000 + n)"
-    base += " // (2 * CAST(n AS HUGEINT)))"
-    return f"""
-    WITH e AS (SELECT CASE WHEN label >= 5 THEN 1 ELSE 0 END AS y,
-                      round(list_inner_product(CAST(embedding AS DOUBLE[]),
-                            [{w_list}]), 6) AS logit
-               FROM embeddings),
-    p AS (SELECT y,
-                 CAST(round(10000 * (1 / (1 + exp(-logit)))) AS BIGINT)
-                   AS p_bp
-          FROM e),
-    b AS (SELECT least(p_bp // 1000, 9) AS bin,
+    return f"""{_SCORED_DUCK},
+    b AS (SELECT {_DECILE_DUCK},
                  CAST(COUNT(*) AS BIGINT) AS n_k,
                  CAST(SUM(p_bp) AS BIGINT) AS sp,
                  CAST(SUM(y) AS BIGINT) AS sy,
@@ -2694,28 +2581,12 @@ def _model_card_oracle() -> str:
                                    "CAST(n_k AS HUGEINT) * 10000", 6)})
                    AS mce
           FROM b),
-    rq AS (SELECT CAST(SUM(CAST(n_k AS HUGEINT)
-                           * ({rate} - {base}) * ({rate} - {base}))
-                       AS HUGEINT) AS res_num
+    rq AS (SELECT CAST(SUM({_BRIER_Q4_TERM_DUCK}) AS HUGEINT) AS res_num
            FROM b CROSS JOIN g),
-    vc AS (SELECT p_bp AS v, CAST(COUNT(*) AS BIGINT) AS c,
-                  CAST(SUM(y) AS BIGINT) AS c1
-           FROM p GROUP BY 1),
-    r AS (SELECT v, c, c1,
-                 CAST(SUM(c) OVER (ORDER BY v
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - c
-                   AS BIGINT) AS cum_before
-          FROM vc),
-    mw AS (SELECT CAST(SUM(c1) AS BIGINT) AS n1,
-                  CAST(SUM(c) - SUM(c1) AS BIGINT) AS n0,
-                  CAST(SUM(CAST(c1 AS HUGEINT)
-                           * (2 * cum_before + c + 1)) AS HUGEINT) AS r2
-           FROM r)
+    {_rank_sums_sql("mw")}
     SELECT g.n,
            {hu_ratio_sql("g.sy_tot", "g.n", 6)} AS base_rate,
-           CASE WHEN mw.n1 = 0 OR mw.n0 = 0 THEN NULL ELSE
-           {hu_ratio_sql("mw.r2 - CAST(mw.n1 AS HUGEINT) * (mw.n1 + 1)",
-                         "2 * CAST(mw.n1 AS HUGEINT) * mw.n0", 6)} END AS auc,
+           {_auc_sql("mw")},
            CAST(CAST((2 * g.ssq_tot + CAST(g.n AS HUGEINT) * 100)
                      // (2 * CAST(g.n AS HUGEINT) * 100) AS BIGINT)
                 AS DOUBLE) / 1000000 AS brier,
@@ -2745,20 +2616,9 @@ def eval_model_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-consistent with each standalone readout by construction.
     Scale shape: one scan, a <=10-row bin frame, a <=10001-row score
     histogram, three 1-row reduces cross-joined at the end."""
-    w_arr = "array(" + ", ".join(f"{w}D" for w in _INF_W) + ")"
-    dot = _DOT.format(a="CAST(embedding AS ARRAY<DOUBLE>)", b=w_arr)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        F.when(F.col("label") >= 5, 1).otherwise(0).alias("y"),
-        F.round(F.expr(dot), 6).alias("logit"),
-    )
-    p = pin(e.select(
-        "y",
-        F.round(10000 * (1 / (1 + F.exp(-F.col("logit")))))
-        .cast("bigint")
-        .alias("p_bp"),
-    ))  # the bin rollup AND the histogram read it
+    p = pin(_scored_embeddings(spark, sf_dir))  # the bin rollup AND the histogram read it
     b = pin(p.groupBy(
-        F.least(F.expr("p_bp div 1000"), F.lit(9)).alias("bin")
+        _decile_bin()
     ).agg(
         F.count("*").cast("bigint").alias("n_k"),
         F.sum("p_bp").cast("bigint").alias("sp"),
@@ -2786,12 +2646,9 @@ def eval_model_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     rq = b.crossJoin(F.broadcast(g.select("n", "sy_tot"))).agg(
         F.sum(F.expr(_BRIER_Q4_TERM)).alias("res_num")
     )
-    vc = p.groupBy(F.col("p_bp").alias("v")).agg(
-        F.count("*").cast("bigint").alias("c"),
-        F.sum("y").cast("bigint").alias("c1"),
-    )
+    # eval_auc_roc's rank sums (oracle: _rank_sums_sql)
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    r = vc.select(
+    r = _score_histogram(p).select(
         "c",
         "c1",
         (F.sum("c").over(w) - F.col("c")).cast("bigint").alias("cum_before"),
@@ -2809,18 +2666,7 @@ def eval_model_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "n",
             hu_ratio("sy_tot", "n", 6).alias("base_rate"),
-            F.when(
-                (F.col("n1") == 0) | (F.col("n0") == 0),
-                F.lit(None).cast("double"),
-            )
-            .otherwise(
-                hu_ratio(
-                    "r2 - cast(n1 as decimal(38,0)) * (n1 + 1)",
-                    "2 * cast(n1 as decimal(38,0)) * n0",
-                    6,
-                )
-            )
-            .alias("auc"),
+            _auc(),
             (
                 F.expr(
                     "cast((2 * ssq_tot + cast(n as decimal(38,0)) * 100)"
@@ -2840,19 +2686,16 @@ def eval_model_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mcnemar_oracle() -> str:
-    w_full = ", ".join(str(w) for w in _INF_W)
-    w_head = ", ".join(str(w) for w in _INF_W[:16])
     chi = hu_ratio_sql(
         "(abs(CAST(b AS HUGEINT) - c) - 1) * (abs(CAST(b AS HUGEINT) - c) - 1)",
         "CAST(b AS HUGEINT) + c", 6)
     return f"""
     WITH e AS (
       SELECT CASE WHEN label >= 5 THEN 1 ELSE 0 END AS y,
-             CASE WHEN round(list_inner_product(CAST(embedding AS DOUBLE[]),
-                    [{w_full}]), 6) > 0 THEN 1 ELSE 0 END AS pa,
+             CASE WHEN {_LOGIT_DUCK} > 0 THEN 1 ELSE 0 END AS pa,
              CASE WHEN round(list_inner_product(
                     CAST(embedding[1:16] AS DOUBLE[]),
-                    [{w_head}]), 6) > 0 THEN 1 ELSE 0 END AS pb
+                    {_weights("duckdb", _INF_W[:16])}), 6) > 0 THEN 1 ELSE 0 END AS pb
       FROM embeddings),
     m AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -2892,16 +2735,11 @@ def eval_mcnemar_scorers(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate returns NULL through a lazy CASE (ANSI-safe).  Scale
     shape: one scan, one 1-row reduce — nothing but the five counters
     crosses the wire."""
-    w_full = "array(" + ", ".join(f"{w}D" for w in _INF_W) + ")"
-    w_head = "array(" + ", ".join(f"{w}D" for w in _INF_W[:16]) + ")"
-    dot_full = _DOT.format(a="CAST(embedding AS ARRAY<DOUBLE>)", b=w_full)
-    dot_head = _DOT.format(
-        a="CAST(slice(embedding, 1, 16) AS ARRAY<DOUBLE>)", b=w_head
-    )
+    head = _logit("CAST(slice(embedding, 1, 16) AS ARRAY<DOUBLE>)", _INF_W[:16])
     e = load_table(spark, sf_dir, "embeddings").select(
         F.when(F.col("label") >= 5, 1).otherwise(0).alias("y"),
-        F.when(F.round(F.expr(dot_full), 6) > 0, 1).otherwise(0).alias("pa"),
-        F.when(F.round(F.expr(dot_head), 6) > 0, 1).otherwise(0).alias("pb"),
+        F.when(_logit() > 0, 1).otherwise(0).alias("pa"),
+        F.when(head > 0, 1).otherwise(0).alias("pb"),
     )
     m = e.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -2943,33 +2781,6 @@ def eval_mcnemar_scorers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _macro_f1_oracle() -> str:
-    # the registered eval_confusion_nearest_centroid WITH-chain, reused
-    # verbatim up to its conf rollup (predictions hash-consistent)
-    conf = """
-    WITH el AS (
-      SELECT label, d, CAST(embedding[d] AS DOUBLE) AS x
-      FROM embeddings, unnest(range(1, 65)) AS t(d)),
-    cm AS (
-      SELECT label, d,
-             CAST(SUM(CAST(x AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*) AS m
-      FROM el GROUP BY 1, 2),
-    cv AS (SELECT label AS c_label, array_agg(m ORDER BY d) AS cvec
-           FROM cm GROUP BY 1),
-    scored AS (
-      SELECT e.vec_id, e.label, cv.c_label,
-             -2 * list_inner_product(CAST(e.embedding AS DOUBLE[]), cv.cvec)
-               + list_inner_product(cv.cvec, cv.cvec) AS dist
-      FROM embeddings e CROSS JOIN cv),
-    pred AS (
-      SELECT vec_id, label, c_label AS pred_label FROM (
-        SELECT vec_id, label, c_label,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY dist, c_label) AS rk
-        FROM scored) WHERE rk = 1),
-    conf AS (
-      SELECT label AS true_label, pred_label,
-             CAST(COUNT(*) AS BIGINT) AS n_vectors
-      FROM pred GROUP BY 1, 2)"""
     prec = hu_ratio_sql("cls.tp", "cls.pred_n", 6)
     rec = hu_ratio_sql("cls.tp", "cls.support", 6)
     f16 = ("(2 * (2 * CAST(cls.tp AS HUGEINT) * 1000000)"
@@ -2977,7 +2788,7 @@ def _macro_f1_oracle() -> str:
            " // (2 * CAST(cls.support + cls.pred_n AS HUGEINT))")
     acc = hu_ratio_sql("mac.diag", "mac.n", 6)
     macro = hu_ratio_sql("mac.sf16", "CAST(mac.k AS HUGEINT) * 1000000", 6)
-    return f"""{conf},
+    return f"""{_CENTROID_CONF_DUCK},
     rows_ AS (SELECT true_label AS c, CAST(SUM(n_vectors) AS BIGINT)
                        AS support
               FROM conf GROUP BY 1),
@@ -3104,21 +2915,10 @@ def eval_macro_f1_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pr_auc_oracle() -> str:
-    w_list = ", ".join(str(w) for w in _INF_W)
     ap = hu_ratio_sql("m.apnum", "CAST(m.n1 AS HUGEINT) * 1000000", 6)
     base = hu_ratio_sql("m.n1", "m.n1 + m.n0", 6)
-    return f"""
-    WITH e AS (SELECT CASE WHEN label >= 5 THEN 1 ELSE 0 END AS y,
-                      round(list_inner_product(CAST(embedding AS DOUBLE[]),
-                            [{w_list}]), 6) AS logit
-               FROM embeddings),
-    p AS (SELECT y,
-                 CAST(round(10000 * (1 / (1 + exp(-logit)))) AS BIGINT)
-                   AS p_bp
-          FROM e),
-    vc AS (SELECT p_bp AS v, CAST(COUNT(*) AS BIGINT) AS c,
-                  CAST(SUM(y) AS BIGINT) AS c1
-           FROM p GROUP BY 1),
+    return f"""{_SCORED_DUCK},
+    {_HISTOGRAM_DUCK},
     r AS (SELECT v, c, c1,
                  CAST(SUM(c) OVER (ORDER BY v DESC
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -3163,22 +2963,7 @@ def eval_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the eval_auc_roc scale shape: one scoring scan, output-sized
     windows, a 1-row reduce.  A no-positives corpus renders AP NULL
     via lazy CASE; the empty corpus renders both NULL."""
-    w_arr = "array(" + ", ".join(f"{w}D" for w in _INF_W) + ")"
-    dot = _DOT.format(a="CAST(embedding AS ARRAY<DOUBLE>)", b=w_arr)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        F.when(F.col("label") >= 5, 1).otherwise(0).alias("y"),
-        F.round(F.expr(dot), 6).alias("logit"),
-    )
-    p = e.select(
-        "y",
-        F.round(10000 * (1 / (1 + F.exp(-F.col("logit")))))
-        .cast("bigint")
-        .alias("p_bp"),
-    )
-    vc = p.groupBy(F.col("p_bp").alias("v")).agg(
-        F.count("*").cast("bigint").alias("c"),
-        F.sum("y").cast("bigint").alias("c1"),
-    )
+    vc = _score_histogram(_scored_embeddings(spark, sf_dir))
     w = Window.orderBy(F.desc("v")).rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -3222,7 +3007,6 @@ def eval_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cal_regression_oracle() -> str:
-    w_list = ", ".join(str(w) for w in _INF_W)
     slope = hu_ratio_signed_sql(
         "10000 * (m.n * m.spy - m.sp * m.sy)",
         "m.n * m.spp - m.sp * m.sp", 6)
@@ -3230,15 +3014,7 @@ def _cal_regression_oracle() -> str:
         "m.sy * (m.n * m.spp - m.sp * m.sp)"
         " - (m.n * m.spy - m.sp * m.sy) * m.sp",
         "m.n * (m.n * m.spp - m.sp * m.sp)", 6)
-    return f"""
-    WITH e AS (SELECT CASE WHEN label >= 5 THEN 1 ELSE 0 END AS y,
-                      round(list_inner_product(CAST(embedding AS DOUBLE[]),
-                            [{w_list}]), 6) AS logit
-               FROM embeddings),
-    p AS (SELECT y,
-                 CAST(round(10000 * (1 / (1 + exp(-logit)))) AS BIGINT)
-                   AS p_bp
-          FROM e),
+    return f"""{_SCORED_DUCK},
     m AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n,
                  CAST(SUM(p_bp) AS HUGEINT) AS sp,
                  CAST(SUM(CAST(p_bp AS HUGEINT) * p_bp) AS HUGEINT) AS spp,
@@ -3276,18 +3052,7 @@ def eval_calibration_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     past that, center p first (the stats_var_twopass escape — the
     moments shift exactly).  Scale shape: one scoring scan into one
     5-moment reduce."""
-    w_arr = "array(" + ", ".join(f"{w}D" for w in _INF_W) + ")"
-    dot = _DOT.format(a="CAST(embedding AS ARRAY<DOUBLE>)", b=w_arr)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        F.when(F.col("label") >= 5, 1).otherwise(0).alias("y"),
-        F.round(F.expr(dot), 6).alias("logit"),
-    )
-    p = e.select(
-        "y",
-        F.round(10000 * (1 / (1 + F.exp(-F.col("logit")))))
-        .cast("bigint")
-        .alias("p_bp"),
-    )
+    p = _scored_embeddings(spark, sf_dir)
     m = p.agg(
         F.count("*").cast("decimal(38,0)").alias("n"),
         F.sum("p_bp").cast("decimal(38,0)").alias("sp"),

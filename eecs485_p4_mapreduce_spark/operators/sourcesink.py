@@ -19,6 +19,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from eecs485_p4_mapreduce_spark.functions.modelstore import pin
 from eecs485_p4_mapreduce_spark.functions.numeric import dsum, dsum_sql
 from eecs485_p4_mapreduce_spark.plans.registry import query
 from eecs485_p4_mapreduce_spark.sources import load_table
@@ -443,7 +444,10 @@ def source_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFra
     finally:
         q.stop()
         q.awaitTermination()
+        shutil.rmtree(ckpt, ignore_errors=True)
+    # the frame holds the sink's rows once spark.table resolves the view
     src = spark.table(name)
+    spark.catalog.dropTempView(name)
     return src.groupBy("bucket").agg(
         F.count("*").alias("n"),
         (F.sum("num").cast("double") / F.lit(4294967296.0)).alias("val_sum"),
@@ -560,12 +564,16 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.schema("o_orderstatus string, o_totalprice double").json(
         out_dir
     )
-    return back.groupBy("o_orderstatus").agg(
+    # the files are read lazily: pin the (<= 3-row) aggregate, then
+    # remove them
+    result = pin(back.groupBy("o_orderstatus").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum(F.col("o_totalprice").cast("decimal(18,6)"))
         .cast("double")
         .alias("revenue"),
-    )
+    ))
+    shutil.rmtree(out_dir, ignore_errors=True)
+    return result
 
 
 @query(

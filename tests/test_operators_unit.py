@@ -2178,3 +2178,21 @@ def test_bpe_string_kernel_matches_window_kernel(spark):
     # spot-check the parity rule survived both kernels identically
     assert want[0] == ["a a", "a"]
     assert want[1] == ["a a", "a a"]
+
+
+def test_scored_embeddings_match_their_oracle_twin(spark, sf_dir, duck):
+    """The eval bank's shared scorer: the (y, p_bp) rows of
+    ``_scored_embeddings`` equal those of the oracle CTEs
+    ``_SCORED_DUCK`` as a multiset."""
+    from collections import Counter
+
+    import eecs485_p4_mapreduce_spark.plans  # noqa: F401  (operators in registry order)
+    from eecs485_p4_mapreduce_spark.operators.similarity import (
+        _SCORED_DUCK,
+        _scored_embeddings,
+    )
+
+    got = Counter(tuple(r) for r in _scored_embeddings(spark, sf_dir).collect())
+    exp = Counter(duck.sql(_SCORED_DUCK + " SELECT y, p_bp FROM p").fetchall())
+    assert got == exp
+    assert {y for y, _ in got} == {0, 1} and len({p for _, p in got}) > 10

@@ -751,6 +751,59 @@ def test_parquet_schema_read_only_inside_parquet_schema():
     assert not stray, stray
 
 
+def _operator_source(module: str) -> str:
+    """``operators/<module>.py`` with every whitespace run collapsed."""
+    import eecs485_p4_mapreduce_spark.operators as ops
+
+    path = os.path.join(os.path.dirname(ops.__file__), f"{module}.py")
+    with open(path, encoding="utf-8") as f:
+        return " ".join(f.read().split())
+
+
+def test_scorer_weights_rendered_once_per_dialect():
+    """similarity.py renders the linear scorer's weights as an array
+    literal only in ``_weights``, once for Spark and once for DuckDB;
+    every query and oracle takes them from there, so no oracle spells
+    the 64 weights out by hand."""
+    import ast
+
+    import eecs485_p4_mapreduce_spark.plans  # noqa: F401  (operators in registry order)
+    from eecs485_p4_mapreduce_spark.operators import similarity as sim
+
+    with open(sim.__file__, encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+
+    def over_weights(gen):
+        it = gen.generators[0].iter
+        it = it.value if isinstance(it, ast.Subscript) else it
+        return isinstance(it, ast.Name) and it.id in ("_INF_W", "ws")
+
+    owners = [
+        getattr(top, "name", None)
+        for top in tree.body
+        for c in ast.walk(top)
+        if isinstance(c, ast.Call)
+        and isinstance(c.func, ast.Attribute)
+        and c.func.attr == "join"
+        and c.args
+        and isinstance(c.args[0], ast.GeneratorExp)
+        and over_weights(c.args[0])
+    ]
+    assert owners == ["_weights", "_weights"], owners
+    assert _operator_source("similarity").count(repr(sim._INF_W[1])) == 1
+
+
+def test_knn_top_k_and_graph_edge_preamble_written_once():
+    """The kNN oracles rank candidates through one ``ROW_NUMBER()``
+    spelling (similarity.py ``_knn_rank_sql``), and graph.py's oracles
+    open with one candidate-edge CTE ``e`` (``_EDGES_DUCK``; k-core and
+    modularity keep their MATERIALIZED edge sets)."""
+    sim = _operator_source("similarity")
+    assert sim.count("ROW_NUMBER() OVER (PARTITION BY query_id") == 1
+    graph = _operator_source("graph")
+    assert graph.count("e AS (SELECT DISTINCT a.doc_id AS da") == 1
+
+
 def test_pin_stays_local_beside_a_reliable_checkpoint(tmp_path):
     """modelstore.pin is a localCheckpoint (one ``getPersistentRDDs``
     entry, no checkpoint files) for eager and lazy pins, whether or not

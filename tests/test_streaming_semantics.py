@@ -948,3 +948,29 @@ def test_stream_run_leaves_no_checkpoint_or_view(spark, sf_dir, tmp_path, monkey
         .collect()
     }
     assert got == exp and got
+
+
+def test_python_datasource_queries_leave_no_dir_or_view(spark, sf_dir, tmp_path, monkeypatch):
+    """The Python data-source stream removes its checkpoint and drops its
+    memory-sink view, and the Python data-source sink removes the files
+    it wrote and read back, before either returns; both frames keep
+    their rows."""
+    from eecs485_p4_mapreduce_spark.operators.sourcesink import (
+        sink_python_datasource,
+        source_python_datasource_stream,
+    )
+    from eecs485_p4_mapreduce_spark.sources import load_table
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.name.startswith("sg_pyds_")}
+
+    before = views()
+    stream = source_python_datasource_stream(spark, sf_dir)
+    sink = sink_python_datasource(spark, sf_dir)
+    assert not [p for p in os.listdir(tmp_path) if p.startswith("spark-graft-")]
+    assert views() == before
+    assert sum(r["n"] for r in stream.collect()) == 100_000
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 2000)
+    assert sum(r["n"] for r in sink.collect()) == orders.count() > 0

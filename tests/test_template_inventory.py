@@ -79,6 +79,9 @@ INVENTORY: dict[str, tuple[str, str]] = {
     "dedup::_TOK_SPARK": (SO, "duck twin spelled separately"),
     "dedup::_NG_SPARK": (SO, "duck twin spelled separately"),
     "dedup::_NG_DUCK": (OO, "spark twin spelled separately"),
+    # graph: the Spark candidate graph is dedup.lsh_candidate_edges
+    "graph::_EDGES_DUCK": (OO, "spark edges are lsh_candidate_edges DF code"),
+    "graph::_ADJ_DUCK": (OO, "spark adjacency is DF code"),
     # joins
     "joins::_SESSIONS_DUCK": (OO, "spark sessionization is windowed DF code"),
     # linalg
@@ -122,6 +125,18 @@ INVENTORY: dict[str, tuple[str, str]] = {
     # similarity
     "similarity::_DOT": (SO, "duck uses list_inner_product"),
     "similarity::_ORACLE_KNN": (OO, "shared by two oracles only"),
+    # the eval bank's oracle CTEs; _scored_embeddings and the other
+    # Spark twins are DF code (scorer pair pinned by
+    # test_scored_embeddings_match_their_oracle_twin)
+    "similarity::_LOGIT_DUCK": (OO, "spark logit is _logit()"),
+    "similarity::_SCORED_DUCK": (OO, "spark twin is _scored_embeddings"),
+    "similarity::_DECILE_DUCK": (OO, "spark twin is _decile_bin()"),
+    "similarity::_HISTOGRAM_DUCK": (OO, "spark twin is _score_histogram"),
+    "similarity::_BRIER_Q4_RATE_DUCK": (OO, "spark twin is _BRIER_Q4_RATE"),
+    "similarity::_BRIER_Q4_BASE_DUCK": (OO, "spark twin is _BRIER_Q4_BASE"),
+    "similarity::_BRIER_Q4_TERM_DUCK": (OO, "spark twin is _BRIER_Q4_TERM"),
+    "similarity::_CENTROID_MEANS_DUCK": (OO, "spark centroids are DF code"),
+    "similarity::_CENTROID_CONF_DUCK": (OO, "spark classifier is DF code"),
     "similarity::_DIMSTAT_SX": (F,
         "test_dimstat_variance_exact_below_bound_loud_above"),
     "similarity::_DIMSTAT_VAR_NUM": (F,
